@@ -23,13 +23,17 @@ re-implemented: on a real deployment the underlying store (HDFS/S3)
 owns replica placement and failure recovery, which is the idiomatic
 Spark mapping of the membership+ring layers (SURVEY.md §1).
 
-Reads are lazy DataFrames: base ∪ appends with a stable
-``_append_seq`` so downstream plans can reproduce byte-order
+Reads are lazy DataFrames: ONE multi-path parquet scan over the base
+dir and every append batch dir, read with the base's schema (taken
+from its parquet footer, so building the read runs no Spark job) and
+carrying a stable ``_append_seq`` (the batch dir name, or a compacted
+batch's per-row stamp) so downstream plans can reproduce byte-order
 semantics when they need them (e.g. exporting a line file).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
@@ -37,6 +41,18 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+
+from distributed_file_system_with_stream_processing_spark.sources.pyds import (
+    _MAX_SEQ_MARKER,
+    _batch_max_seq,
+    _bumped_stamp,
+    _canon_arrow_type,
+    _data_files,
+)
+
+# the Spark schema every Spark-written parquet file carries in its footer
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class TableStoreError(Exception):
@@ -266,10 +282,6 @@ class TableStore:
         """The shared publication-order stamp rule (sources/pyds.py
         _bumped_stamp — one implementation for all three write paths),
         applied to plain appends when they opt into serialization."""
-        from distributed_file_system_with_stream_processing_spark.sources.pyds import (
-            _bumped_stamp,
-        )
-
         return _bumped_stamp(self._appends_dir(name))
 
     def multiappend(self, name: str, dfs: list[DataFrame]) -> list[str]:
@@ -291,7 +303,8 @@ class TableStore:
 
     def get(self, name: str, with_seq: bool = False, cache: bool = False) -> DataFrame:
         """Reference `get`: merged view (base + appends in timestamp
-        order). Lazy — Catalyst prunes/pushes into every batch scan.
+        order) as one parquet scan (``_scan``). Lazy — Catalyst prunes
+        and pushes filters into that scan.
 
         ``cache=True`` maps the reference client's read cache
         (cache/cache.go: LRU of merged reads, invalidated by writes) to
@@ -304,40 +317,69 @@ class TableStore:
         key = f"{name}|seq={with_seq}"
         if cache and key in self._cached:
             return self._cached[key]
-        df = self.spark.read.parquet(self._base_dir(name)).withColumn(
-            "_append_seq", F.lit("")
-        )
-        for seq in self._append_batches(name):
-            part = self.spark.read.parquet(
-                os.path.join(self._appends_dir(name), seq)
-            )
-            # a compact_appends() batch carries per-row _append_seq
-            # (the original append stamps) — keep it, so ordering
-            # semantics survive compaction; plain batches stamp the
-            # batch name
-            if "_append_seq" not in part.columns:
-                part = part.withColumn("_append_seq", F.lit(seq))
-            df = df.unionByName(part)
+        df = self._scan(name, self._append_batches(name))
         df = df if with_seq else df.drop("_append_seq")
         if cache:
             df = df.persist()
             self._cached[key] = df
         return df
 
-    _MERGED_THRU_MARKER = "_merged_thru.txt"
-    _MAX_SEQ_MARKER = "_max_seq.txt"
-    _COMPACTING_PREFIX = "_compacting_"
+    def _scan(
+        self, name: str, batches: list[str], include_base: bool = True
+    ) -> DataFrame:
+        """ONE parquet scan over the base dir (``include_base``) and the
+        given append batch dirs, with ``_append_seq`` on every row: ''
+        for the base, the batch dir name for plain batches, and the
+        file's own per-row stamp for compact_appends() batches.
 
-    def _batch_max_seq(self, name: str, batch: str) -> str:
-        """Newest original append stamp inside a batch dir — the dir
-        name for plain batches; compact_appends() batches keep their
-        true maximum in a permanent marker (their dir is named by the
-        EARLIEST folded stamp)."""
-        m = os.path.join(self._appends_dir(name), batch, self._MAX_SEQ_MARKER)
-        if os.path.isfile(m):
-            with open(m) as fh:
-                return fh.read().strip()
-        return batch
+        The scan reads with the base's schema, taken from the Spark row
+        metadata in its footer, so no schema-inference job runs while
+        the DataFrame is built; ``_metadata.file_path`` names each
+        row's batch, and column pruning drops both when the caller
+        drops ``_append_seq``. Before the read, every batch's footer is
+        checked against the base (driver-local pyarrow): a batch whose
+        columns or types differ raises TableStoreError naming it,
+        instead of being read with nulls or coerced values."""
+        import pyarrow.parquet as pq
+
+        ad = self._appends_dir(name)
+        base_files = _data_files(self._base_dir(name))
+        if not base_files:
+            raise TableStoreError(f"no base files ({name})")
+        base_arrow = pq.read_schema(base_files[0])
+        schema = StructType.fromJson(
+            json.loads(base_arrow.metadata[_SPARK_ROW_METADATA])
+        )
+        want = {f.name: _canon_arrow_type(f.type) for f in base_arrow}
+        for b in batches:
+            files = _data_files(os.path.join(ad, b))
+            if not files:
+                continue
+            got = {
+                f.name: _canon_arrow_type(f.type)
+                for f in pq.read_schema(files[0])
+                if f.name != "_append_seq"
+            }
+            if got != want:
+                raise TableStoreError(
+                    f"append batch {b!r} of {name!r} does not match the base: "
+                    f"columns {got}, base {want}"
+                )
+        dirs = [self._base_dir(name)] if include_base else []
+        dirs += [os.path.join(ad, b) for b in batches]
+        df = self.spark.read.schema(
+            StructType(schema.fields + [StructField("_append_seq", StringType())])
+        ).parquet(*dirs)
+        batch_dir = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2)
+        return df.withColumn(
+            "_append_seq",
+            F.coalesce(
+                F.col("_append_seq"), F.when(batch_dir != "base", batch_dir), F.lit("")
+            ),
+        )
+
+    _MERGED_THRU_MARKER = "_merged_thru.txt"
+    _COMPACTING_PREFIX = "_compacting_"
 
     def compact_appends(self, name: str) -> int:
         """Fold every pending append batch into ONE batch without
@@ -371,13 +413,8 @@ class TableStore:
             return 0
         self._repair_stream_ledger(name, batches)
         ad = self._appends_dir(name)
-        max_seq = max(self._batch_max_seq(name, b) for b in batches)
-        combined = None
-        for b in batches:
-            part = self.spark.read.parquet(os.path.join(ad, b))
-            if "_append_seq" not in part.columns:
-                part = part.withColumn("_append_seq", F.lit(b))
-            combined = part if combined is None else combined.unionByName(part)
+        max_seq = max(_batch_max_seq(ad, b) for b in batches)
+        combined = self._scan(name, batches, include_base=False)
         target = batches[0]
         tmp = os.path.join(ad, self._COMPACTING_PREFIX + target)
         if os.path.isdir(tmp):
@@ -385,7 +422,7 @@ class TableStore:
         combined.write.parquet(tmp)
         with open(os.path.join(tmp, self._FOLDED_MARKER), "w") as fh:
             fh.write("\n".join(batches) + "\n")
-        with open(os.path.join(tmp, self._MAX_SEQ_MARKER), "w") as fh:
+        with open(os.path.join(tmp, _MAX_SEQ_MARKER), "w") as fh:
             fh.write(max_seq + "\n")
         shutil.rmtree(os.path.join(ad, target))
         os.rename(tmp, os.path.join(ad, target))
@@ -430,22 +467,12 @@ class TableStore:
                 f"snapshot {seq!r} predates last merge point {floor!r} "
                 f"({name}); pre-merge history is folded into the base"
             )
-        df = self.spark.read.parquet(self._base_dir(name))
-        cols = df.columns
-        for batch in self._append_batches(name):
-            if batch <= seq:
-                part = self.spark.read.parquet(
-                    os.path.join(self._appends_dir(name), batch)
-                )
-                # a compact_appends() batch is named by its EARLIEST
-                # folded stamp and carries per-row _append_seq — the
-                # row-level filter keeps snapshot precision exact
-                if "_append_seq" in part.columns:
-                    part = part.filter(F.col("_append_seq") <= seq).drop(
-                        "_append_seq"
-                    )
-                df = df.unionByName(part.select(cols))
-        return df
+        # a compact_appends() batch is named by its EARLIEST folded
+        # stamp and carries per-row stamps — the row filter keeps
+        # snapshot precision exact
+        batches = [b for b in self._append_batches(name) if b <= seq]
+        df = self._scan(name, batches)
+        return df.filter(F.col("_append_seq") <= seq).drop("_append_seq")
 
     def diff(self, name: str, seq_from: str, seq_to: str) -> DataFrame:
         """Change-data capture between two snapshot points: exactly the
@@ -475,42 +502,18 @@ class TableStore:
                 f"diff since base unavailable: appends up to {floor!r} are "
                 f"folded into the base ({name})"
             )
-        cols = None
-        out = None
-        for batch in self._append_batches(name):
-            part = None
-            if seq_from < batch <= seq_to:
-                part = self.spark.read.parquet(
-                    os.path.join(self._appends_dir(name), batch)
-                )
-            elif batch <= seq_from:
-                # a compacted batch is named by its EARLIEST folded
-                # stamp; rows later than seq_from may live inside it —
-                # but only if its max-stamp marker says so: the marker
-                # check is one local file read and skips opening the
-                # parquet footer of every fully-old batch
-                if self._batch_max_seq(name, batch) <= seq_from:
-                    continue
-                maybe = self.spark.read.parquet(
-                    os.path.join(self._appends_dir(name), batch)
-                )
-                if "_append_seq" in maybe.columns:
-                    part = maybe
-            if part is None:
-                continue
-            if "_append_seq" in part.columns:
-                part = part.filter(
-                    (F.col("_append_seq") > seq_from)
-                    & (F.col("_append_seq") <= seq_to)
-                ).drop("_append_seq")
-            if cols is None:
-                cols = part.columns
-            part = part.select(cols)
-            out = part if out is None else out.unionByName(part)
-        if out is None:
-            base = self.spark.read.parquet(self._base_dir(name))
-            return base.limit(0)
-        return out
+        # a compacted batch is named by its EARLIEST folded stamp, so
+        # rows later than seq_from may live inside an older-named one —
+        # its max-stamp marker (one local file read) says whether
+        ad = self._appends_dir(name)
+        batches = [
+            b
+            for b in self._append_batches(name)
+            if b <= seq_to and _batch_max_seq(ad, b) > seq_from
+        ]
+        seq = F.col("_append_seq")
+        df = self._scan(name, batches, include_base=False)
+        return df.filter((seq > seq_from) & (seq <= seq_to)).drop("_append_seq")
 
     def _invalidate(self, name: str) -> None:
         """Drop cached reads of ``name`` (write-invalidate, as the
@@ -561,8 +564,9 @@ class TableStore:
         # gone from disk; snapshots below this floor must refuse).
         # _batch_max_seq, not batches[-1]: a compact_appends() batch is
         # named by its EARLIEST folded stamp but contains newer rows.
+        ad = self._appends_dir(name)
         with open(os.path.join(tmp, self._MERGED_THRU_MARKER), "w") as fh:
-            fh.write(max(self._batch_max_seq(name, b) for b in batches) + "\n")
+            fh.write(max(_batch_max_seq(ad, b) for b in batches) + "\n")
         os.rename(base, old)
         os.rename(tmp, base)
         # cleanup (any crash from here on is finished by _recover)

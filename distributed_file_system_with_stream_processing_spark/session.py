@@ -3,7 +3,8 @@
 Defaults chosen for correctness-portability (UTC session time zone so
 timestamp outputs match the DuckDB oracle) and for 100 TB readiness
 (AQE + skew-join handling, broadcast threshold sized for dimension
-tables, Arrow transfers for the few pandas-UDF operators).
+tables, Arrow transfers for the few pandas-UDF operators), and for a
+steady heap (small Tungsten pages, so a finished task pins little).
 """
 
 from __future__ import annotations
@@ -35,6 +36,15 @@ DEFAULT_CONF: dict[str, str] = {
     # time-slice query into a full scan of its files. MICROS is the
     # modern annotated int64 encoding with full stats support.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # Tungsten page size. Spark derives it from the heap (64 MB with the
+    # 8 GB driver below), and every sort or hash-aggregate task that sees
+    # one row takes a whole page. A Python runner (pandas UDFs,
+    # applyInPandasWithState, the tablestore DataSource) keeps its task's
+    # plan, and so the task's last page, reachable until its
+    # worker-monitor thread next wakes, up to 2 s after the task ends:
+    # with 64 MB pages one 4-partition stream trigger pinned 256 MB.
+    # A large task just takes more 1 MB pages.
+    "spark.buffer.pageSize": "1m",
 }
 
 

@@ -44,7 +44,12 @@ def write_bucketed(
     ``n_buckets`` files by ``bucket_col``, bucket metadata in the
     catalog. Joins/aggregations on ``bucket_col`` between tables with
     identical bucketing need no Exchange. Size ``n_buckets`` so one
-    bucket ≈ one task's worth of data at the target scale.
+    bucket ≈ one task's worth of data at the target scale — it is
+    also the write's parallelism cap: the repartition below leaves
+    exactly ``n_buckets`` write tasks (and reduce tasks for that
+    shuffle), so a large table written with few buckets serializes on
+    them. Keep ``n_buckets`` at or above the session's parallelism
+    unless the table is small.
 
     r10: repartition to the bucket layout BEFORE the write. A bucketed
     writer splits every input task's rows by bucket id, so N upstream

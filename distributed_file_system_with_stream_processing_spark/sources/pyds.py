@@ -3,24 +3,24 @@
 ``spark.read.format("tablestore").option("root", ...).option("table",
 ...)`` reads a TableStore table (reference HyDFS file: base + deferred
 append batches, dfs.py) through the PLUGGABLE source API
-(pyspark.sql.datasource) instead of the hand-rolled union in
-``TableStore.get``:
+(pyspark.sql.datasource) instead of ``TableStore.get``'s native scan:
 
 - one ``InputPartition`` per data FILE (base and append batches alike),
   so a 100 TB log fans out across executors exactly like the native
   parquet reader — the planner sees N independent splits;
 - each partition reads its file with pyarrow and yields Arrow
   RecordBatches (the zero-copy fast path of the Python DataSource API)
-  with the batch's ``_append_seq`` stamped on, reproducing the merged
-  view's ordering contract (``get(with_seq=True)``).
+  with the batch's ``_append_seq`` stamped on (compacted batches keep
+  their per-row stamps), reproducing the merged view's ordering
+  contract (``get(with_seq=True)``).
 
 Role: API surface + a second, independently-implemented reader for the
 same on-disk format (the tests cross-check it row-for-row against
-``TableStore.get``). The native DataFrame union path remains the
-performance path at scale — it gets JVM parquet vectorization and
-filter pushdown, which Python DataSources do not (Spark evaluates
-filters above the source); docstring-level honesty about that division
-is part of the design.
+``TableStore.get``). ``TableStore.get`` remains the performance path
+at scale — one multi-path JVM parquet scan of the base and every batch
+dir, with parquet vectorization and filter pushdown, which Python
+DataSources do not get (Spark evaluates filters above the source);
+docstring-level honesty about that division is part of the design.
 
 The reference has no pluggable source layer (its reads are RPCs into
 localstorage.go); this mirrors HyDFS read semantics onto Spark's
@@ -142,9 +142,12 @@ class _TableStoreReader(DataSourceReader):
         import pyarrow.parquet as pq
 
         tbl = pq.read_table(partition.path)
-        tbl = tbl.append_column(
-            "_append_seq", pa.array([partition.seq] * len(tbl), pa.string())
-        )
+        if "_append_seq" not in tbl.column_names:
+            # plain batch: stamp its dir name; a compact_appends() batch
+            # keeps the per-row original stamps it already carries
+            tbl = tbl.append_column(
+                "_append_seq", pa.array([partition.seq] * len(tbl), pa.string())
+            )
         # column order must match the declared schema exactly
         tbl = tbl.select(self.columns)
         yield from tbl.to_batches()
@@ -158,11 +161,16 @@ class _StreamSplit(InputPartition):
         self.hi = hi  # inclusive upper bound
 
 
+_MAX_SEQ_MARKER = "_max_seq.txt"
+
+
 def _batch_max_seq(appends_dir: str, seq: str) -> str:
-    """Newest original stamp in a batch dir — the dir name for plain
-    batches; compact_appends() batches carry it in a marker file
-    (mirrors dfs.TableStore._batch_max_seq)."""
-    m = os.path.join(appends_dir, seq, "_max_seq.txt")
+    """Newest original append stamp inside a batch dir — the dir name
+    for plain batches; compact_appends() batches keep their true
+    maximum in a permanent marker (their dir is named by the EARLIEST
+    folded stamp). The one rule for every reader and writer of the
+    log (dfs.TableStore included)."""
+    m = os.path.join(appends_dir, seq, _MAX_SEQ_MARKER)
     if os.path.isfile(m):
         with open(m) as fh:
             return fh.read().strip()
@@ -483,15 +491,7 @@ class _TableStoreStreamWriter(_StagedPartsMixin, DataSourceStreamArrowWriter):
         (``serializeAppends`` here, ``serialize_appends=True`` on the
         TableStore — locks.append_lock), which makes stamp choice +
         publish rename one critical section."""
-        import time
-
-        d = self._appends_dir()
-        stamp = time.time_ns()
-        seqs = [s for s in os.listdir(d) if not s.startswith(("_", "."))]
-        if seqs:
-            cur = max(_batch_max_seq(d, s) for s in seqs)
-            stamp = max(stamp, int(cur[:20]) + 1)
-        return f"{stamp:020d}"
+        return _bumped_stamp(self._appends_dir())
 
     def _find_published(self, batch_id: int) -> bool:
         # zero-pad-aware: parse the -sb suffix back to an int instead

@@ -317,12 +317,13 @@ def test_python_datasource_matches_tablestore_get(spark, tmp_path):
     store.append("t", spark.createDataFrame([(4, "d"), (5, "e")], "id long, v string"))
 
     spark.dataSource.register(TableStoreDataSource)
-    via_ds = (
+    load = lambda: (
         spark.read.format("tablestore")
         .option("root", str(tmp_path / "store"))
         .option("table", "t")
         .load()
     )
+    via_ds = load()
     want = {
         (r["id"], r["v"], r["_append_seq"])
         for r in store.get("t", with_seq=True).collect()
@@ -331,6 +332,68 @@ def test_python_datasource_matches_tablestore_get(spark, tmp_path):
     assert got == want and len(got) == 5
     # parallelism contract: one split per data file (>= 3 batches here)
     assert via_ds.rdd.getNumPartitions() >= 3
+
+    # after compact_appends the combined batch already carries per-row
+    # _append_seq; the source keeps those stamps instead of adding a
+    # second column
+    store.compact_appends("t")
+    want = {
+        (r["id"], r["v"], r["_append_seq"])
+        for r in store.get("t", with_seq=True).collect()
+    }
+    assert want == got
+    got = {(r["id"], r["v"], r["_append_seq"]) for r in load().collect()}
+    assert got == want
+
+
+def test_get_is_one_scan_with_no_eager_jobs(store, spark):
+    """get() over base + N append batches builds ONE parquet scan: its
+    schema comes from the base footer, so no Spark job runs before the
+    action, and the plan has a single FileScan and no Union."""
+    store.create("t", _df(spark, [(1, "base")]))
+    for i in range(3):
+        store.append("t", _df(spark, [(i + 2, f"a{i}")]))
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    group = "test-get-plan-shape"
+    sc.setJobGroup(group, "TableStore.get plan shape")
+    try:
+        df = store.get("t", with_seq=True)
+        bus.waitUntilEmpty()
+        eager = list(sc.statusTracker().getJobIdsForGroup(group))
+        qe = df._jdf.queryExecution()
+        optimized = qe.optimizedPlan().toString()
+        physical = qe.executedPlan().toString()
+        rows = sorted((r["id"], r["_append_seq"] != "") for r in df.collect())
+        bus.waitUntilEmpty()
+        after = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert eager == []
+    assert after  # the tracker does see the group's jobs once the action runs
+    assert physical.count("FileScan parquet") == 1, physical
+    assert "Union" not in optimized, optimized
+    assert rows == [(1, False), (2, True), (3, True), (4, True)]
+
+
+def test_get_rejects_batch_whose_columns_differ(store, spark):
+    """An append batch whose column names or types differ from the
+    base's fails the read with a TableStoreError naming the batch."""
+    store.create("t", _df(spark, [(1, "base")]))
+    store.append("t", _df(spark, [(2, "ok")]))
+    renamed = store.append(
+        "t", spark.createDataFrame([(3, "x")], "id long, other string")
+    )
+    with pytest.raises(TableStoreError, match=renamed):
+        store.get("t")
+
+    store.create("u", _df(spark, [(1, "base")]))
+    retyped = store.append(
+        "u", spark.createDataFrame([("3", "x")], "id string, val string")
+    )
+    with pytest.raises(TableStoreError, match=retyped):
+        store.get("u")
 
 
 def test_diff_cdc_windows(store, spark):

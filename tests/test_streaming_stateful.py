@@ -2709,3 +2709,12 @@ def test_priority_sample_state_survives_restart(spark, dirs):
     assert list(final["sample_ids"]) == list(batch["sample_ids"])
     assert list(final["sample_priorities"]) == list(batch["sample_priorities"])
     assert 4 in list(final["sample_ids"])  # the post-restart heavy doc landed
+
+
+def test_session_uses_small_tungsten_pages(spark):
+    """get_spark's page size reaches the memory manager: a Python
+    runner keeps a finished task's last page reachable for up to 2 s,
+    so each stateful-stream task pins 1 MB, not the 64 MB Spark would
+    derive from an 8 GB heap."""
+    mm = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get().memoryManager()
+    assert mm.pageSizeBytes() == 1 << 20
