@@ -30,7 +30,6 @@ from distributed_file_system_with_stream_processing_spark.streaming.ops import (
 from distributed_file_system_with_stream_processing_spark.streaming.rainstorm import (
     RainStormJob,
     join_streams,
-    stream_into_store,
 )
 
 __all__ = [
@@ -45,5 +44,4 @@ __all__ = [
     "join_streams",
     "list_members",
     "python_transform",
-    "stream_into_store",
 ]

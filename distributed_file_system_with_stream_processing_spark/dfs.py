@@ -36,7 +36,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,10 +44,14 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from distributed_file_system_with_stream_processing_spark.sources.pyds import (
     _MAX_SEQ_MARKER,
+    _advance_ledger,
     _batch_max_seq,
-    _bumped_stamp,
+    _batch_names,
     _canon_arrow_type,
     _data_files,
+    _gc_pending,
+    _publish,
+    _stream_batch_id,
 )
 
 # the Spark schema every Spark-written parquet file carries in its footer
@@ -63,18 +66,12 @@ class TableStore:
     def __init__(
         self, spark: SparkSession, root: str, serialize_appends: bool = False
     ):
-        """``serialize_appends=True`` opts this store's plain appends
-        into the per-table publication lock (locks.append_lock): each
-        append stages to a hidden dir, then takes the lock, bumps its
-        stamp past the newest published one and renames atomically —
-        closing the documented stamp-vs-rename CDC race when plain
-        appends interleave with a running stream sink (which must opt
-        in too, via ``.option("serializeAppends", "true")``). Off by
-        default: the lock-free path keeps the reference's single-writer
-        deployment semantics and existing behavior byte-for-byte."""
+        """A store of tables under ``root``. Every append publishes
+        under the per-table append lock (see :meth:`append`); the
+        ``serialize_appends`` keyword is accepted for existing callers
+        and selects nothing."""
         self.spark = spark
         self.root = root
-        self.serialize_appends = serialize_appends
         self._cached: dict[str, DataFrame] = {}
         os.makedirs(root, exist_ok=True)
 
@@ -98,12 +95,7 @@ class TableStore:
         return os.path.join(self._table_dir(name), "base.merging")
 
     def _append_batches(self, name: str) -> list[str]:
-        d = self._appends_dir(name)
-        if not os.path.isdir(d):
-            return []
-        return sorted(p for p in os.listdir(d) if not p.startswith("_"))
-
-    _STREAM_LEDGER = "_stream_published.txt"
+        return _batch_names(self._appends_dir(name))
 
     def _repair_stream_ledger(self, name: str, batches: list[str]) -> None:
         """Advance the streaming sink's batch-id ledger (sources/pyds.py
@@ -115,27 +107,9 @@ class TableStore:
         dir nor a ledger entry and re-publish duplicates. Stream batch
         dirs end in ``-sb<batchId>`` and commit in batch-id order, so
         the max folded id is a valid published-thru floor."""
-        import re
-
-        ids = [
-            int(m.group(1))
-            for b in batches
-            for m in [re.search(r"-sb(\d{8,})$", b)]
-            if m
-        ]
-        if not ids:
-            return
-        hi = max(ids)
-        p = os.path.join(self._appends_dir(name), self._STREAM_LEDGER)
-        cur = -1
-        if os.path.isfile(p):
-            with open(p) as fh:
-                cur = int(fh.read().strip())
-        if hi > cur:
-            tmp = p + ".tmp"
-            with open(tmp, "w") as fh:
-                fh.write(str(hi))
-            os.replace(tmp, p)
+        ids = [i for i in map(_stream_batch_id, batches) if i is not None]
+        if ids:
+            _advance_ledger(self._appends_dir(name), max(ids))
 
     # -- crash recovery ---------------------------------------------------
 
@@ -227,62 +201,24 @@ class TableStore:
         O(batch) write — never rewrites the base (the reference's core
         design point: appends are cheap, reads pay for the merge).
 
-        With ``serialize_appends`` the batch stages under a hidden
-        ``_pending-*`` dir (invisible to readers), then stamp-bump +
-        publish-rename happen atomically under the per-table lock —
-        publication order == stamp order even against a concurrent
-        opted-in stream sink. The Spark write job itself runs OUTSIDE
-        the lock, so appends serialize only on the (microsecond-scale)
-        stamp+rename, not on the parquet write."""
+        Atomic, like the reference's buffered AppendInfo record: the
+        batch is written under a hidden ``_pending-*`` dir (invisible
+        to readers), then ``sources/pyds._publish`` bumps its stamp
+        past the newest published one and renames it into place under
+        the per-table append lock — publication order == stamp order
+        against every other writer of the table, stream sink included.
+        The Spark write job runs OUTSIDE the lock, so appends
+        serialize only on the (microsecond-scale) stamp+rename, not
+        on the parquet write."""
         if not self.exists(name):
             raise TableStoreError(f"table doesn't exist ({name})")
         ad = self._appends_dir(name)
-        if self.serialize_appends:
-            from distributed_file_system_with_stream_processing_spark.locks import (
-                append_lock,
-            )
-
-            self._gc_pending(name)
-            tmp = os.path.join(ad, f"_pending-{uuid.uuid4().hex[:12]}")
-            df.write.mode("errorifexists").parquet(tmp)
-            with append_lock(ad):
-                seq = f"{self._bumped_stamp(name)}-{uuid.uuid4().hex[:8]}"
-                os.rename(tmp, os.path.join(ad, seq))
-        else:
-            seq = f"{time.time_ns():020d}-{uuid.uuid4().hex[:8]}"
-            df.write.mode("errorifexists").parquet(os.path.join(ad, seq))
+        _gc_pending(ad)
+        tmp = os.path.join(ad, f"_pending-{uuid.uuid4().hex[:12]}")
+        df.write.mode("errorifexists").parquet(tmp)
+        seq = _publish(ad, tmp, uuid.uuid4().hex[:8])
         self._invalidate(name)
         return seq
-
-    _PENDING_AGE_S = 3600.0
-
-    def _gc_pending(self, name: str) -> None:
-        """Sweep orphaned ``_pending-*`` staging dirs left by crashed
-        serialized appends (a crash between the parquet write and the
-        publish rename strands a full batch copy that no reader ever
-        sees and no fold reclaims). Age-gated like the DataSource
-        writers' staging GC: a CONCURRENT append's live _pending dir is
-        younger than the window and survives."""
-        import shutil
-
-        ad = self._appends_dir(name)
-        if not os.path.isdir(ad):
-            return
-        cutoff = time.time() - self._PENDING_AGE_S
-        for s in os.listdir(ad):
-            if s.startswith("_pending-"):
-                p = os.path.join(ad, s)
-                try:
-                    if os.path.getmtime(p) <= cutoff:
-                        shutil.rmtree(p, ignore_errors=True)
-                except OSError:
-                    pass
-
-    def _bumped_stamp(self, name: str) -> str:
-        """The shared publication-order stamp rule (sources/pyds.py
-        _bumped_stamp — one implementation for all three write paths),
-        applied to plain appends when they opt into serialization."""
-        return _bumped_stamp(self._appends_dir(name))
 
     def multiappend(self, name: str, dfs: list[DataFrame]) -> list[str]:
         """Reference `multiappend file VM1,VM2,... local1,local2,...`
@@ -290,12 +226,9 @@ class TableStore:
         Here: concurrent append batches; each gets its own sequence
         stamp, so merge order is deterministic regardless of which
         thread wins the race — the reference's timestamp-dedup
-        guarantee. With ``serialize_appends`` every branch routes
-        through :meth:`append`'s stage-outside/stamp-under-lock
-        protocol, so concurrent multiappend branches also publish in
-        strict stamp order (pinned by
-        tests/test_dfs.py::test_multiappend_serializes_under_lock and,
-        cross-process, test_append_lock_two_real_processes)."""
+        guarantee. Every branch routes through :meth:`append`'s
+        stage-outside/stamp-under-lock protocol, so concurrent
+        branches publish in strict stamp order."""
         import concurrent.futures
 
         with concurrent.futures.ThreadPoolExecutor(max_workers=len(dfs) or 1) as ex:

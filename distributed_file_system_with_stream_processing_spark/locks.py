@@ -1,20 +1,16 @@
-"""Opt-in per-table append lock: strict publication-order stamps.
+"""Per-table append lock: strict publication-order stamps.
 
 The TableStore append log names batches by 20-digit time_ns stamps; a
-CDC reader's offset is the max published stamp. Lock-free, there is a
-documented race (sources/pyds.py): writer A lists existing stamps and
-picks S, writer B starts later (stamp P > S) but RENAMES first — a CDC
-poll in that window records high-water P, then A publishes S < P and
-the reader never revisits it. The single-writer deployment the
-reference also assumes makes this moot; deployments that interleave
-plain ``TableStore.append`` with a running sink and need hard ordering
-opt into this lock (``TableStore(..., serialize_appends=True)`` and
-``.option("serializeAppends", "true")`` on the tablestore writers).
-
-Under the lock, every writer (a) takes the stamp by bumping past the
-newest existing one and (b) publishes the rename BEFORE releasing — so
-stamp order == publication order and a reader can never observe a
-high-water mark ahead of an unpublished earlier stamp.
+CDC reader's offset is the max published stamp. Every writer of the
+log — ``TableStore.append``, the ``tablestore`` batch writer and the
+stream sink — writes its batch aside under a hidden ``_``-prefixed dir
+first, then publishes it through ``sources/pyds._publish``, which holds
+this lock while it (a) takes the stamp by bumping past the newest
+existing one and (b) renames the staged dir into ``appends/``. So
+stamp order == publication order, a reader never sees a half-written
+batch, and a reader can never observe a high-water mark ahead of an
+unpublished earlier stamp. The Spark write itself never runs under the
+lock; writers serialize only on the stamp + rename.
 
 ``fcntl.flock`` on ``appends/_append.lock`` serializes across
 processes on one host or a shared POSIX filesystem — the deployments
@@ -32,12 +28,8 @@ LOCK_FILE = "_append.lock"
 
 
 @contextlib.contextmanager
-def append_lock(appends_dir: str, enabled: bool = True):
-    """Exclusive per-table append lock; a no-op when ``enabled`` is
-    False so lock-free call sites share one code path."""
-    if not enabled:
-        yield
-        return
+def append_lock(appends_dir: str):
+    """Exclusive per-table append lock."""
     import fcntl
 
     os.makedirs(appends_dir, exist_ok=True)

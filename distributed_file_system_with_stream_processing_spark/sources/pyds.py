@@ -30,6 +30,7 @@ official extension point.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -40,6 +41,8 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
+
+from distributed_file_system_with_stream_processing_spark.locks import append_lock
 
 
 class _FileSplit(InputPartition):
@@ -56,6 +59,17 @@ def _data_files(d: str) -> list[str]:
         for f in os.listdir(d)
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     )
+
+
+def _batch_names(appends_dir: str) -> list[str]:
+    """The published batch dirs of an append log, in stamp order — THE
+    listing rule for every reader and writer of the log (dfs.TableStore
+    included): hidden names are skipped, i.e. ``_``-prefixed staging
+    dirs, markers and the ledger, and ``.``-prefixed OS litter such as
+    ``.DS_Store``."""
+    if not os.path.isdir(appends_dir):
+        return []
+    return sorted(s for s in os.listdir(appends_dir) if not s.startswith(("_", ".")))
 
 
 class TableStoreDataSource(DataSource):
@@ -101,22 +115,10 @@ class TableStoreDataSource(DataSource):
                 "be append/update (complete implies truncate, which the "
                 "log cannot express)"
             )
-        return _TableStoreStreamWriter(
-            self._table_dir(), schema, serialize=self._serialize_opt()
-        )
+        return _TableStoreStreamWriter(self._table_dir(), schema)
 
     def writer(self, schema, overwrite: bool):
-        return _TableStoreBatchWriter(
-            self._table_dir(), schema, overwrite, serialize=self._serialize_opt()
-        )
-
-    def _serialize_opt(self) -> bool:
-        """``.option("serializeAppends", "true")``: publish under the
-        per-table append lock (locks.append_lock) so stamp order ==
-        publication order against concurrent opted-in plain appends —
-        closes the documented CDC stamp-vs-rename race for deployments
-        without a single-writer contract."""
-        return str(self.options.get("serializeappends", "false")).lower() == "true"
+        return _TableStoreBatchWriter(self._table_dir(), schema, overwrite)
 
 
 class _TableStoreReader(DataSourceReader):
@@ -129,12 +131,9 @@ class _TableStoreReader(DataSourceReader):
             _FileSplit(p, "") for p in _data_files(os.path.join(self.table_dir, "base"))
         ]
         appends = os.path.join(self.table_dir, "appends")
-        if os.path.isdir(appends):
-            for seq in sorted(os.listdir(appends)):
-                if seq.startswith(("_", ".")):
-                    continue  # markers / the sink's staging area
-                for p in _data_files(os.path.join(appends, seq)):
-                    splits.append(_FileSplit(p, seq))
+        for seq in _batch_names(appends):
+            for p in _data_files(os.path.join(appends, seq)):
+                splits.append(_FileSplit(p, seq))
         return splits
 
     def read(self, partition: _FileSplit):
@@ -210,22 +209,15 @@ class _TableStoreStreamReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:
         d = self._appends_dir()
-        if not os.path.isdir(d):
-            return {"seq": ""}
-        seqs = [s for s in os.listdir(d) if not s.startswith(("_", "."))]
-        if not seqs:
-            return {"seq": ""}
-        return {"seq": max(_batch_max_seq(d, s) for s in seqs)}
+        return {"seq": max((_batch_max_seq(d, s) for s in _batch_names(d)), default="")}
 
     def partitions(self, start: dict, end: dict):
         lo, hi = start["seq"], end["seq"]
         d = self._appends_dir()
         splits: list[_StreamSplit] = []
-        if not os.path.isdir(d) or hi <= lo:
+        if hi <= lo:
             return splits
-        for seq in sorted(os.listdir(d)):
-            if seq.startswith(("_", ".")):
-                continue
+        for seq in _batch_names(d):
             if _batch_max_seq(d, seq) <= lo or seq > hi:
                 continue
             for p in _data_files(os.path.join(d, seq)):
@@ -262,21 +254,98 @@ class _TableStoreStreamReader(DataSourceStreamReader):
 
 
 def _bumped_stamp(appends_dir: str) -> str:
-    """THE publication-order stamp rule, shared by every writer that
-    needs monotonicity (the stream sink always; the batch writer and
-    TableStore.append under serializeAppends): wall time_ns bumped
-    past the newest existing stamp — dir names and compacted batches'
-    _max_seq markers — so publication order == stamp order whenever
-    stamping happens under the append lock."""
+    """The publication-order stamp rule (called only by ``_publish``,
+    under the append lock): wall time_ns bumped past the newest
+    existing stamp — dir names and compacted batches' _max_seq
+    markers — so publication order == stamp order."""
     import time
 
-    stamp = time.time_ns()
-    if os.path.isdir(appends_dir):
-        seqs = [s for s in os.listdir(appends_dir) if not s.startswith(("_", "."))]
-        if seqs:
-            cur = max(_batch_max_seq(appends_dir, s) for s in seqs)
-            stamp = max(stamp, int(cur[:20]) + 1)
-    return f"{stamp:020d}"
+    seqs = _batch_names(appends_dir)
+    cur = max(_batch_max_seq(appends_dir, s) for s in seqs) if seqs else "0"
+    return f"{max(time.time_ns(), int(cur[:20]) + 1):020d}"
+
+
+def _publish(appends_dir: str, staged_dir: str, suffix: str) -> str:
+    """THE publication step of every append — ``TableStore.append``,
+    the ``tablestore`` batch writer and the stream sink. The batch is
+    already fully written under a hidden ``_``-prefixed dir (the Spark
+    write never runs under the lock); under the per-table append lock
+    this picks the stamp and renames the staged dir into ``appends/``
+    as ``<stamp>-<suffix>``. A reader therefore sees a batch whole or
+    not at all (the reference's buffered AppendInfo record,
+    localstorage.go:79-99), and no CDC high-water mark can name a
+    stamp whose batch, or any earlier one, is still unpublished.
+    Returns the batch name."""
+    with append_lock(appends_dir):
+        seq = f"{_bumped_stamp(appends_dir)}-{suffix}"
+        try:
+            os.rename(staged_dir, os.path.join(appends_dir, seq))
+        except OSError:
+            shutil.rmtree(staged_dir, ignore_errors=True)
+            raise
+    return seq
+
+
+# staging older than this is a crashed writer's orphan, never a live one's
+_ORPHAN_AGE_S = 3600.0
+
+
+def _gc_pending(appends_dir: str) -> None:
+    """Sweep orphaned ``_pending-*`` staging dirs of crashed appends
+    (TableStore.append and the batch writer): a crash between the
+    parquet write and the publish rename strands a full batch copy
+    that no reader sees and no fold reclaims. Age-gated — concurrent
+    appends are legal, and a live append's staging is younger than
+    the window."""
+    import time
+
+    if not os.path.isdir(appends_dir):
+        return
+    cutoff = time.time() - _ORPHAN_AGE_S
+    for s in os.listdir(appends_dir):
+        if s.startswith("_pending-"):
+            p = os.path.join(appends_dir, s)
+            try:
+                if os.path.getmtime(p) <= cutoff:
+                    shutil.rmtree(p, ignore_errors=True)
+            except OSError:
+                pass
+
+
+# the stream sink's batch-id ledger (see _TableStoreStreamWriter)
+_STREAM_LEDGER = "_stream_published.txt"
+
+
+def _stream_batch_id(seq: str) -> int | None:
+    """The batchId a stream-sink batch dir carries (``<stamp>-sb<id>``;
+    ids are zero-padded to at least 8 digits, never truncated), or
+    None for any other batch."""
+    import re
+
+    m = re.search(r"-sb(\d{8,})$", seq)
+    return int(m.group(1)) if m else None
+
+
+def _ledger_thru(appends_dir: str) -> int:
+    """The highest batchId the ledger records as published (-1: none)."""
+    p = os.path.join(appends_dir, _STREAM_LEDGER)
+    if not os.path.isfile(p):
+        return -1
+    with open(p) as fh:
+        return int(fh.read().strip())
+
+
+def _advance_ledger(appends_dir: str, batch_id: int) -> None:
+    """Atomically raise the ledger to ``batch_id`` (temp + rename);
+    never lowers it."""
+    import uuid
+
+    if batch_id <= _ledger_thru(appends_dir):
+        return
+    tmp = os.path.join(appends_dir, f"_ledger-{uuid.uuid4().hex[:8]}.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(str(batch_id))
+    os.replace(tmp, os.path.join(appends_dir, _STREAM_LEDGER))
 
 
 class _AppendCommit(WriterCommitMessage):
@@ -383,6 +452,15 @@ class _StagedPartsMixin:
         pq.write_table(pa.Table.from_batches(batches), path)
         return _AppendCommit((path,))
 
+    def _assemble(self, files: list, name: str) -> str:
+        """Move the successful tasks' staged parts into one hidden
+        batch dir ``appends/<name>`` (ready for ``_publish``)."""
+        tmp = os.path.join(self._appends_dir(), name)
+        os.makedirs(tmp)
+        for f in files:
+            os.replace(f, os.path.join(tmp, os.path.basename(f)))
+        return tmp
+
     @staticmethod
     def _discard(messages) -> None:
         for m in messages:
@@ -431,16 +509,14 @@ class _TableStoreStreamWriter(_StagedPartsMixin, DataSourceStreamArrowWriter):
        fresh files; only the files named in the SUCCESSFUL tasks'
        commit messages are ever published, so task retries cannot
        duplicate rows within a batch.
-    2. ``commit`` (driver): the batch publishes under a MONOTONE stamp
-       — ``max(time_ns, newest existing stamp + 1)`` — suffixed with
-       the checkpointed batchId (``<stamp>-sb<batchId>``), via one
-       atomic ``rename`` of the assembled dir into ``appends/``.
-       Monotone against BOTH write paths: a plain ``TableStore.append``
-       interleaved with the running sink can never out-stamp a later
-       stream batch, so a CDC reader's high-water offset never
-       silently skips stream batches (stamps follow publication
-       order, which is what the offset contract actually requires).
-       Replay dedup (crash after publish, before the checkpoint
+    2. ``commit`` (driver): those parts are assembled under a hidden
+       ``_commit-<batchId>-*`` dir and published by ``_publish`` — the
+       one publication step every writer of the log shares — as
+       ``<stamp>-sb<batchId>``: stamp choice and rename happen under
+       the per-table append lock, so stamps follow publication order
+       across the sink, plain ``TableStore.append`` and the batch
+       writer, and a CDC reader's high-water offset never skips a
+       batch. Replay dedup (crash after publish, before the checkpoint
        recorded it) is by batch id, the reference leader's remembered
        processed-batch set (rainstorm.go:537-575): a batchId is
        already published iff it is ≤ the LEDGER's high-water mark or a
@@ -452,9 +528,11 @@ class _TableStoreStreamWriter(_StagedPartsMixin, DataSourceStreamArrowWriter):
     the other side — ``compact_appends()``/``merge()`` advance the
     ledger from the ``-sb`` names they are about to fold away
     (dfs.TableStore._repair_stream_ledger), so maintenance can never
-    erase un-ledgered evidence of publication. Empty micro-batches
-    publish nothing (batchId gaps are fine: stamps only need to be
-    monotone, not dense).
+    erase un-ledgered evidence of publication. The ledger is needed
+    beyond the dir-exists check because those folds remove published
+    batch dirs — without it a replay after a fold would re-publish
+    (duplicates). Empty micro-batches publish nothing (batchId gaps
+    are fine: stamps only need to be monotone, not dense).
 
     Single-writer contract (the reference's: ONE leader owns the dest
     file): one stream QUERY LINEAGE per table — concurrent stream
@@ -466,139 +544,51 @@ class _TableStoreStreamWriter(_StagedPartsMixin, DataSourceStreamArrowWriter):
 
     _PART_PREFIX = "s-part"
 
-    def __init__(self, table_dir: str, schema=None, serialize: bool = False):
+    def __init__(self, table_dir: str, schema=None):
         _check_write_schema(table_dir, schema)
         self.table_dir = table_dir
-        self.serialize = serialize
         os.makedirs(self._appends_dir(), exist_ok=True)
 
-    _LEDGER = "_stream_published.txt"
-
-    def _next_stamp(self) -> str:
-        """20-digit publication stamp: wall time_ns, bumped past the
-        newest existing stamp (dir names and compacted dirs' _max_seq
-        markers) so publication order == stamp order even when a plain
-        append's stamp landed ahead of this sink's clock.
-
-        Residual race, lock-free: a concurrent plain append starting
-        in the microseconds between this listing and the publish
-        rename takes a later time_ns but may rename first — a CDC
-        reader polling in exactly that window could advance past the
-        not-yet-renamed stream batch. Callers needing a hard guarantee
-        either serialize appends with the sink's commit cadence (the
-        single-writer deployment the reference also assumes) or opt
-        BOTH write paths into the per-table append lock
-        (``serializeAppends`` here, ``serialize_appends=True`` on the
-        TableStore — locks.append_lock), which makes stamp choice +
-        publish rename one critical section."""
-        return _bumped_stamp(self._appends_dir())
-
     def _find_published(self, batch_id: int) -> bool:
-        # zero-pad-aware: parse the -sb suffix back to an int instead
-        # of string-matching the :08d form, so batch ids past 10**8
-        # (9+ digits — :08d pads, never truncates) still dedup
-        # (ADVICE r6)
-        import re
-
-        d = self._appends_dir()
         return any(
-            m and int(m.group(1)) == batch_id
-            for s in os.listdir(d)
-            if not s.startswith(("_", "."))
-            for m in [re.search(r"-sb(\d{8,})$", s)]
+            _stream_batch_id(s) == batch_id for s in _batch_names(self._appends_dir())
         )
 
-    def _published_thru(self) -> int:
-        """The sink's own batch-id ledger (the reference leader's
-        remembered processed-batch set, rainstorm.go:537-575): the
-        highest batchId ever PUBLISHED to this table. Needed beyond
-        the dir-exists check because a later ``compact_appends()`` /
-        ``merge()`` folds published batch dirs away — without the
-        ledger a replay after a fold would re-publish (duplicates)."""
-        p = os.path.join(self._appends_dir(), self._LEDGER)
-        if not os.path.isfile(p):
-            return -1
-        with open(p) as fh:
-            return int(fh.read().strip())
-
-    def _record_published(self, batch_id: int) -> None:
-        """Atomically advance the ledger (temp + rename). Written
-        AFTER the publish rename: a crash in between leaves the dir on
-        disk, so the replay's dir-exists check still dedups and then
-        repairs the ledger."""
-        import uuid
-
-        d = self._appends_dir()
-        cur = self._published_thru()
-        if batch_id <= cur:
-            return
-        tmp = os.path.join(d, f"_ledger-{uuid.uuid4().hex[:8]}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(batch_id))
-        os.replace(tmp, os.path.join(d, self._LEDGER))
-
     def _gc_commit_dirs(self, batch_id: int) -> None:
-        """Remove orphaned ``_commit-*`` dirs left by crashed prior
-        attempts. Commits are sequential (single-writer), so any
-        ``_commit`` dir with an embedded batch number ≤ the current one
-        is dead: its batch either published (dedup covers the replay)
-        or is about to be re-assembled from fresh staged parts."""
+        """Remove orphaned ``_commit-<batchId>-*`` dirs left by crashed
+        prior attempts. Commits are sequential (single-writer), so any
+        with a batch id ≤ the current one is dead: its batch either
+        published (dedup covers the replay) or is about to be
+        re-assembled from fresh staged parts."""
         import re
-        import shutil
 
         d = self._appends_dir()
         for s in os.listdir(d):
             m = re.match(r"_commit-(\d{8,})-", s)
-            # exactly-20-digit ids are the BATCH writer's time_ns-stamp
-            # namespace (_commit-<20-digit>-<hex>) — never this sink's
-            # batchIds; skip them explicitly instead of relying on the
-            # numeric comparison to stay false at 1.7e18
-            if m and len(m.group(1)) != 20 and int(m.group(1)) <= batch_id:
+            if m and int(m.group(1)) <= batch_id:
                 shutil.rmtree(os.path.join(d, s), ignore_errors=True)
 
     def commit(self, messages, batchId: int) -> None:
-        import shutil
         import uuid
 
+        ad = self._appends_dir()
         files = [f for m in messages if m is not None for f in m.files]
         self._gc_commit_dirs(batchId)
-        if batchId <= self._published_thru() or self._find_published(batchId):
+        if batchId <= _ledger_thru(ad) or self._find_published(batchId):
             # replayed micro-batch: already published — the ledger
             # proves it, or a published dir still carries this batch
             # id's -sb suffix (the ledger write may have been lost to a
             # crash right after the publish rename). Dedup by batch id,
             # discard the re-staged parts, repair the ledger.
-            for f in files:
-                if os.path.isfile(f):
-                    os.remove(f)
-            self._record_published(batchId)
+            self._discard(messages)
+            _advance_ledger(ad, batchId)
             self._sweep_staging(set())
             return
         if not files:
             return  # empty batch: publish nothing
-        tmp = os.path.join(
-            self._appends_dir(), f"_commit-{batchId:08d}-{uuid.uuid4().hex[:8]}"
-        )
-        os.makedirs(tmp)
-        for f in files:
-            os.replace(f, os.path.join(tmp, os.path.basename(f)))
-        from distributed_file_system_with_stream_processing_spark.locks import (
-            append_lock,
-        )
-
-        # under serializeAppends the stamp choice and the publish
-        # rename are one critical section — no opted-in plain append
-        # can stamp later yet rename earlier (the CDC race)
-        with append_lock(self._appends_dir(), self.serialize):
-            final = os.path.join(
-                self._appends_dir(), f"{self._next_stamp()}-sb{batchId:08d}"
-            )
-            try:
-                os.rename(tmp, final)  # the atomic publish
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-        self._record_published(batchId)
+        tmp = self._assemble(files, f"_commit-{batchId:08d}-{uuid.uuid4().hex[:8]}")
+        _publish(ad, tmp, f"sb{batchId:08d}")
+        _advance_ledger(ad, batchId)
         # single-writer: any of our parts still staged belong to failed
         # or speculative tasks of batches ≤ this one — orphans
         self._sweep_staging(set())
@@ -612,18 +602,19 @@ class _TableStoreBatchWriter(_StagedPartsMixin, DataSourceArrowWriter):
     "tablestore").mode("append")`` becomes ONE append batch, published
     with the same stage-then-atomic-rename protocol as the streaming
     writer (tasks stage Arrow-fed parquet parts; the driver's commit
-    assembles only the SUCCESSFUL tasks' parts and renames once).
+    assembles only the SUCCESSFUL tasks' parts under a hidden
+    ``_pending-*`` dir and ``_publish``-es it once).
 
-    The stamp is a fresh ``time_ns-uuid`` exactly like
-    ``TableStore.append`` (dfs.py:163) — the two write paths are
-    interchangeable in merge order, snapshots and CDC. Mirroring the
-    reference's write model (HyDFS has create + append, never
-    in-place overwrite), ``mode("overwrite")`` is rejected.
+    The batch is named ``<stamp>-<uuid>`` by ``_publish``, exactly like
+    ``TableStore.append`` — the two write paths are interchangeable in
+    merge order, snapshots and CDC. Mirroring the reference's write
+    model (HyDFS has create + append, never in-place overwrite),
+    ``mode("overwrite")`` is rejected.
 
     Unlike the stream sink there is NO single-writer contract here
     (concurrent batch appends are legal, like TableStore.append), so
-    housekeeping is age-gated: only staged parts and ``_commit`` dirs
-    older than an hour — orphans of crashed jobs, never a live
+    housekeeping is age-gated: only staged parts and ``_pending-*``
+    dirs older than an hour — orphans of crashed jobs, never a live
     commit's — are swept.
 
     Role: API completeness for the pluggable source (read /
@@ -632,9 +623,8 @@ class _TableStoreBatchWriter(_StagedPartsMixin, DataSourceArrowWriter):
     """
 
     _PART_PREFIX = "b-part"
-    _ORPHAN_AGE_S = 3600.0
 
-    def __init__(self, table_dir: str, schema, overwrite: bool, serialize: bool = False):
+    def __init__(self, table_dir: str, schema, overwrite: bool):
         if overwrite:
             raise ValueError(
                 "tablestore is an append log: mode('overwrite') is not "
@@ -642,59 +632,18 @@ class _TableStoreBatchWriter(_StagedPartsMixin, DataSourceArrowWriter):
             )
         _check_write_schema(table_dir, schema)
         self.table_dir = table_dir
-        self.serialize = serialize
 
     def commit(self, messages) -> None:
-        import time
         import uuid
-
-        from distributed_file_system_with_stream_processing_spark.locks import (
-            append_lock,
-        )
 
         files = [f for m in messages if m is not None for f in m.files]
         if not files:
             return
-        suffix = uuid.uuid4().hex[:8]
-        tmp = os.path.join(
-            self._appends_dir(), f"_commit-{time.time_ns():020d}-{suffix}"
-        )
-        os.makedirs(tmp)
-        for f in files:
-            os.replace(f, os.path.join(tmp, os.path.basename(f)))
-        # under serializeAppends, stamp-bump + publish are one critical
-        # section (publication order == stamp order); lock-free, the
-        # stamp is plain time_ns — TableStore.append's semantics
-        with append_lock(self._appends_dir(), self.serialize):
-            if self.serialize:
-                seq = f"{self._bumped_stamp()}-{suffix}"
-            else:
-                seq = f"{time.time_ns():020d}-{suffix}"
-            os.rename(tmp, os.path.join(self._appends_dir(), seq))
-        self._gc_orphans()
-
-    def _bumped_stamp(self) -> str:
-        return _bumped_stamp(self._appends_dir())
-
-    def _gc_orphans(self) -> None:
-        """Sweep crashed jobs' leftovers: our staged parts and batch
-        ``_commit-*`` dirs (20-digit-stamp names, distinct from the
-        stream's ``_commit-<batchId>-``) past the age gate."""
-        import re
-        import shutil
-        import time
-
-        self._sweep_staging(set(), min_age_s=self._ORPHAN_AGE_S)
-        d = self._appends_dir()
-        cutoff = time.time() - self._ORPHAN_AGE_S
-        for s in os.listdir(d):
-            if re.match(r"_commit-\d{20}-", s):
-                p = os.path.join(d, s)
-                try:
-                    if os.path.getmtime(p) <= cutoff:
-                        shutil.rmtree(p, ignore_errors=True)
-                except OSError:
-                    pass
+        ad = self._appends_dir()
+        tmp = self._assemble(files, f"_pending-{uuid.uuid4().hex[:12]}")
+        _publish(ad, tmp, uuid.uuid4().hex[:8])
+        self._sweep_staging(set(), min_age_s=_ORPHAN_AGE_S)
+        _gc_pending(ad)
 
     def abort(self, messages) -> None:
         self._discard(messages)

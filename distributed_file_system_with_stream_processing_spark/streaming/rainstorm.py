@@ -24,8 +24,6 @@ design.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -247,42 +245,6 @@ def join_streams(
         & (r[right_ts] <= l[left_ts] + F.expr(f"interval {within}"))
     )
     return l.join(r, cond, how).drop(r[key])
-
-
-def stream_into_store(
-    spark: SparkSession,
-    job: RainStormJob,
-    source_dir: str,
-    schema,
-    checkpoint_dir: str,
-    store,
-    dest_table: str,
-) -> StreamingQuery:
-    """Reference end-to-end shape: results appended to a HyDFS dest file
-    (rainstorm.go:566 ``r.Append(result, batch.P.DstFile)``) — here each
-    micro-batch is appended to a TableStore table via foreachBatch.
-
-    foreachBatch gives at-least-once on its own; the TableStore append
-    dir is named by (query, batchId) so replayed batches overwrite the
-    same path instead of duplicating — idempotent, hence exactly-once,
-    the same trick as the reference's UploadedBatchLineNumbers set.
-    """
-    import shutil
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = job.run_batch(batch_df)
-        # idempotent append path per batch id
-        target = os.path.join(store._appends_dir(dest_table), f"{batch_id:020d}-stream")
-        if os.path.isdir(target):
-            shutil.rmtree(target)
-        out.write.mode("overwrite").parquet(target)
-
-    src = spark.readStream.schema(schema).parquet(source_dir)
-    return (
-        src.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def neardup_stream(

@@ -53,6 +53,10 @@ def test_merge_folds_appends_in_order(store, spark):
     store.create("t", _df(spark, [(0, "base")]))
     store.append("t", _df(spark, [(1, "first")]))
     store.append("t", _df(spark, [(2, "second")]))
+    # OS litter in appends/ is not a batch: every listing skips it
+    with open(os.path.join(store._appends_dir("t"), ".DS_Store"), "w") as fh:
+        fh.write("x")
+    assert len(store.ls("t")["pending_appends"]) == 2
     n = store.merge("t")
     assert n == 2
     assert store.ls("t")["pending_appends"] == []
@@ -1040,20 +1044,15 @@ def test_append_lock_mutual_exclusion(tmp_path):
         order.append("b")
     t.join()
     assert order == ["a-start", "a-end", "b"]
-    # disabled: pure no-op, no lock file created
-    with append_lock(str(tmp_path / "other"), enabled=False):
-        pass
-    assert not os.path.exists(str(tmp_path / "other"))
 
 
 def test_serialized_appends_close_cdc_stamp_race(spark, tmp_path):
-    """Opting BOTH write paths into serializeAppends (the r6 verdict's
-    commit-log-lite): plain appends stage hidden, then stamp-bump +
-    publish-rename under the per-table lock — so stamps strictly
-    follow publication order and a CDC reader stepping its offset
-    batch-by-batch receives EVERY batch, interleaved however. The
-    lock-free default path is untouched (its tests above still pin the
-    single-writer behavior)."""
+    """Both write paths publish the same way (the r6 verdict's
+    commit-log-lite): plain appends and sink batches stage hidden,
+    then stamp-bump + publish-rename under the per-table lock — so
+    stamps strictly follow publication order and a CDC reader stepping
+    its offset batch-by-batch receives EVERY batch, interleaved
+    however."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1065,10 +1064,10 @@ def test_serialized_appends_close_cdc_stamp_race(spark, tmp_path):
 
     root = str(tmp_path / "store")
     schema = "id long, v string"
-    store = TableStore(spark, root, serialize_appends=True)
+    store = TableStore(spark, root)
     store.create("t", spark.createDataFrame([(1, "base")], schema))
     tdir = os.path.join(root, "t")
-    w = _TableStoreStreamWriter(tdir, None, serialize=True)
+    w = _TableStoreStreamWriter(tdir, None)
 
     def stage(rows):
         staging = os.path.join(tdir, "appends", "_staging")
@@ -1110,6 +1109,33 @@ def test_serialized_appends_close_cdc_stamp_race(spark, tmp_path):
     assert len(store.get("t").collect()) == 6
 
 
+def test_append_is_invisible_to_cdc_until_published(spark, tmp_path):
+    """A plain TableStore.append is atomic for readers, like the
+    reference's buffered AppendInfo record: while its Spark write job
+    runs, the CDC reader's high-water offset must not name the batch
+    being written — a stream taking that stamp as its offset would
+    never read the batch. The probe is a UDF inside the appended
+    DataFrame, so it reads the offset while the write job runs, and
+    the offsets it saw land in the batch's own rows."""
+    from pyspark.sql import functions as F
+
+    from distributed_file_system_with_stream_processing_spark.sources.pyds import (
+        _TableStoreStreamReader,
+    )
+
+    root = str(tmp_path / "store")
+    store = TableStore(spark, root)
+    store.create("t", spark.createDataFrame([(0, "base")], "id long, v string"))
+    rdr = _TableStoreStreamReader(os.path.join(root, "t"), ["id", "v", "_append_seq"])
+    probe = F.udf(lambda _: rdr.latestOffset()["seq"], "string")
+    df = spark.range(1, 9, numPartitions=4).select("id", probe("id").alias("v"))
+    seq = store.append("t", df)
+    seen = {r["v"] for r in store.get_from_replica("t", seq).collect()}
+    assert seen and seq not in seen
+    assert rdr.latestOffset() == {"seq": seq}
+    assert store.get("t").count() == 9
+
+
 def test_type_check_distinguishes_date_from_timestamp(spark, tmp_path):
     """date32 and timestamp must NOT canonicalize together: a
     TimestampType write into a DateType column would silently coerce
@@ -1131,21 +1157,25 @@ def test_type_check_distinguishes_date_from_timestamp(spark, tmp_path):
 
 
 def test_serialized_append_gc_sweeps_orphaned_pending(spark, tmp_path):
-    """A crashed serialized append's _pending-* staging dir (parquet
-    written, publish rename never happened) is swept by the next
-    serialized append once past the age gate; younger pending dirs
-    survive (a concurrent append's live staging)."""
+    """A crashed append's _pending-* staging dir (parquet written,
+    publish rename never happened) is swept by the next append once
+    past the age gate; younger pending dirs survive (a concurrent
+    append's live staging)."""
     import time as _t
+
+    from distributed_file_system_with_stream_processing_spark.sources.pyds import (
+        _ORPHAN_AGE_S,
+    )
 
     root = str(tmp_path / "store")
     schema = "id long, v string"
-    store = TableStore(spark, root, serialize_appends=True)
+    store = TableStore(spark, root)
     store.create("t", spark.createDataFrame([(1, "base")], schema))
     ad = store._appends_dir("t")
     os.makedirs(ad, exist_ok=True)
     dead = os.path.join(ad, "_pending-deadbeef0000")
     os.makedirs(dead)
-    old = _t.time() - 2 * store._PENDING_AGE_S
+    old = _t.time() - 2 * _ORPHAN_AGE_S
     os.utime(dead, (old, old))
     live = os.path.join(ad, "_pending-cafecafe0000")
     os.makedirs(live)
@@ -1157,9 +1187,9 @@ def test_serialized_append_gc_sweeps_orphaned_pending(spark, tmp_path):
 
 
 def test_stream_gc_never_touches_batch_commit_namespace(spark, tmp_path):
-    """The stream sink's _gc_commit_dirs must skip the BATCH writer's
-    _commit-<20-digit-time_ns>-<hex> staging dirs even when the
-    numeric id would compare <= batchId (review finding r7)."""
+    """The stream sink's _gc_commit_dirs must leave the other writers'
+    live _pending-* staging dirs alone, however large the batchId
+    (review finding r7), while sweeping its own dead _commit dirs."""
     from distributed_file_system_with_stream_processing_spark.sources.pyds import (
         _TableStoreStreamWriter,
     )
@@ -1169,12 +1199,12 @@ def test_stream_gc_never_touches_batch_commit_namespace(spark, tmp_path):
     store.create("t", spark.createDataFrame([(1, "base")], "id long, v string"))
     w = _TableStoreStreamWriter(os.path.join(root, "t"))
     ad = os.path.join(root, "t", "appends")
-    batch_style = os.path.join(ad, "_commit-00000000000000001234-abcd1234")
+    pending = os.path.join(ad, "_pending-00000000001234")
     stream_style = os.path.join(ad, "_commit-00000007-deadbeef")
-    os.makedirs(batch_style)
+    os.makedirs(pending)
     os.makedirs(stream_style)
-    w._gc_commit_dirs(batch_id=10**10)  # huge id: numeric guard alone would match both
-    assert os.path.isdir(batch_style)      # 20-digit namespace untouched
+    w._gc_commit_dirs(batch_id=10**20)
+    assert os.path.isdir(pending)           # live batch staging untouched
     assert not os.path.isdir(stream_style)  # own dead commit swept
 
 
@@ -1211,8 +1241,8 @@ for i in range(k):
 
 
 def test_append_lock_two_real_processes(spark, tmp_path):
-    """Cross-PROCESS contention for the serializeAppends protocol (the
-    r7 candidate's missing evidence): two real OS processes each run
+    """Cross-PROCESS contention for the append publication protocol
+    (the r7 candidate's missing evidence): two real OS processes each run
     the exact stage-then-stamp-bump-then-publish-rename critical
     section TableStore.append uses, against ONE table. fcntl.flock
     must serialize them such that stamp order == publication order —
@@ -1223,7 +1253,7 @@ def test_append_lock_two_real_processes(spark, tmp_path):
     import sys as _sys
 
     root = str(tmp_path / "store")
-    store = TableStore(spark, root, serialize_appends=True)
+    store = TableStore(spark, root)
     store.create("t", spark.createDataFrame([(0, "base")], "id long, v string"))
     ad = store._appends_dir("t")
     os.makedirs(ad, exist_ok=True)
@@ -1260,12 +1290,12 @@ def test_append_lock_two_real_processes(spark, tmp_path):
 
 def test_multiappend_serializes_under_lock(spark, tmp_path):
     """multiappend routes every concurrent branch through
-    TableStore.append, so serialize_appends=True covers it with no
-    extra code path: all N batches publish with strictly increasing,
-    unique stamps (publication order), parquet writes still run
-    OUTSIDE the lock (the _pending staging protocol)."""
+    TableStore.append, so the append lock covers it with no extra
+    code path: all N batches publish with strictly increasing, unique
+    stamps (publication order), parquet writes still run OUTSIDE the
+    lock (the _pending staging protocol)."""
     root = str(tmp_path / "store")
-    store = TableStore(spark, root, serialize_appends=True)
+    store = TableStore(spark, root)
     store.create("t", spark.createDataFrame([(0, 0)], "k long, v long"))
     dfs = [spark.createDataFrame([(i, i * 10)], "k long, v long") for i in range(1, 9)]
     seqs = store.multiappend("t", dfs)

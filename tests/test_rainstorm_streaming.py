@@ -13,7 +13,6 @@ from distributed_file_system_with_stream_processing_spark.dfs import TableStore
 from distributed_file_system_with_stream_processing_spark.streaming import ops as O
 from distributed_file_system_with_stream_processing_spark.streaming.rainstorm import (
     RainStormJob,
-    stream_into_store,
 )
 
 SCHEMA = "event_id long, event_type string, value double"
@@ -37,7 +36,6 @@ def dirs(tmp_path):
         "src": str(tmp_path / "src"),
         "sink": str(tmp_path / "sink"),
         "ckpt": str(tmp_path / "ckpt"),
-        "store": str(tmp_path / "store"),
     }
 
 
@@ -129,26 +127,6 @@ def test_restart_from_checkpoint_exactly_once(spark, dirs):
         assert len(ids) == len(set(ids))
     finally:
         q2.stop()
-
-
-def test_stream_into_table_store(spark, dirs):
-    """End-to-end reference shape: streamed results appended to the
-    dest 'HyDFS file' (TableStore), per-batch aggregate records."""
-    store = TableStore(spark, dirs["store"])
-    store.create("dest", spark.createDataFrame([], "event_type string, cnt long"))
-    job = RainStormJob(O.filter_equals("event_type", "click"), O.count_by("event_type"))
-    _write(_batch(spark, 0, 30), dirs["src"])
-    q = stream_into_store(
-        spark, job, dirs["src"], SCHEMA, dirs["ckpt"], store, "dest"
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    merged = store.get("dest")
-    total = merged.agg(F.sum("cnt").alias("s")).collect()[0]["s"]
-    expect = _batch(spark, 0, 30).filter(F.col("event_type") == "click").count()
-    assert total == expect
 
 
 def test_stream_static_broadcast_join(spark, tmp_path):
