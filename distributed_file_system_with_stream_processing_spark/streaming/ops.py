@@ -18,6 +18,25 @@ per batch:
 Arbitrary Python logic (the "custom executable" escape hatch) goes
 through ``python_transform`` — an Arrow-batched ``mapInPandas``, the
 Spark-idiomatic replacement for exec'ing a binary per batch.
+
+Stateful stream ops are per-key folds, and all but three run theirs
+through ``_keyed_fold`` (``applyInPandasWithState``, no timeout). The
+op supplies
+``step(key, pdf, state) -> (new_state, rows)``:
+
+- ``key`` is the grouping-key tuple;
+- ``pdf`` is the key's non-empty rows of this trigger, one pandas
+  frame (a single Arrow chunk is passed as is, never copied);
+- ``state`` is the stored state tuple, or ``None`` for a key seen for
+  the first time;
+- ``new_state`` is the tuple to store, matching the state schema;
+- ``rows`` is a list of tuples or a pandas frame, in the output
+  schema's column order.
+
+``_keyed_fold`` owns the rest: a key with no rows emits an empty frame
+and leaves its state alone. ``SessionPathOp``, ``RetentionMatrixOp``
+and ``SessionDepthOp`` stay hand-written, because each handles an
+event-time timeout in its own way (remove, freeze, emit-then-remove).
 """
 
 from __future__ import annotations
@@ -27,6 +46,50 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _columns(ddl: str) -> list[str]:
+    """Top-level column names of a DDL schema string, e.g.
+    ``"k string, xs array<long>"`` → ``["k", "xs"]``."""
+    cols, depth, start = [], 0, 0
+    for i, ch in enumerate(ddl + ","):
+        depth += (ch in "<(") - (ch in ">)")
+        if ch == "," and depth == 0:
+            cols.append(ddl[start:i].split()[0])
+            start = i + 1
+    return cols
+
+
+def _keyed_fold(
+    df: DataFrame,
+    keys: list[str],
+    out_schema: str,
+    state_schema: str,
+    step: Callable,
+    mode: str = "update",
+) -> DataFrame:
+    """Run ``step`` (see the module docstring) as a per-key fold over
+    ``df`` with ``applyInPandasWithState`` and no timeout. ``mode`` is
+    the operator output mode. Builds no Spark object itself, so the
+    fold can be captured and driven without a session."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    cols = _columns(out_schema)
+
+    def update(key, pdfs: Iterator, state) -> Iterator:
+        parts = [p for p in pdfs if len(p)]
+        if not parts:
+            yield pd.DataFrame([], columns=cols)
+            return
+        pdf = parts[0] if len(parts) == 1 else pd.concat(parts)
+        new_state, rows = step(key, pdf, state.get if state.exists else None)
+        state.update(new_state)
+        yield rows if isinstance(rows, pd.DataFrame) else pd.DataFrame(rows, columns=cols)
+
+    return df.groupBy(*keys).applyInPandasWithState(
+        update, out_schema, state_schema, mode, GroupStateTimeout.NoTimeout
+    )
 
 
 @dataclass
@@ -88,23 +151,17 @@ class StatefulCountOp:
         return df.groupBy(*self.keys).agg(F.count(F.lit(1)).alias("total"))
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         keys = list(self.keys)
         out_schema = (
             ", ".join(f"{k} {self.key_type}" for k in keys) + ", total long, delta long"
         )
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            delta = sum(len(p) for p in pdfs)
-            total = (state.get[0] if state.exists else 0) + delta
-            state.update((total,))
-            yield pd.DataFrame([tuple(key) + (total, delta)], columns=keys + ["total", "delta"])
+        def step(key, pdf, state):
+            delta = len(pdf)
+            total = (state[0] if state else 0) + delta
+            return (total,), [tuple(key) + (total, delta)]
 
-        return df.groupBy(*keys).applyInPandasWithState(
-            update, out_schema, "total long", self.mode, GroupStateTimeout.NoTimeout
-        )
+        return _keyed_fold(df, keys, out_schema, "total long", step, self.mode)
 
 
 @dataclass
@@ -149,35 +206,19 @@ class TransitionCountOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        ucol, tcol, tscol, idcol = self.user_col, self.type_col, self.ts_col, self.id_col
+        tcol, tscol, idcol = self.type_col, self.ts_col, self.id_col
         out_schema = "user_id long, prev_type string, next_type string, delta long"
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame(
-                    [], columns=["user_id", "prev_type", "next_type", "delta"]
-                )
-                return
-            pdf = pd.concat(parts).sort_values([tscol, idcol])
-            seq = list(pdf[tcol])
-            prev = state.get[0] if state.exists else None
+        def step(key, pdf, state):
+            seq = list(pdf.sort_values([tscol, idcol])[tcol])
+            prev = state[0] if state else None
             chain = ([prev] if prev is not None else []) + seq
             counts: dict[tuple[str, str], int] = {}
             for a, b in zip(chain, chain[1:]):
                 counts[(a, b)] = counts.get((a, b), 0) + 1
-            state.update((seq[-1],))
-            yield pd.DataFrame(
-                [(key[0], a, b, n) for (a, b), n in sorted(counts.items())],
-                columns=["user_id", "prev_type", "next_type", "delta"],
-            )
+            return (seq[-1],), [(key[0], a, b, n) for (a, b), n in sorted(counts.items())]
 
-        return df.groupBy(ucol).applyInPandasWithState(
-            update, out_schema, "last string", "update", GroupStateTimeout.NoTimeout
-        )
+        return _keyed_fold(df, [self.user_col], out_schema, "last string", step)
 
 
 @dataclass
@@ -216,29 +257,18 @@ class QuotaSampleOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         kcol, ocol, quota = self.key_col, self.order_col, self.quota
         out_schema = f"{kcol} {self.key_type}, {ocol} long"
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            taken = state.get[0] if state.exists else 0
+        def step(key, pdf, state):
+            taken = state[0] if state else 0
             room = max(quota - taken, 0)
-            if not parts or room == 0:
-                if parts:
-                    state.update((taken + 0,))
-                yield pd.DataFrame([], columns=[kcol, ocol])
-                return
-            pdf = pd.concat(parts).sort_values(ocol)
-            admitted = pdf.head(room)
-            state.update((taken + len(admitted),))
-            yield admitted[[kcol, ocol]]
+            if room == 0:
+                return (taken,), []
+            admitted = pdf.sort_values(ocol).head(room)
+            return (taken + len(admitted),), admitted[[kcol, ocol]]
 
-        return df.groupBy(kcol).applyInPandasWithState(
-            update, out_schema, "taken long", "update", GroupStateTimeout.NoTimeout
-        )
+        return _keyed_fold(df, [kcol], out_schema, "taken long", step)
 
 
 def dedup_by(keys: list[str], ts_col: str | None = None, watermark: str = "1 hour") -> TransformOp:
@@ -518,40 +548,24 @@ class AbMonitorOp:
     def stream_apply(self, df: DataFrame) -> DataFrame:
         import hashlib
 
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         tcol, conv_type = self.type_col, self.convert_type
         out_schema = "user_id long, arm long, d_user long, d_conv long"
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=["user_id", "arm", "d_user", "d_conv"])
-                return
-            pdf = pd.concat(parts)
-            counted, converted = state.get if state.exists else (0, 0)
+        def step(key, pdf, state):
+            counted, converted = state or (0, 0)
             d_user = 0 if counted else 1
             batch_conv = int((pdf[tcol] == conv_type).any())
             d_conv = 1 if (batch_conv and not converted) else 0
-            state.update((1, max(converted, batch_conv)))
+            rows = []
             if d_user or d_conv:
                 arm = (
                     int(hashlib.md5(f"ab|{key[0]}".encode()).hexdigest()[:8], 16) % 2
                 )
-                yield pd.DataFrame(
-                    [(key[0], arm, d_user, d_conv)],
-                    columns=["user_id", "arm", "d_user", "d_conv"],
-                )
-            else:
-                yield pd.DataFrame([], columns=["user_id", "arm", "d_user", "d_conv"])
+                rows.append((key[0], arm, d_user, d_conv))
+            return (1, max(converted, batch_conv)), rows
 
-        return df.groupBy(self.user_col).applyInPandasWithState(
-            update,
-            out_schema,
-            "counted int, converted int",
-            "update",
-            GroupStateTimeout.NoTimeout,
+        return _keyed_fold(
+            df, [self.user_col], out_schema, "counted int, converted int", step
         )
 
 
@@ -577,9 +591,7 @@ class BenfordMonitorOp:
     name: str
     value_col: str = "value"
 
-    def __call__(self, df: DataFrame) -> DataFrame:
-        if df.isStreaming:
-            return self.stream_apply(df)
+    def _digits(self, df: DataFrame) -> DataFrame:
         cents = F.round(F.col(self.value_col) * 100).cast("long")
         return (
             df.select(cents.alias("cents"))
@@ -589,43 +601,24 @@ class BenfordMonitorOp:
                 .cast("long")
                 .alias("digit")
             )
+        )
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        if df.isStreaming:
+            return self.stream_apply(df)
+        return (
+            self._digits(df)
             .groupBy("digit")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
+        def step(key, pdf, state):
+            (total,) = state or (0,)
+            return (total + len(pdf),), [(key[0], len(pdf))]
 
-        vcol = self.value_col
-        out_schema = "digit long, delta long"
-
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=["digit", "delta"])
-                return
-            n = sum(len(p) for p in parts)
-            (total,) = state.get if state.exists else (0,)
-            state.update((total + n,))
-            yield pd.DataFrame([(key[0], n)], columns=["digit", "delta"])
-
-        cents = F.round(F.col(vcol) * 100).cast("long")
-        digits = (
-            df.select(cents.alias("cents"))
-            .filter(F.col("cents") > 0)
-            .select(
-                F.substring(F.col("cents").cast("string"), 1, 1)
-                .cast("long")
-                .alias("digit")
-            )
-        )
-        return digits.groupBy("digit").applyInPandasWithState(
-            update,
-            out_schema,
-            "total long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+        return _keyed_fold(
+            self._digits(df), ["digit"], "digit long, delta long", "total long", step
         )
 
 
@@ -788,33 +781,19 @@ class PrefixDupGateOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         idc = self.id_col
-        out_schema = "doc_id long, keep boolean"
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=["doc_id", "keep"])
-                return
-            pdf = pd.concat(parts).sort_values(idc)
-            (seen,) = state.get if state.exists else (0,)
+        def step(key, pdf, state):
+            (seen,) = state or (0,)
             rows = []
-            for did in pdf[idc]:
+            for did in pdf.sort_values(idc)[idc]:
                 rows.append((int(did), seen == 0))
                 seen += 1
-            state.update((seen,))
-            yield pd.DataFrame(rows, columns=["doc_id", "keep"])
+            return (seen,), rows
 
         keyed = df.select(F.col(idc), self._pfx().alias("pfx"))
-        return keyed.groupBy("pfx").applyInPandasWithState(
-            update,
-            out_schema,
-            "seen long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+        return _keyed_fold(
+            keyed, ["pfx"], "doc_id long, keep boolean", "seen long", step
         )
 
 
@@ -1027,24 +1006,12 @@ class ReconcileOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         tol, orphan_pri = self.tol_cents, self._ORPHAN_PRI
-        cols = ["priority", "cls", "delta"]
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts)
-            if state.exists:
-                has_hdr, pri, hdr_c, li_c, n_lines, prev_pri, prev_cls = state.get
-            else:
-                has_hdr, pri, hdr_c, li_c, n_lines, prev_pri, prev_cls = (
-                    0, None, 0, 0, 0, None, None,
-                )
+        def step(key, pdf, state):
+            has_hdr, pri, hdr_c, li_c, n_lines, prev_pri, prev_cls = state or (
+                0, None, 0, 0, 0, None, None,
+            )
             hs = pdf[pdf["kind"] == "H"]
             if len(hs):
                 # duplicate headers resolve exactly like the batch
@@ -1073,16 +1040,15 @@ class ReconcileOp:
                 if prev_cls is not None:
                     rows.append((prev_pri, prev_cls, -1))
                 rows.append((out_pri, cls, 1))
-            state.update((has_hdr, pri, hdr_c, li_c, n_lines, out_pri, cls))
-            yield pd.DataFrame(rows, columns=cols)
+            return (has_hdr, pri, hdr_c, li_c, n_lines, out_pri, cls), rows
 
-        return df.groupBy("order_key").applyInPandasWithState(
-            update,
+        return _keyed_fold(
+            df,
+            ["order_key"],
             "priority string, cls string, delta long",
             "has_hdr int, pri string, hdr_c long, li_c long, n_lines long, "
             "prev_pri string, prev_cls string",
-            "update",
-            GroupStateTimeout.NoTimeout,
+            step,
         )
 
 
@@ -1165,21 +1131,9 @@ class CusumMonitorOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        cols = ["event_type", "n_events", "max_cusum_c", "peak_epoch_s"]
-
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts).sort_values(["sec", "event_id"])
-            if state.exists:
-                p, mn, best_s, best_sec, n = state.get
-            else:
-                p, mn, best_s, best_sec, n = 0, 0, -1, -1, 0
+        def step(key, pdf, state):
+            pdf = pdf.sort_values(["sec", "event_id"])
+            p, mn, best_s, best_sec, n = state or (0, 0, -1, -1, 0)
             for dev, sec in zip(pdf["dev"], pdf["sec"]):
                 p += int(dev)
                 mn = min(mn, p)  # mn starts clamped at 0
@@ -1187,17 +1141,14 @@ class CusumMonitorOp:
                 n += 1
                 if s > best_s:
                     best_s, best_sec = s, int(sec)
-            state.update((p, mn, best_s, best_sec, n))
-            yield pd.DataFrame(
-                [(key[0], n, best_s, best_sec)], columns=cols
-            )
+            return (p, mn, best_s, best_sec, n), [(key[0], n, best_s, best_sec)]
 
-        return self._base(df).groupBy("event_type").applyInPandasWithState(
-            update,
+        return _keyed_fold(
+            self._base(df),
+            ["event_type"],
             self._OUT,
             "p long, mn long, best_s long, best_sec long, n long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+            step,
         )
 
 
@@ -1250,20 +1201,11 @@ class TailTopKOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         k = self.k
-        cols = ["event_type", "n_seen", "rank", "cents", "event_id"]
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts)
-            if state.exists:
-                cs, ids, n = state.get
+        def step(key, pdf, state):
+            if state:
+                cs, ids, n = state
                 cur = list(zip(list(cs), list(ids)))
             else:
                 cur, n = [], 0
@@ -1272,19 +1214,68 @@ class TailTopKOp:
             n += len(pdf)
             cur.sort(key=lambda t: (-t[0], t[1]))
             cur = cur[:k]
-            state.update(([c for c, _ in cur], [i for _, i in cur], n))
-            yield pd.DataFrame(
+            return (
+                ([c for c, _ in cur], [i for _, i in cur], n),
                 [(key[0], n, r + 1, c, i) for r, (c, i) in enumerate(cur)],
-                columns=cols,
             )
 
-        return self._base(df).groupBy("event_type").applyInPandasWithState(
-            update,
+        return _keyed_fold(
+            self._base(df),
+            ["event_type"],
             self._OUT,
             "cs array<long>, ids array<long>, n long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+            step,
         )
+
+
+def _attribution_fold(
+    df: DataFrame, out_schema: str, win: int, ptype: str, credit: Callable
+) -> DataFrame:
+    """The attribution ops' shared per-user fold. State is the user's
+    in-window events (three parallel arrays — sec, id, type — pruned
+    to the newest event's horizon). Each purchase books
+    ``credit(cand)``, a list of (attributed_type, amount) pairs over
+    its in-window prior events ``cand``, into the trigger's deltas."""
+
+    def step(key, pdf, state):
+        pdf = pdf.sort_values(["sec", "event_id"])
+        window = list(zip(*state)) if state else []
+        counts: dict[str, int] = {}
+        for sec, eid, etype in zip(
+            (int(x) for x in pdf["sec"]),
+            (int(x) for x in pdf["event_id"]),
+            pdf["event_type"],
+        ):
+            if etype == ptype:
+                cand = [
+                    (s, i, t)
+                    for (s, i, t) in window
+                    if s >= sec - win and (s < sec or (s == sec and i < eid))
+                ]
+                for att, amount in credit(cand):
+                    counts[att] = counts.get(att, 0) + amount
+            window.append((sec, eid, etype))
+            horizon = sec - win
+            window = [w for w in window if w[0] >= horizon]
+        new_state = (
+            [s for s, _, _ in window],
+            [i for _, i, _ in window],
+            [t for _, _, t in window],
+        )
+        return new_state, sorted(counts.items())
+
+    # selectExpr (no client-side Column construction) keeps the fold
+    # extractable by the session-free property harness
+    base = df.selectExpr(
+        "user_id", "event_type", "cast(ts as long) as sec", "event_id"
+    )
+    return _keyed_fold(
+        base,
+        ["user_id"],
+        out_schema,
+        "secs array<long>, ids array<long>, types array<string>",
+        step,
+    )
 
 
 @dataclass
@@ -1354,59 +1345,12 @@ class FirstTouchOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        win, ptype = self.window_s, self.purchase_type
-        cols = ["attributed_type", "delta"]
-
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts).sort_values(["sec", "event_id"])
-            if state.exists:
-                secs, ids, types = state.get
-                window = list(zip(list(secs), list(ids), list(types)))
-            else:
-                window = []
-            counts: dict[str, int] = {}
-            for sec, eid, etype in zip(
-                (int(x) for x in pdf["sec"]),
-                (int(x) for x in pdf["event_id"]),
-                pdf["event_type"],
-            ):
-                if etype == ptype:
-                    cand = [
-                        (s, i, t)
-                        for (s, i, t) in window
-                        if s >= sec - win and (s < sec or (s == sec and i < eid))
-                    ]
-                    att = min(cand)[2] if cand else "direct"
-                    counts[att] = counts.get(att, 0) + 1
-                window.append((sec, eid, etype))
-                horizon = sec - win
-                window = [w for w in window if w[0] >= horizon]
-            state.update((
-                [s for s, _, _ in window],
-                [i for _, i, _ in window],
-                [t for _, _, t in window],
-            ))
-            yield pd.DataFrame(sorted(counts.items()), columns=cols)
-
-        # selectExpr (no client-side Column construction) keeps the
-        # update() closure extractable by the session-free property
-        # harness, like the other sequence ops
-        base = df.selectExpr(
-            "user_id", "event_type", "cast(ts as long) as sec", "event_id"
-        )
-        return base.groupBy("user_id").applyInPandasWithState(
-            update,
+        return _attribution_fold(
+            df,
             self._OUT,
-            "secs array<long>, ids array<long>, types array<string>",
-            "update",
-            GroupStateTimeout.NoTimeout,
+            self.window_s,
+            self.purchase_type,
+            lambda cand: [(min(cand)[2] if cand else "direct", 1)],
         )
 
 
@@ -1452,42 +1396,23 @@ class ErrorBurstOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         etype = self.error_type
-        cols = ["run_len", "delta"]
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts).sort_values(["sec", "event_id"])
-            open_len = state.get[0] if state.exists else 0
+        def step(key, pdf, state):
+            open_len = state[0] if state else 0
             counts: dict[int, int] = {}
-            for t in pdf["event_type"]:
+            for t in pdf.sort_values(["sec", "event_id"])["event_type"]:
                 if t == etype:
                     open_len += 1
                 elif open_len > 0:
                     counts[open_len] = counts.get(open_len, 0) + 1
                     open_len = 0
-            state.update((open_len,))
-            yield pd.DataFrame(sorted(counts.items()), columns=cols)
+            return (open_len,), sorted(counts.items())
 
         base = df.selectExpr(
             "user_id", "event_type", "cast(ts as long) as sec", "event_id"
         )
-        return base.groupBy("user_id").applyInPandasWithState(
-            update,
-            self._OUT,
-            "open_len long",
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-
-
-Op = TransformOp | AggregateOp | StatefulCountOp | WindowedCountOp | TransitionCountOp | QuotaSampleOp | SlidingCountOp | SessionPathOp | AbMonitorOp | BenfordMonitorOp | RetentionMatrixOp | PrefixDupGateOp | SessionDepthOp | ReconcileOp | CusumMonitorOp | TailTopKOp | FirstTouchOp | ErrorBurstOp
+        return _keyed_fold(base, ["user_id"], self._OUT, "open_len long", step)
 
 
 # -- the reference test-op library (user/tests.go test_mp4 t1/t2) ---------
@@ -1543,50 +1468,14 @@ def python_transform(
     return TransformOp(name=name, apply=apply)
 
 
-def running_topk_processor(value_col: str, k: int):
-    """StatefulProcessor keeping the running top-k values per key in
-    ListState. Built lazily (imports inside) so batch-only codepaths
-    never touch the streaming state machinery."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TopK(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getListState("topk", "v double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            vals = []
-            for pdf in rows:
-                vals.extend(float(v) for v in pdf[value_col])
-            if self._state.exists():
-                vals.extend(t[0] for t in self._state.get())
-            top = sorted(vals, reverse=True)[:k]
-            self._state.put([(v,) for v in top])
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]] * len(top),
-                    "rank": list(range(1, len(top) + 1)),
-                    "value": top,
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return TopK()
-
-
 @dataclass
 class RunningTopKOp:
-    """Per-key running top-k of a value column — the Spark 4
-    ``transformWithStateInPandas`` (StatefulProcessor + ListState) twin
-    of the reference leader's in-memory running aggregates
+    """Per-key running top-k of a value column — a keyed-fold twin of
+    the reference leader's in-memory running aggregates
     (rainstorm.go:551-575), but keeping an ORDERED structure the
     groupBy/agg path can't express incrementally: state is the k best
-    values ever seen per key, emitted afresh on every trigger.
+    values ever seen per key (one ``array<double>``), emitted afresh
+    on every trigger.
 
     State is O(k) per key — bounded regardless of stream length, the
     100 TB requirement for unbounded-stream operators.
@@ -1616,23 +1505,22 @@ class RunningTopKOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        # The TWS Python state server requires the protobuf wheel; on
-        # clusters without it the batch twin still runs and the caller
-        # gets a clear error here rather than a worker crash mid-query.
-        try:
-            import google.protobuf  # noqa: F401
-        except ImportError as e:
-            raise ImportError(
-                "transformWithStateInPandas needs the 'protobuf' package "
-                "on driver and executors; falling back to "
-                "StatefulCountOp/applyInPandasWithState is the supported "
-                "path on this cluster"
-            ) from e
-        return df.groupBy(self.key).transformWithStateInPandas(
-            running_topk_processor(self.value_col, self.k),
-            outputStructType="key string, rank int, value double",
-            outputMode="Update",
-            timeMode="None",
+        vcol, k = self.value_col, self.k
+
+        def step(key, pdf, state):
+            vals = [float(v) for v in pdf[vcol]] + (list(state[0]) if state else [])
+            top = sorted(vals, reverse=True)[:k]
+            return (top,), [(key[0], r + 1, v) for r, v in enumerate(top)]
+
+        # append: each trigger's emission is a new generation of the
+        # top-k log, so append-mode sinks (e.g. file sinks) accept it
+        return _keyed_fold(
+            df,
+            [self.key],
+            "key string, rank int, value double",
+            "vs array<double>",
+            step,
+            "append",
         )
 
 
@@ -1699,56 +1587,12 @@ class LastTouchOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        win, ptype = self.window_s, self.purchase_type
-        cols = ["attributed_type", "delta"]
-
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts).sort_values(["sec", "event_id"])
-            if state.exists:
-                secs, ids, types = state.get
-                window = list(zip(list(secs), list(ids), list(types)))
-            else:
-                window = []
-            counts: dict[str, int] = {}
-            for sec, eid, etype in zip(
-                (int(x) for x in pdf["sec"]),
-                (int(x) for x in pdf["event_id"]),
-                pdf["event_type"],
-            ):
-                if etype == ptype:
-                    cand = [
-                        (s, i, t)
-                        for (s, i, t) in window
-                        if s >= sec - win and (s < sec or (s == sec and i < eid))
-                    ]
-                    att = max(cand)[2] if cand else "direct"
-                    counts[att] = counts.get(att, 0) + 1
-                window.append((sec, eid, etype))
-                horizon = sec - win
-                window = [w for w in window if w[0] >= horizon]
-            state.update((
-                [s for s, _, _ in window],
-                [i for _, i, _ in window],
-                [t for _, _, t in window],
-            ))
-            yield pd.DataFrame(sorted(counts.items()), columns=cols)
-
-        base = df.selectExpr(
-            "user_id", "event_type", "cast(ts as long) as sec", "event_id"
-        )
-        return base.groupBy("user_id").applyInPandasWithState(
-            update,
+        return _attribution_fold(
+            df,
             self._OUT,
-            "secs array<long>, ids array<long>, types array<string>",
-            "update",
-            GroupStateTimeout.NoTimeout,
+            self.window_s,
+            self.purchase_type,
+            lambda cand: [(max(cand)[2] if cand else "direct", 1)],
         )
 
 
@@ -1827,61 +1671,19 @@ class LinearAttributionOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
+        micro = self._MICRO
 
-        win, ptype, micro = self.window_s, self.purchase_type, self._MICRO
-        cols = ["attributed_type", "delta_micro"]
+        def credit(cand):
+            if not cand:
+                return [("direct", micro)]
+            base, rem = divmod(micro, len(cand))
+            return [
+                (t, base + (rem if j == 0 else 0))
+                for j, (_, _, t) in enumerate(sorted(cand))
+            ]
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts).sort_values(["sec", "event_id"])
-            if state.exists:
-                secs, ids, types = state.get
-                window = list(zip(list(secs), list(ids), list(types)))
-            else:
-                window = []
-            counts: dict[str, int] = {}
-            for sec, eid, etype in zip(
-                (int(x) for x in pdf["sec"]),
-                (int(x) for x in pdf["event_id"]),
-                pdf["event_type"],
-            ):
-                if etype == ptype:
-                    cand = sorted(
-                        (s, i, t)
-                        for (s, i, t) in window
-                        if s >= sec - win and (s < sec or (s == sec and i < eid))
-                    )
-                    if not cand:
-                        counts["direct"] = counts.get("direct", 0) + micro
-                    else:
-                        base, rem = divmod(micro, len(cand))
-                        for k_, (_, _, t) in enumerate(cand):
-                            c = base + (rem if k_ == 0 else 0)
-                            counts[t] = counts.get(t, 0) + c
-                window.append((sec, eid, etype))
-                horizon = sec - win
-                window = [w for w in window if w[0] >= horizon]
-            state.update((
-                [s for s, _, _ in window],
-                [i for _, i, _ in window],
-                [t for _, _, t in window],
-            ))
-            yield pd.DataFrame(sorted(counts.items()), columns=cols)
-
-        base = df.selectExpr(
-            "user_id", "event_type", "cast(ts as long) as sec", "event_id"
-        )
-        return base.groupBy("user_id").applyInPandasWithState(
-            update,
-            self._OUT,
-            "secs array<long>, ids array<long>, types array<string>",
-            "update",
-            GroupStateTimeout.NoTimeout,
+        return _attribution_fold(
+            df, self._OUT, self.window_s, self.purchase_type, credit
         )
 
 
@@ -1941,33 +1743,12 @@ class VocabGrowthOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            n = 0
-            for p in pdfs:
-                n += len(p)
-            if n == 0:
-                yield pd.DataFrame(
-                    [], columns=["source", "token", "token_delta", "new_type_delta"]
-                )
-                return
-            first = 0 if state.exists else 1
-            state.update((True,))
+        def step(key, pdf, state):
             src, tok = key
-            yield pd.DataFrame(
-                [(src, tok, n, first)],
-                columns=["source", "token", "token_delta", "new_type_delta"],
-            )
+            return (True,), [(src, tok, len(pdf), 0 if state else 1)]
 
-        keyed = self._toks(df)
-        return keyed.groupBy("source", "w").applyInPandasWithState(
-            update,
-            self._OUT,
-            "seen boolean",
-            "update",
-            GroupStateTimeout.NoTimeout,
+        return _keyed_fold(
+            self._toks(df), ["source", "w"], self._OUT, "seen boolean", step
         )
 
 
@@ -2038,40 +1819,15 @@ class DecontamGateOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        cols = [
-            "source",
-            "docs_delta",
-            "contaminated_delta",
-            "docs_total",
-            "contaminated_total",
-        ]
-
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            docs = 0
-            bad = 0
-            for p in pdfs:
-                docs += len(p)
-                bad += int(p["bad"].sum())
-            if docs == 0:
-                yield pd.DataFrame([], columns=cols)
-                return
-            t_docs, t_bad = state.get if state.exists else (0, 0)
+        def step(key, pdf, state):
+            docs, bad = len(pdf), int(pdf["bad"].sum())
+            t_docs, t_bad = state or (0, 0)
             t_docs += docs
             t_bad += bad
-            state.update((t_docs, t_bad))
-            yield pd.DataFrame(
-                [(key[0], docs, bad, t_docs, t_bad)], columns=cols
-            )
+            return (t_docs, t_bad), [(key[0], docs, bad, t_docs, t_bad)]
 
-        return self._flags(df).groupBy("source").applyInPandasWithState(
-            update,
-            self._OUT,
-            "docs long, bad long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+        return _keyed_fold(
+            self._flags(df), ["source"], self._OUT, "docs long, bad long", step
         )
 
 
@@ -2145,33 +1901,13 @@ class InterarrivalStatsOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        cols = [
-            "user_id",
-            "event_type",
-            "n_gaps",
-            "gap_sum_s",
-            "gap_min_s",
-            "gap_max_s",
-        ]
-
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts).sort_values(["sec", "event_id"])
+        def step(key, pdf, state):
+            pdf = pdf.sort_values(["sec", "event_id"])
             # 'have a previous event' == state exists (a key's state is
             # written on its first batch) — NOT a sentinel on last,
             # which a pre-1970 negative epoch would defeat
-            if state.exists:
-                last, n, s, mn, mx = state.get
-                have = True
-            else:
-                last, n, s, mn, mx = 0, 0, 0, -1, -1
-                have = False
+            have = state is not None
+            last, n, s, mn, mx = state or (0, 0, 0, -1, -1)
             for sec in pdf["sec"]:
                 sec = int(sec)
                 if have:
@@ -2182,31 +1918,15 @@ class InterarrivalStatsOp:
                     mx = g if g > mx else mx
                 have = True
                 last = sec
-            state.update((last, n, s, mn, mx))
-            yield pd.DataFrame(
-                [
-                    (
-                        key[0],
-                        key[1],
-                        n,
-                        s,
-                        mn if n else None,
-                        mx if n else None,
-                    )
-                ],
-                columns=cols,
-            )
+            row = (key[0], key[1], n, s, mn if n else None, mx if n else None)
+            return (last, n, s, mn, mx), [row]
 
-        return (
-            self._base(df)
-            .groupBy("user_id", "event_type")
-            .applyInPandasWithState(
-                update,
-                self._OUT,
-                "last long, n long, s long, mn long, mx long",
-                "update",
-                GroupStateTimeout.NoTimeout,
-            )
+        return _keyed_fold(
+            self._base(df),
+            ["user_id", "event_type"],
+            self._OUT,
+            "last long, n long, s long, mn long, mx long",
+            step,
         )
 
 
@@ -2283,32 +2003,18 @@ class EwmaMonitorOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         num, den = self.alpha_num, self.alpha_den
-        cols = ["event_type", "n_events", "ewma_micro"]
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts).sort_values(["sec", "event_id"])
-            e, n = state.get if state.exists else (0, 0)
-            for x in pdf["micro"]:
+        def step(key, pdf, state):
+            e, n = state or (0, 0)
+            for x in pdf.sort_values(["sec", "event_id"])["micro"]:
                 x = int(x)
                 e = x if n == 0 else _trunc_div(num * x + (den - num) * e, den)
                 n += 1
-            state.update((e, n))
-            yield pd.DataFrame([(key[0], n, e)], columns=cols)
+            return (e, n), [(key[0], n, e)]
 
-        return self._base(df).groupBy("event_type").applyInPandasWithState(
-            update,
-            self._OUT,
-            "e long, n long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+        return _keyed_fold(
+            self._base(df), ["event_type"], self._OUT, "e long, n long", step
         )
 
 
@@ -2377,20 +2083,11 @@ class BottomKSampleOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         k = self.k
-        cols = ["source", "n_seen", "sample_ids"]
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts)
-            if state.exists:
-                hs, ids, n = state.get
+        def step(key, pdf, state):
+            if state:
+                hs, ids, n = state
                 pairs = list(zip(hs, ids))
             else:
                 pairs, n = [], 0
@@ -2398,17 +2095,15 @@ class BottomKSampleOp:
             pairs.sort()
             pairs = pairs[:k]
             n += len(pdf)
-            state.update(([h for h, _ in pairs], [i for _, i in pairs], n))
-            yield pd.DataFrame(
-                [(key[0], n, [i for _, i in pairs])], columns=cols
-            )
+            ids = [i for _, i in pairs]
+            return ([h for h, _ in pairs], ids, n), [(key[0], n, ids)]
 
-        return self._base(df).groupBy("source").applyInPandasWithState(
-            update,
+        return _keyed_fold(
+            self._base(df),
+            ["source"],
             self._OUT,
             "hs array<long>, ids array<long>, n long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+            step,
         )
 
 
@@ -2502,9 +2197,6 @@ class MinHashSketchOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         from distributed_file_system_with_stream_processing_spark.functions import (
             text as T,
         )
@@ -2512,17 +2204,11 @@ class MinHashSketchOp:
         k = self.k
         params = [T.mh_params(i) for i in range(k)]
         prime = T.MINHASH_PRIME
-        cols = ["source", "n_docs", "sig"]
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts)
-            if state.exists:
-                sig = [int(x) for x in state.get[0]]
-                n = state.get[1]
+        def step(key, pdf, state):
+            if state:
+                sig = [int(x) for x in state[0]]
+                n = state[1]
             else:
                 sig, n = [prime] * k, 0
             h = pdf["h"].to_numpy()
@@ -2534,15 +2220,10 @@ class MinHashSketchOp:
             # carried the doc, so per-batch distinct doc ids sum to the
             # exact doc census (append-only corpus)
             n += int(pdf["doc_id"].nunique())
-            state.update((sig, n))
-            yield pd.DataFrame([(key[0], n, sig)], columns=cols)
+            return (sig, n), [(key[0], n, sig)]
 
-        return self._hashed(df).groupBy("source").applyInPandasWithState(
-            update,
-            self._OUT,
-            "sig array<long>, n long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+        return _keyed_fold(
+            self._hashed(df), ["source"], self._OUT, "sig array<long>, n long", step
         )
 
 
@@ -2608,62 +2289,39 @@ class MisraGriesOp:
             "source", "doc_id", "pos", F.lower(F.col("w")).alias("term")
         )
 
-    @staticmethod
-    def _emit(counters: dict, n: int):
+    def _step(self, key, pdf, state):
+        # the fold both paths run: the stream resumes from state, the
+        # batch twin starts every source from None
+        if state:
+            ts, cs, n = state
+            counters = dict(zip(ts, (int(c) for c in cs)))
+        else:
+            counters, n = {}, 0
+        _mg_fold(counters, pdf.sort_values(["doc_id", "pos"])["term"], self.k)
+        n += len(pdf)
         ranked = sorted(counters.items(), key=lambda kv: (-kv[1], kv[0]))
-        return n, [t for t, _ in ranked], [c for _, c in ranked]
+        terms, counts = [t for t, _ in ranked], [c for _, c in ranked]
+        return (terms, counts, n), [(key[0], n, terms, counts)]
 
     def __call__(self, df: DataFrame) -> DataFrame:
         if df.isStreaming:
             return self.stream_apply(df)
         import pandas as pd
 
-        k = self.k
-        emit = self._emit
+        step, cols = self._step, _columns(self._OUT)
 
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(["doc_id", "pos"])
-            counters: dict = {}
-            _mg_fold(counters, pdf["term"], k)
-            n, terms, counts = emit(counters, len(pdf))
-            return pd.DataFrame(
-                [(pdf["source"].iloc[0], n, terms, counts)],
-                columns=["source", "n_tokens", "terms", "counts"],
-            )
+        def fold(key, pdf):
+            return pd.DataFrame(step(key, pdf, None)[1], columns=cols)
 
         return self._toks(df).groupBy("source").applyInPandas(fold, self._OUT)
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        k = self.k
-        emit = self._emit
-        cols = ["source", "n_tokens", "terms", "counts"]
-
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts).sort_values(["doc_id", "pos"])
-            if state.exists:
-                ts, cs, n = state.get
-                counters = dict(zip(ts, (int(c) for c in cs)))
-            else:
-                counters, n = {}, 0
-            _mg_fold(counters, pdf["term"], k)
-            n += len(pdf)
-            tot, terms, counts = emit(counters, n)
-            state.update((terms, counts, n))
-            yield pd.DataFrame([(key[0], tot, terms, counts)], columns=cols)
-
-        return self._toks(df).groupBy("source").applyInPandasWithState(
-            update,
+        return _keyed_fold(
+            self._toks(df),
+            ["source"],
             self._OUT,
             "ts array<string>, cs array<long>, n long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+            self._step,
         )
 
 
@@ -2732,37 +2390,23 @@ class KmvDistinctOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         k, space = self.k, self._SPACE
-        cols = ["key", "n_seen", "sketch_size", "est_distinct"]
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts)
-            if state.exists:
-                hs, n = state.get
+        def step(key, pdf, state):
+            if state:
+                hs, n = state
                 mins = set(int(h) for h in hs)
             else:
                 mins, n = set(), 0
             mins.update(int(h) for h in pdf["h"])
             hs = sorted(mins)[:k]
             n += len(pdf)
-            state.update((hs, n))
             d = len(hs)
             est = d if d < k else (k - 1) * space // hs[-1]
-            yield pd.DataFrame([(key[0], n, d, est)], columns=cols)
+            return (hs, n), [(key[0], n, d, est)]
 
-        return self._base(df).groupBy("key").applyInPandasWithState(
-            update,
-            self._OUT,
-            "hs array<long>, n long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+        return _keyed_fold(
+            self._base(df), ["key"], self._OUT, "hs array<long>, n long", step
         )
 
 
@@ -2824,8 +2468,7 @@ class LogHistQuantileOp:
         return 0 if b <= 0 else (3 * (1 << b)) // 4 if b >= 2 else 1
 
     def _readout(self, hist: dict, n: int):
-        # integer rank walk, shared by both paths via the batch twin's
-        # SQL mirror below
+        # integer rank walk; both paths reach it through _step
         out = []
         buckets = sorted(hist)
         for q in self.qs:
@@ -2840,60 +2483,45 @@ class LogHistQuantileOp:
             out.append((q, est))
         return out
 
+    def _step(self, key, pdf, state):
+        # the fold both paths run: the stream adds raw (b, w) rows to
+        # its state, the batch twin feeds each type's pre-summed
+        # histogram rows once, from None
+        if state:
+            bs, cs, n = state
+            hist = dict(zip((int(b) for b in bs), (int(c) for c in cs)))
+        else:
+            hist, n = {}, 0
+        for b, w in zip(pdf["b"], pdf["w"]):
+            hist[int(b)] = hist.get(int(b), 0) + int(w)
+        n += int(pdf["w"].sum())
+        rows = [(key[0], n, q, est) for q, est in self._readout(hist, n)]
+        return (sorted(hist), [hist[b] for b in sorted(hist)], n), rows
+
     def __call__(self, df: DataFrame) -> DataFrame:
         if df.isStreaming:
             return self.stream_apply(df)
         import pandas as pd
 
-        readout = self._readout
+        step, cols = self._step, _columns(self._OUT)
         # shrink to the ≤64-bucket histogram JVM-side FIRST (map-side
         # combine); only histogram rows cross Arrow — corpus-scale safe
         hist_df = self._base(df).groupBy("event_type", "b").agg(
-            F.sum("w").cast("long").alias("c")
+            F.sum("w").cast("long").alias("w")
         )
 
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            hist = dict(zip((int(b) for b in pdf["b"]), (int(c) for c in pdf["c"])))
-            n = sum(hist.values())
-            rows = [
-                (pdf["event_type"].iloc[0], n, q, est)
-                for q, est in readout(hist, n)
-            ]
-            return pd.DataFrame(rows, columns=["event_type", "n", "q", "est_cents"])
+        def fold(key, pdf):
+            return pd.DataFrame(step(key, pdf, None)[1], columns=cols)
 
         return hist_df.groupBy("event_type").applyInPandas(fold, self._OUT)
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        readout = self._readout
-        cols = ["event_type", "n", "q", "est_cents"]
-
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts)
-            if state.exists:
-                bs, cs, n = state.get
-                hist = dict(zip((int(b) for b in bs), (int(c) for c in cs)))
-            else:
-                hist, n = {}, 0
-            for b, w in zip(pdf["b"], pdf["w"]):
-                hist[int(b)] = hist.get(int(b), 0) + int(w)
-            n += int(pdf["w"].sum())
-            state.update((sorted(hist), [hist[b] for b in sorted(hist)], n))
-            rows = [(key[0], n, q, est) for q, est in readout(hist, n)]
-            yield pd.DataFrame(rows, columns=cols)
-
-        return self._base(df).groupBy("event_type").applyInPandasWithState(
-            update,
+        return _keyed_fold(
+            self._base(df),
+            ["event_type"],
             self._OUT,
             "bs array<int>, cs array<long>, n long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+            self._step,
         )
 
 
@@ -2941,31 +2569,13 @@ class SchemaDriftOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
+        def step(key, pdf, state):
+            n = len(pdf)
+            tot = (state[0] if state else 0) + n
+            return (tot,), [(key[0], key[1], n, 0 if state else 1)]
 
-        cols = ["source", "signature", "delta", "is_new"]
-
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            n = 0
-            for p in pdfs:
-                n += len(p)
-            if n == 0:
-                yield pd.DataFrame([], columns=cols)
-                return
-            first = 0 if state.exists else 1
-            tot = (state.get[0] if state.exists else 0) + n
-            state.update((tot,))
-            yield pd.DataFrame(
-                [(key[0], key[1], n, first)], columns=cols
-            )
-
-        return self._sig(df).groupBy("source", "signature").applyInPandasWithState(
-            update,
-            self._OUT,
-            "tot long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+        return _keyed_fold(
+            self._sig(df), ["source", "signature"], self._OUT, "tot long", step
         )
 
 
@@ -3026,36 +2636,19 @@ class DedupGateOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        cols = ["doc_id", "fp", "is_dup", "kept_doc_id"]
-
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts).sort_values("doc_id")
-            keeper = state.get[0] if state.exists else None
+        def step(key, pdf, state):
+            keeper = state[0] if state else None
             out = []
-            for d in pdf["doc_id"]:
+            for d in pdf.sort_values("doc_id")["doc_id"]:
                 d = int(d)
                 if keeper is None:
                     keeper = d
                     out.append((d, key[0], 0, d))
                 else:
                     out.append((d, key[0], 1, keeper))
-            state.update((keeper,))
-            yield pd.DataFrame(out, columns=cols)
+            return (keeper,), out
 
-        return self._base(df).groupBy("fp").applyInPandasWithState(
-            update,
-            self._OUT,
-            "keeper long",
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
+        return _keyed_fold(self._base(df), ["fp"], self._OUT, "keeper long", step)
 
 
 @dataclass
@@ -3129,18 +2722,9 @@ class AsofEnrichOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        cols = ["event_id", "user_id", "sec", "dim_id", "dim_sec"]
-
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts).sort_values(["sec", "tag", "seq"])
-            d_id, d_sec = state.get if state.exists else (-1, -1)
+        def step(key, pdf, state):
+            pdf = pdf.sort_values(["sec", "tag", "seq"])
+            d_id, d_sec = state or (-1, -1)
             out = []
             for sec, tag, eid, did in zip(
                 pdf["sec"], pdf["tag"], pdf["event_id"], pdf["dim_id"]
@@ -3149,15 +2733,10 @@ class AsofEnrichOp:
                     d_id, d_sec = int(did), int(sec)
                 else:
                     out.append((int(eid), key[0], int(sec), d_id, d_sec))
-            state.update((d_id, d_sec))
-            yield pd.DataFrame(out, columns=cols)
+            return (d_id, d_sec), out
 
-        return self._base(df).groupBy("user_id").applyInPandasWithState(
-            update,
-            self._OUT,
-            "d_id long, d_sec long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+        return _keyed_fold(
+            self._base(df), ["user_id"], self._OUT, "d_id long, d_sec long", step
         )
 
 
@@ -3242,22 +2821,11 @@ class PrioritySampleOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         k = self.k
-        cols = [
-            "source", "n_seen", "sample_ids", "sample_weights", "sample_priorities"
-        ]
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts)
-            if state.exists:
-                nps, hs, ids, ws, n = state.get
+        def step(key, pdf, state):
+            if state:
+                nps, hs, ids, ws, n = state
                 tuples = list(zip(nps, hs, ids, ws))
             else:
                 tuples, n = [], 0
@@ -3268,30 +2836,15 @@ class PrioritySampleOp:
             tuples.sort()
             tuples = tuples[:k]
             n += len(pdf)
-            state.update((
-                [t[0] for t in tuples],
-                [t[1] for t in tuples],
-                [t[2] for t in tuples],
-                [t[3] for t in tuples],
-                n,
-            ))
-            yield pd.DataFrame(
-                [(
-                    key[0],
-                    n,
-                    [t[2] for t in tuples],
-                    [t[3] for t in tuples],
-                    [-t[0] for t in tuples],
-                )],
-                columns=cols,
-            )
+            nps, hs, ids, ws = ([t[j] for t in tuples] for j in range(4))
+            return (nps, hs, ids, ws, n), [(key[0], n, ids, ws, [-p for p in nps])]
 
-        return self._base(df).groupBy("source").applyInPandasWithState(
-            update,
+        return _keyed_fold(
+            self._base(df),
+            ["source"],
             self._OUT,
             "nps array<long>, hs array<long>, ids array<long>, ws array<long>, n long",
-            "update",
-            GroupStateTimeout.NoTimeout,
+            step,
         )
 
 
@@ -3350,21 +2903,12 @@ class CompletenessMonitorOp:
         ).select("key", "column_name", "n_rows", "n_missing")
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         names = [c for c, _ in self.fields]
         nf = len(names)
-        cols = ["key", "column_name", "n_rows", "n_missing"]
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts)
-            if state.exists:
-                n, ms = state.get
+        def step(key, pdf, state):
+            if state:
+                n, ms = state
                 ms = list(ms)
             else:
                 n, ms = 0, [0] * nf
@@ -3372,16 +2916,8 @@ class CompletenessMonitorOp:
             for fl in pdf["fl"]:
                 for i in range(nf):
                     ms[i] += int(fl[i])
-            state.update((n, ms))
-            yield pd.DataFrame(
-                [(key[0], names[i], n, ms[i]) for i in range(nf)],
-                columns=cols,
-            )
+            return (n, ms), [(key[0], names[i], n, ms[i]) for i in range(nf)]
 
-        return self._base(df).groupBy("key").applyInPandasWithState(
-            update,
-            self._OUT,
-            "n long, ms array<long>",
-            "update",
-            GroupStateTimeout.NoTimeout,
+        return _keyed_fold(
+            self._base(df), ["key"], self._OUT, "n long, ms array<long>", step
         )

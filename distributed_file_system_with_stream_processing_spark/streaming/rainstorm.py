@@ -24,13 +24,14 @@ design.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from distributed_file_system_with_stream_processing_spark.streaming.ops import (
     AggregateOp,
-    Op,
     StatefulCountOp,
     TransformOp,
     WindowedCountOp,
@@ -58,7 +59,11 @@ class RainStormJob:
     the cluster, not the job code.
     """
 
-    def __init__(self, op1: Op, op2: Op):
+    def __init__(
+        self,
+        op1: Callable[[DataFrame], DataFrame],
+        op2: Callable[[DataFrame], DataFrame],
+    ):
         self.op1 = op1
         self.op2 = op2
 
@@ -671,6 +676,18 @@ def bpe_tokenize_stream(
     )
 
 
+def _probe(index_sink, batch: DataFrame, cols: list[str]) -> DataFrame:
+    """The indexed streams' probe side: the index snapshot ∪ this
+    micro-batch's own rows, so within-batch pairs resolve by the same
+    rule as cross-batch ones. Before the index's first write there is
+    no snapshot, and the batch alone is the probe."""
+    own = batch.select(*cols)
+    try:
+        return index_sink.snapshot(batch.sparkSession).select(*cols).unionByName(own)
+    except FileNotFoundError:
+        return own
+
+
 def semdedup_indexed_stream(
     vec_stream: DataFrame,
     cents: list[list[float]],
@@ -714,19 +731,18 @@ def semdedup_indexed_stream(
     """
     from distributed_file_system_with_stream_processing_spark.operators import clustering as C
 
+    cols = ["id", "v", "cluster", "nrm"]
+
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         prepared = C.semdedup_prepare_index(batch_df, cents)
         prepared.persist()
         try:
-            idx = index_sink.snapshot(spark).select("id", "v", "cluster", "nrm")
-            probe = idx.unionByName(prepared.select("id", "v", "cluster", "nrm"))
-        except FileNotFoundError:
-            probe = prepared.select("id", "v", "cluster", "nrm")
-        verdicts = C.semdedup_gate(batch_df, cents, probe, threshold=threshold)
-        result_sink.apply_batch(verdicts, batch_id)
-        index_sink.apply_batch(prepared.select("id", "v", "cluster", "nrm"), batch_id)
-        prepared.unpersist()
+            probe = _probe(index_sink, prepared, cols)
+            verdicts = C.semdedup_gate(batch_df, cents, probe, threshold=threshold)
+            result_sink.apply_batch(verdicts, batch_id)
+            index_sink.apply_batch(prepared.select(*cols), batch_id)
+        finally:
+            prepared.unpersist()
 
     return (
         vec_stream.writeStream.foreachBatch(handle)
@@ -866,15 +882,10 @@ def substring_indexed_stream(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         w = _window_hashes(batch_df)
         w.persist()
         try:
-            try:
-                idx = index_sink.snapshot(spark).select("h", "doc_id")
-                probe = idx.unionByName(w.select("h", "doc_id"))
-            except FileNotFoundError:
-                probe = w.select("h", "doc_id")
+            probe = _probe(index_sink, w, ["h", "doc_id"])
             mh = probe.groupBy("h").agg(F.min("doc_id").alias("first_id"))
             verdicts = (
                 w.join(mh, "h")
@@ -994,11 +1005,7 @@ def effective_tokens_stream(
         ).select("doc_id", "band", "key")
         banded.persist()
         try:
-            try:
-                idx = index_sink.snapshot(spark).select("doc_id", "band", "key")
-                probe = idx.unionByName(banded)
-            except FileNotFoundError:
-                probe = banded
+            probe = _probe(index_sink, banded, ["doc_id", "band", "key"])
             x, y = banded.alias("x"), probe.alias("y")
             edges = (
                 x.join(
@@ -1096,15 +1103,10 @@ def ann_indexed_stream(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         prepared = C.ivf_index_prepare(batch_df, cents)
         prepared.persist()
         try:
-            try:
-                idx = index_sink.snapshot(spark).select("id", "v", "cell")
-                probe = idx.unionByName(prepared.select("id", "v", "cell"))
-            except FileNotFoundError:
-                probe = prepared.select("id", "v", "cell")
+            probe = _probe(index_sink, prepared, ["id", "v", "cell"])
             results = C.ivf_index_query(
                 batch_df, cents, probe, k=k, probe_cells=probe_cells
             ).select(

@@ -403,6 +403,106 @@ def test_merge_pairs_disjoint_equals_sequential_for_any_batch(spark, words, rule
         assert got[w] == expect, (w, rules, got[w], expect)
 
 
+# -- stateful-op folds driven without Spark --------------------------------
+
+
+class _FakeState:
+    """The slice of GroupState a NoTimeout fold touches."""
+
+    def __init__(self):
+        self.exists = False
+        self._v = None
+        self.hasTimedOut = False
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v = tuple(v)
+        self.exists = True
+
+
+class _StubDF:
+    """Stands in for a streaming DataFrame: every projection returns
+    itself, and the grouped ``applyInPandasWithState`` call records the
+    closure instead of planning it."""
+
+    isStreaming = True
+
+    def __init__(self):
+        self.captured = {}
+
+    def selectExpr(self, *_, **__):
+        return self
+
+    def groupBy(self, *_):
+        return self
+
+    def applyInPandasWithState(self, fn, *a, **k):
+        self.captured["fn"] = fn
+        self.captured["args"] = a
+
+
+def _capture_update(op):
+    """The REAL update closure (the exact code Spark runs) that
+    ``op.stream_apply`` hands to applyInPandasWithState."""
+    stub = _StubDF()
+    op.stream_apply(stub)
+    return stub.captured["fn"]
+
+
+def test_keyed_fold_owns_the_state_protocol():
+    """_keyed_fold without Spark: a key's first step sees None, the
+    state tuple round-trips between calls, all-empty chunks emit an
+    empty frame with out_schema's columns and leave state alone, and a
+    lone non-empty chunk reaches step without a copy."""
+    import pandas as pd
+
+    from distributed_file_system_with_stream_processing_spark.streaming.ops import (
+        _columns,
+        _keyed_fold,
+    )
+
+    calls = []
+
+    def step(key, pdf, state):
+        calls.append((state, pdf))
+        n = (state[0] if state else 0) + len(pdf)
+        return (n, [key[0]] * n), [(key[0], n)]
+
+    stub = _StubDF()
+    _keyed_fold(stub, ["k"], "k string, n long", "n long, seen array<string>", step)
+    update = stub.captured["fn"]
+    assert stub.captured["args"][:3] == ("k string, n long", "n long, seen array<string>", "update")
+
+    empty = pd.DataFrame({"k": []})
+    chunk = pd.DataFrame({"k": ["a", "a"]})
+    st_ = _FakeState()
+    [out] = update(("a",), iter([empty, chunk]), st_)
+    assert calls[0][0] is None
+    assert calls[0][1] is chunk
+    assert out.values.tolist() == [["a", 2]]
+    assert st_.get == (2, ["a", "a"])
+
+    [out] = update(("a",), iter([chunk.iloc[:1], chunk]), st_)
+    assert calls[1][0] == (2, ["a", "a"])
+    assert len(calls[1][1]) == 3
+    assert out.values.tolist() == [["a", 5]]
+    assert st_.get == (5, ["a"] * 5)
+
+    [out] = update(("a",), iter([empty, empty]), st_)
+    assert list(out.columns) == ["k", "n"] and len(out) == 0
+    assert st_.get == (5, ["a"] * 5)
+    fresh = _FakeState()
+    [out] = update(("b",), iter([]), fresh)
+    assert list(out.columns) == ["k", "n"] and len(out) == 0
+    assert not fresh.exists
+    assert len(calls) == 2
+
+    assert _columns("a map<string,long>, b decimal(10,2), c long") == ["a", "b", "c"]
+
+
 # -- ReconcileOp state machine: any arrival order, any trigger split ------
 
 _recon_orders = st.lists(
@@ -435,20 +535,6 @@ def test_reconcile_update_converges_for_any_arrival_order(orders, seed, n_trigge
         ReconcileOp,
     )
 
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-            self.hasTimedOut = False
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-            self.exists = True
-
     op = ReconcileOp("prop", tol_cents=1)
     # build the record rows
     records = []
@@ -467,34 +553,17 @@ def test_reconcile_update_converges_for_any_arrival_order(orders, seed, n_trigge
     for b in [*bounds, len(records)]:
         chunks.append(records[prev:b])
         prev = b
-    states: dict[int, FakeState] = {}
+    states: dict[int, _FakeState] = {}
     sums: dict[tuple, int] = {}
 
-    # capture the REAL update closure (the exact code Spark runs):
-    # stream_apply builds it and hands it to applyInPandasWithState —
-    # intercept that call with a stub grouped-df
-    captured = {}
-
-    class _StubGrouped:
-        def applyInPandasWithState(self, fn, *a, **k):
-            captured["fn"] = fn
-            return None
-
-    class _StubDF:
-        isStreaming = True
-
-        def groupBy(self, *_):
-            return _StubGrouped()
-
-    op.stream_apply(_StubDF())
-    update = captured["fn"]
+    update = _capture_update(op)
 
     for chunk in chunks:
         by_key: dict[int, list] = {}
         for r in chunk:
             by_key.setdefault(r[0], []).append(r)
         for key, rs in by_key.items():
-            st_ = states.setdefault(key, FakeState())
+            st_ = states.setdefault(key, _FakeState())
             pdf = pd.DataFrame(rs, columns=["order_key", "kind", "priority", "cents"])
             for out in update((key,), iter([pdf]), st_):
                 for _, row in out.iterrows():
@@ -552,20 +621,6 @@ def test_reconcile_duplicate_headers_match_batch_max(orders, seed, n_triggers):
         ReconcileOp,
     )
 
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-            self.hasTimedOut = False
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-            self.exists = True
-
     op = ReconcileOp("dup", tol_cents=1)
     records = []
     for key, headers, lines in orders:
@@ -583,30 +638,16 @@ def test_reconcile_duplicate_headers_match_batch_max(orders, seed, n_triggers):
         chunks.append(records[prev:b])
         prev = b
 
-    captured = {}
+    update = _capture_update(op)
 
-    class _StubGrouped:
-        def applyInPandasWithState(self, fn, *a, **k):
-            captured["fn"] = fn
-            return None
-
-    class _StubDF:
-        isStreaming = True
-
-        def groupBy(self, *_):
-            return _StubGrouped()
-
-    op.stream_apply(_StubDF())
-    update = captured["fn"]
-
-    states: dict[int, FakeState] = {}
+    states: dict[int, _FakeState] = {}
     sums: dict[tuple, int] = {}
     for chunk in chunks:
         by_key: dict[int, list] = {}
         for r in chunk:
             by_key.setdefault(r[0], []).append(r)
         for key, rs in by_key.items():
-            st_ = states.setdefault(key, FakeState())
+            st_ = states.setdefault(key, _FakeState())
             pdf = pd.DataFrame(rs, columns=["order_key", "kind", "priority", "cents"])
             for out in update((key,), iter([pdf]), st_):
                 for _, row in out.iterrows():
@@ -655,39 +696,8 @@ def test_error_burst_update_counts_closed_runs(seq, n_triggers, seed):
         ErrorBurstOp,
     )
 
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-            self.hasTimedOut = False
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-            self.exists = True
-
     op = ErrorBurstOp("prop")
-    captured = {}
-
-    class _StubGrouped:
-        def applyInPandasWithState(self, fn, *a, **k):
-            captured["fn"] = fn
-            return None
-
-    class _StubDF:
-        isStreaming = True
-
-        def selectExpr(self, *_, **__):
-            return self
-
-        def groupBy(self, *_):
-            return _StubGrouped()
-
-    op.stream_apply(_StubDF())
-    update = captured["fn"]
+    update = _capture_update(op)
 
     rows = [
         (i, "error" if is_err else "view", i)  # (sec, type, event_id)
@@ -700,7 +710,7 @@ def test_error_burst_update_counts_closed_runs(seq, n_triggers, seed):
         chunks.append(rows[prev:b])
         prev = b
 
-    st_ = FakeState()
+    st_ = _FakeState()
     got: dict[int, int] = {}
     for chunk in chunks:
         if not chunk:
@@ -735,38 +745,7 @@ def _drive_attribution(op, rows, n_triggers, seed):
 
     import pandas as pd
 
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-            self.hasTimedOut = False
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-            self.exists = True
-
-    captured = {}
-
-    class _StubGrouped:
-        def applyInPandasWithState(self, fn, *a, **k):
-            captured["fn"] = fn
-            return None
-
-    class _StubDF:
-        isStreaming = True
-
-        def selectExpr(self, *_, **__):
-            return self
-
-        def groupBy(self, *_):
-            return _StubGrouped()
-
-    op.stream_apply(_StubDF())
-    update = captured["fn"]
+    update = _capture_update(op)
 
     rng = random.Random(seed)
     bounds = sorted(rng.randrange(len(rows) + 1) for _ in range(n_triggers - 1))
@@ -775,7 +754,7 @@ def _drive_attribution(op, rows, n_triggers, seed):
         chunks.append(rows[prev:b])
         prev = b
 
-    st_ = FakeState()
+    st_ = _FakeState()
     got: dict[str, int] = {}
     val_col = None
     for chunk in chunks:

@@ -759,6 +759,42 @@ def test_semdedup_indexed_stream_incremental_index(spark, tmp_path):
     assert index_sink.snapshot(spark).count() == len(ids)
 
 
+def test_semdedup_indexed_stream_unpersists_batch_when_a_sink_fails(spark, tmp_path):
+    """A sink write that fails mid-batch must not leave the batch's
+    prepared (persisted) vectors cached: the failing micro-batch ends
+    with the same persistent RDDs it started with."""
+    from pyspark.errors import StreamingQueryException
+
+    from distributed_file_system_with_stream_processing_spark.sinks.upsert import KeyedUpsertSink
+    from distributed_file_system_with_stream_processing_spark.sources.tables import load_table
+    from distributed_file_system_with_stream_processing_spark.streaming.rainstorm import (
+        semdedup_indexed_stream,
+    )
+    from tests.conftest import SF_SMOKE
+
+    class FailingSink:
+        def apply_batch(self, df, batch_id):
+            df.count()  # the prepared block is materialized by now
+            raise RuntimeError("sink unavailable")
+
+    emb = load_table(spark, SF_SMOKE, "embeddings").limit(40)
+    src = str(tmp_path / "vecs")
+    emb.coalesce(1).write.parquet(src)
+    cents = [[1.0] * 64, [-1.0] * 64]
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    q = semdedup_indexed_stream(
+        spark.readStream.schema(emb.schema).parquet(src),
+        cents,
+        KeyedUpsertSink(str(tmp_path / "idx"), key="id", order_col="id"),
+        FailingSink(),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
 def test_bigram_ppl_stream_matches_batch(spark, tmp_path):
     """Streaming bigram-LM scoring against a persisted corpus-scale
     model table: state after streaming the corpus in two batches must

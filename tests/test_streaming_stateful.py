@@ -270,18 +270,12 @@ def test_running_topk_batch_twin(spark):
 
 
 def test_running_topk_transform_with_state(spark, dirs, tmp_path):
-    """transformWithStateInPandas top-k: state (the k best values per
-    key) survives across triggers AND across a checkpoint restart; the
-    final emission equals the batch-twin window rank over everything
-    ingested.
-
-    The TWS Python state server speaks protobuf; skip (not fail) where
-    the protobuf wheel isn't available — the operator's logic is still
-    covered by the batch twin above.
+    """Running top-k stream into an append-mode parquet sink: state
+    (the k best values per key) survives across triggers AND across a
+    checkpoint restart; the final emission equals the batch-twin
+    window rank over everything ingested.
     """
     import os
-
-    pytest.importorskip("google.protobuf")
 
     op = O.RunningTopKOp(key="event_type", value_col="value", k=3)
 
