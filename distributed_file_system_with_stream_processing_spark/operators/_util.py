@@ -55,8 +55,8 @@ def plan_ckpt(df: DataFrame) -> DataFrame:
     lineage — so at 100 TB set the session conf
     ``spark.dfsp.reliableCheckpoint=true`` (and
     ``sparkContext.setCheckpointDir``) to route every plan-level
-    truncation through the fault-tolerant ``checkpoint()`` instead,
-    exactly like ``operators.dedup._ckpt``'s explicit flag. Nothing
+    truncation through the fault-tolerant ``checkpoint()`` instead.
+    Every lineage truncation in the package goes through here. Nothing
     persists across runs either way: both forms are recomputed and
     rewritten on every invocation.
     """

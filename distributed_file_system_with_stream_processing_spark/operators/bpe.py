@@ -377,7 +377,7 @@ def bpe_train_batched(
             # DRIVER heap OOMs near ~25 jobs at sf0.1 (measured);
             # truncating lineage per job keeps the plan one fold deep
             # regardless of vocab budget (the connected-components
-            # discipline, operators/dedup._ckpt).
+            # discipline, operators/_util.plan_ckpt).
             col = merge_pairs_disjoint(
                 F.col("syms"), [(c["a"], c["b"]) for c in accepted]
             )

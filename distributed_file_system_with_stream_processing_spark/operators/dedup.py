@@ -376,29 +376,11 @@ def simhash_pairs(
     )
 
 
-def _ckpt(df: DataFrame, reliable: bool) -> DataFrame:
-    """Lineage truncation for iterative plans. ``localCheckpoint`` is
-    executor-local — fast, but a lost executor kills the truncated
-    lineage, so at 100 TB use ``reliable=True`` (fault-tolerant
-    ``checkpoint()`` to the session's checkpoint dir, which the caller
-    must have set via ``sparkContext.setCheckpointDir``). The session
-    conf ``spark.dfsp.reliableCheckpoint=true`` forces the reliable
-    path with no per-call flag — the same switch
-    ``operators._util.plan_ckpt`` reads, so one deployment setting
-    covers every truncation site."""
-    from distributed_file_system_with_stream_processing_spark.operators._util import (
-        plan_ckpt,
-    )
-
-    return df.checkpoint(eager=True) if reliable else plan_ckpt(df)
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "doc_id_a",
     dst: str = "doc_id_b",
     max_iter: int = 15,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -420,10 +402,11 @@ def connected_components(
     components (doc A ~ B ~ C ~ … pile-ups). The driver loop only
     checks a one-row converged probe; all data stays distributed.
     Lineage is truncated each round (else the plan grows
-    exponentially); pass ``reliable_checkpoint=True`` at scale — see
-    ``_ckpt``. Returns (node, cluster_id) with cluster_id = min node
-    id in the component; nodes with no edge are not emitted (same
-    contract as before).
+    exponentially) through ``_util.plan_ckpt``, so the session conf
+    ``spark.dfsp.reliableCheckpoint=true`` makes every truncation
+    fault-tolerant at scale. Returns (node, cluster_id) with
+    cluster_id = min node id in the component; nodes with no edge are
+    not emitted (same contract as before).
 
     r9 size gate: below ``_util.GATE_MAX_ROWS`` edges (the SAME bound
     under which the engine already ships candidate-pair tables to the
@@ -442,7 +425,7 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    e = _ckpt(e, reliable_checkpoint)
+    e = _util.plan_ckpt(e)
     if e.limit(_util.GATE_MAX_ROWS + 1).count() <= _util.GATE_MAX_ROWS:
         # r10 (advice items): fetch the two key columns as Arrow —
         # columnar, no per-row Row objects or dict-of-field churn, a
@@ -542,7 +525,7 @@ def connected_components(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        new_e = _ckpt(new_e, reliable_checkpoint)
+        new_e = _util.plan_ckpt(new_e)
         # Fixed point: edge sets equal. Both sides are DISTINCT sets,
         # so |new_e| = |e| AND new_e \ e = ∅ ⟺ new_e = e. The cheap
         # (count, hash-sum) fingerprint gates the exact probe: a

@@ -1,7 +1,6 @@
-"""Round-9 staging (FRONTED IN ROUND 10): fully-oracled twins for the
-two sketch families that were rows-only by necessity — distinct counts
+"""Fully-oracled twins for the two sketch families that were rows-only by necessity — distinct counts
 (HLL internals aren't portable) and approximate percentiles (GK
-internals aren't portable). Both staged queries are DETERMINISTIC
+internals aren't portable). Both sketch queries are DETERMINISTIC
 sketches, so the ESTIMATE itself is a pure integer function of the
 data and carries a full DuckDB value-hash oracle:
 
@@ -22,10 +21,8 @@ LogHistQuantileOp / BottomKSampleOp / MinHashSketchOp in
 streaming/ops.py), so op-vs-query parity holds by construction — the
 attribution-family pattern from r8.
 
-NOT yet imported by plans/registry.py: the r9 driver front is at its
-50-row cap (wave-3 conversions), so these carry pytest-run DuckDB
-oracle checks at sf0.001 + sf0.01 (tests/test_staged_queries.py runs
-the EXACT driver compare) and take front slots in round 10.
+Sketch-accuracy checks against the exact answers live in
+tests/test_staged_queries.py.
 """
 
 from __future__ import annotations

@@ -1,5 +1,4 @@
-"""Round-9 session-3 staging (FRONT CANDIDATES FOR ROUND 10): the
-KMV SET-OPERATION family plus the weighted sample and two more
+"""The KMV SET-OPERATION family plus the weighted sample and two more
 log-histogram faces — all fully oracled, all deterministic-sketch
 discipline (the estimate is a pure integer function of the data, so
 DuckDB reproduces it bit-for-bit).
@@ -26,11 +25,8 @@ DuckDB reproduces it bit-for-bit).
   user lifetime (last−first event) percentile sketch; tz-free
   arithmetic calendar (epoch-week), the events_dow_hour convention.
 
-NOT yet imported by plans/registry.py: the r9 driver front is at its
-50-row cap, so these carry pytest-run DuckDB oracle checks at
-sf0.001 + sf0.01 (tests/test_staged_queries.py runs the EXACT driver
-compare) and are candidates for round-10 front slots next to the
-llm_ops23 six.
+Sketch-accuracy checks against the exact answers live in
+tests/test_staged_queries.py.
 """
 
 from __future__ import annotations
@@ -481,7 +477,7 @@ _IA_QS = (50, 95)
 
 def _loghist_sql(base_select: str, key_out: str, qs: tuple[int, ...]) -> str:
     """DuckDB mirror of LogHistQuantileOp's integer rank walk, shared
-    with the staged order_percentiles_loghist: base_select must yield
+    with order_percentiles_loghist: base_select must yield
     (k, cents)."""
     return f"""
 WITH base AS ({base_select}),

@@ -1,5 +1,4 @@
-"""Round-9 session-3 staging, wave 2 (FRONT CANDIDATES FOR ROUND 10):
-the DATA-QUALITY VALIDATOR family — the ingest-gate audits a pipeline
+"""The DATA-QUALITY VALIDATOR family — the ingest-gate audits a pipeline
 owner runs on every drop before it is allowed near training, plus the
 weighted-quantile face of the log-histogram sketch.
 
@@ -24,9 +23,7 @@ weighted-quantile face of the log-histogram sketch.
   segment (vectors whose document is gone) — the stale-feature-store
   detector.
 
-All five carry full DuckDB value-hash oracles and run in
-tests/test_staged_queries.py at sf0.001 + sf0.01 (the EXACT driver
-compare), staged behind the r9 front cap like llm_ops23/24.
+All five carry full DuckDB value-hash oracles.
 """
 
 from __future__ import annotations
@@ -446,7 +443,7 @@ orphans AS (
 all_ AS (SELECT * FROM per_source UNION ALL SELECT * FROM orphans)
 SELECT segment, CAST(n_rows AS BIGINT) AS n_rows,
        CAST(n_matched AS BIGINT) AS n_matched,
-       ((n_rows - n_matched) * 1000000) // n_rows AS missing_micro
+       CAST(((n_rows - n_matched) * 1000000) // n_rows AS BIGINT) AS missing_micro
 FROM all_
 """
 

@@ -1,5 +1,4 @@
-"""Round-9 session-3 staging, wave 3 (FRONT CANDIDATES FOR ROUND 10):
-the TIME-BUCKETED sketch family — KMV distinct sketches per calendar
+"""The TIME-BUCKETED sketch family — KMV distinct sketches per calendar
 cell plus the SKETCH ROLLUP: coarser windows answered by MERGING the
 per-cell sketches instead of rescanning raw data (the pre-aggregated
 theta-sketch pattern of OLAP stores). The min-merge lemma — the
@@ -17,9 +16,6 @@ bit-for-bit.
   (array math on the cell table; the raw corpus is touched exactly
   once, in the weekly CTE). The oracle computes the window sketch
   directly from raw rows — equality IS the min-merge lemma.
-
-Staged behind the r9 front cap like llm_ops23/24/25: EXACT driver
-compare in pytest at sf0.001 + sf0.01, candidates for r10 slots.
 """
 
 from __future__ import annotations

@@ -693,7 +693,7 @@ def triangle_census(e: DataFrame) -> DataFrame:
     # r9 optimization: deg fans out to da/db/the wedge rollup and
     # dir_e to w1/w2/closing — six re-derivations of node- and
     # edge-scale tables. localCheckpoint materializes each once per
-    # invocation (the CC _ckpt stance; both stay candidate-scale at
+    # invocation (the CC plan_ckpt stance; both stay candidate-scale at
     # 100 TB), collapsing the census from 45 jobs / 147 stages /
     # 3327 tasks to 21 / 46 / 606 at sf0.1 (scripts/opt_runtime.py).
     deg = (
@@ -835,13 +835,14 @@ def khop_reach(e: DataFrame, seeds_below: int, max_hops: int) -> DataFrame:
             .join(known, "node", "left_anti")
             .select("node", F.lit(t).cast("long").alias("dist"))
         )
-        # truncate lineage per round (the connected_components _ckpt
+        # truncate lineage per round (the connected_components plan_ckpt
         # stance): `known` references itself twice per round (expand +
         # left-anti), so without truncation the plan tree doubles per
         # hop — 164 exchanges in the audited plan at 3 hops. The
         # checkpoint materializes only the frontier (blast-radius
-        # scale); at 100 TB swap localCheckpoint for a reliable
-        # checkpoint dir exactly as operators/dedup._ckpt documents.
+        # scale); at 100 TB the spark.dfsp.reliableCheckpoint conf
+        # makes it a reliable checkpoint, as operators/_util.plan_ckpt
+        # documents.
         nxt = nxt.transform(_plan_ckpt)
         known = known.unionByName(nxt)
         frontier = nxt

@@ -2,173 +2,57 @@
 
 ``__spark_entry__.py`` re-exports these; the driver runs each query at
 sf0.01 against its DuckDB oracle (row-count + schema + value hash).
+Every public module of this package is a plan module: its ``QUERIES``
+and ``ORACLES`` dicts are merged here, found by discovery so that no
+module can be left out by hand.
 """
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from distributed_file_system_with_stream_processing_spark.plans import (
-    analytics,
-    analytics_ext,
-    analytics_more,
-    analytics_tpch2,
-    llm_ops,
-    llm_ops2,
-    llm_ops3,
-    llm_ops4,
-    llm_ops5,
-    llm_ops6,
-    llm_ops7,
-    llm_ops8,
-    llm_ops9,
-    llm_ops10,
-    llm_ops11,
-    llm_ops12,
-    llm_ops13,
-    llm_ops14,
-    llm_ops15,
-    llm_ops16,
-    llm_ops17,
-    llm_ops18,
-    llm_ops19,
-    llm_ops20,
-    llm_ops21,
-    llm_ops22,
-    rainstorm_queries,
-)
-
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-_MODULES = (
-    analytics,
-    analytics_ext,
-    analytics_tpch2,
-    analytics_more,
-    rainstorm_queries,
-    llm_ops,
-    llm_ops2,
-    llm_ops3,
-    llm_ops4,
-    llm_ops5,
-    llm_ops6,
-    llm_ops7,
-    llm_ops8,
-    llm_ops9,
-    llm_ops10,
-    llm_ops11,
-    llm_ops12,
-    llm_ops13,
-    llm_ops14,
-    llm_ops15,
-    llm_ops16,
-    llm_ops17,
-    llm_ops18,
-    llm_ops19,
-    llm_ops20,
-    llm_ops21,
-    llm_ops22,
-)
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-for _m in _MODULES:
+for _info in pkgutil.iter_modules([str(Path(__file__).parent)]):
+    if _info.name.startswith("_") or _info.name == "registry":
+        continue
+    _m = importlib.import_module(f"{__package__}.{_info.name}")
     for _name, _fn in _m.QUERIES.items():
         if _name in QUERIES:
             raise ValueError(f"duplicate query name {_name!r}")
         QUERIES[_name] = _fn
     ORACLES.update(_m.ORACLES)
 
-# The driver verifies queries in enumeration order and caps the run at
-# 50 rows/round. _FRONT therefore holds EXACTLY
-# {queries with no driver row yet} ∪ {queries whose plan or oracle
-# changed since their last green driver row}, ≤50 entries — everything
-# already green cedes its slot (r5 verdict item 6; the r5 overflow to
-# 51 entries cost supplier_single_source_parts its row).
+# The driver verifies queries in enumeration order and caps a run at
+# 50 rows, so _FRONT holds exactly the queries with no driver row yet
+# plus those whose value changed since their last green row (≤ 50).
 _FRONT = [
-    # --- r9 front: {new this round} ∪ {VALUE-changed since their last
-    # green driver row} — 50 entries, exactly at the 50-row cap (the
-    # r5 overflow precedent: an over-full front silently drops
-    # entries). Changed-but-output-identical queries cede their slot
-    # this round, each with a proof obligation discharged by the r9
-    # builder's own sf0.001+sf0.01 oracle-parity runs (fails: 0):
-    #   - embedding_neardup / embedding_neardup_uncapped: the r9 NaN
-    #     pre-filter (plan + oracle changed together) drops only
-    #     NaN-bearing vectors; the driver testdata has none, so the
-    #     pair set is bit-identical to the r8 green rows.
-    #   - embedding_intrinsic_dim: decimal(38,0) promotion only
-    #     changes behavior past ~9.2e6 points (BIGINT wrap); sf0.01
-    #     has ~6k.
-    #   - minhash_threshold_sweep: input est_jaccard is truncating
-    #     now, but agree = round(est·12) recovers identically
-    #     (error < 1.2e-5 « 0.5) — output bit-identical.
-    #   - rows-only ann_pq_topk / ann_opq_topk: session-persisted
-    #     codebooks are bit-identical to inline training
-    #     (deterministic trainer); recall floors pinned in pytest.
-    #   - rows-only bpe_fertility_by_lang: truncating conversion
-    #     mirrored in its pytest reference (no oracle row to refresh).
-    # 1. r9 new query
-    "embedding_neardup_wide",
-    # 1b. spare slot: the DEFAULT banded path re-fronts alongside its
-    #     new wide twin (NaN pre-filter identity argument above holds,
-    #     but it is the headline dedup recipe)
-    "embedding_neardup",
-    # 2. flagship re-front: semantic_dedup inherits the banded NaN
-    #    pre-filter (same no-NaN identity argument, but it is the
-    #    variance-watch query — cheap assurance)
-    "semantic_dedup",
-    # 3. wave-3 round-quotient conversions (plan AND oracle changed
-    #    together; every entry re-verified at sf0.001 + sf0.01 by the
-    #    builder before fronting)
-    "events_error_adjacency",
-    "part_size_price_slope",
-    "orders_value_cv_by_priority",
-    "docs_vocab_overlap_matrix",
-    "orders_monthly_growth",
-    "docs_gopher_rules",
-    "docs_gopher_by_source",
-    "docs_neardup_rate_by_source",
-    "doc_char_entropy",
-    "minhash_jaccard_estimate",
-    "embedding_norm_stats",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_ngram_jaccard_exact",
-    "lang_id_confusion",
-    "doc_repetition_score",
-    "embedding_label_centroids",
-    "q8_market_share",
-    "q17_small_quantity_revenue",
-    "nation_revenue_hhi",
-    "events_hourly_profile",
-    "events_type_overlap",
-    "supplier_fulfillment_lag",
-    "events_pareto_users",
-    "curation_funnel",
-    "minhash_containment",
-    "docs_pretokenize_stats",
-    "events_transition_matrix",
-    "source_temperature_mix",
-    "session_transition_matrix",
-    "corpus_zipf_fit",
-    "discount_quantity_slope",
-    "zipf_by_source",
-    "part_pair_lift",
-    "events_interarrival_stats",
-    "embedding_margin_stats",
-    "ngram_coverage_curve",
-    "neardup_triangle_stats",
-    "docs_ttr_profile",
-    "lang_source_contingency",
-    "embedding_dim_variance",
-    "lsh_recall_curve",
-    "docs_quality_dup_lift",
-    "quality_ppl_correlation",
-    "docs_char_class_profile",
-    "part_return_rates",
-    "customer_order_frequency",
+    "events_distinct_kmv",
+    "order_percentiles_loghist",
+    "docs_sample_bottomk",
+    "source_jaccard_minhash",
+    "docs_distinct_shingles_kmv",
+    "events_props_schema_census",
+    "events_audience_overlap_kmv",
+    "source_containment_kmv",
+    "split_leakage_kmv",
+    "docs_priority_sample",
+    "events_interarrival_loghist",
+    "user_lifetime_loghist",
+    "fk_integrity_audit",
+    "field_completeness_census",
+    "events_ingest_dup_rate",
+    "docs_byte_budget_percentiles",
+    "embedding_coverage_audit",
+    "events_weekly_distinct_kmv",
+    "events_distinct_rollup_kmv",
 ]
 
 _missing = [n for n in _FRONT if n not in QUERIES]

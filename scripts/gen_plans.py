@@ -283,27 +283,24 @@ AUDITED = [
     "docs_heaps_exponent_by_source",
     # round-9 addition
     "embedding_neardup_wide",
-    # staged for the r10 front (plans/llm_ops23.py)
+    # round-10 additions: sketch twins and data audits
     "events_distinct_kmv",
     "order_percentiles_loghist",
     "docs_sample_bottomk",
     "source_jaccard_minhash",
     "docs_distinct_shingles_kmv",
     "events_props_schema_census",
-    # staged for the r10 front, session 3 (plans/llm_ops24.py)
     "events_audience_overlap_kmv",
     "source_containment_kmv",
     "split_leakage_kmv",
     "docs_priority_sample",
     "events_interarrival_loghist",
     "user_lifetime_loghist",
-    # staged wave 2 (plans/llm_ops25.py)
     "fk_integrity_audit",
     "field_completeness_census",
     "events_ingest_dup_rate",
     "docs_byte_budget_percentiles",
     "embedding_coverage_audit",
-    # staged wave 3 (plans/llm_ops26.py)
     "events_weekly_distinct_kmv",
     "events_distinct_rollup_kmv",
 ]
@@ -386,20 +383,8 @@ def strip_initial_plans(plan: str) -> str:
 
 
 def main() -> None:
-    from distributed_file_system_with_stream_processing_spark.plans import (
-        llm_ops23,
-        llm_ops24,
-        llm_ops25,
-        llm_ops26,
-    )
-    from distributed_file_system_with_stream_processing_spark.plans.registry import (
-        QUERIES as _REGISTERED,
-    )
+    from distributed_file_system_with_stream_processing_spark.plans.registry import QUERIES
     from distributed_file_system_with_stream_processing_spark.session import get_spark
-
-    # staged-for-r10 queries (llm_ops23/24) get plan audits before
-    # they get front slots — same discipline as their pytest oracle runs
-    QUERIES = {**_REGISTERED, **llm_ops23.QUERIES, **llm_ops24.QUERIES, **llm_ops25.QUERIES, **llm_ops26.QUERIES}
 
     spark = get_spark(app_name="plans-audit", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")

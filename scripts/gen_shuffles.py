@@ -72,7 +72,10 @@ def main() -> None:
     # reuse bench.py's headline list without running it: parse the
     # literal from the module source so the two artifacts stay in sync
     src = inspect.getsource(bench_mod.main)
-    from distributed_file_system_with_stream_processing_spark.plans.registry import QUERIES
+    from distributed_file_system_with_stream_processing_spark.plans.registry import (
+        _FRONT,
+        QUERIES,
+    )
     from distributed_file_system_with_stream_processing_spark.session import get_spark
 
     headline = []
@@ -87,29 +90,9 @@ def main() -> None:
                 break
             if s.startswith('"') and s.rstrip(",").endswith('"'):
                 headline.append(s.rstrip(",").strip('"'))
-    # staged-for-r10 queries (plans/llm_ops23) join the census ahead
-    # of their registration — same early-evidence stance as gen_plans
-    from distributed_file_system_with_stream_processing_spark.plans import (
-        llm_ops23,
-        llm_ops24,
-        llm_ops25,
-        llm_ops26,
-    )
-
-    QUERIES = {
-        **QUERIES,
-        **llm_ops23.QUERIES,
-        **llm_ops24.QUERIES,
-        **llm_ops25.QUERIES,
-        **llm_ops26.QUERIES,
-    }
-    headline = (
-        [q for q in headline if q in QUERIES]
-        + sorted(llm_ops23.QUERIES)
-        + sorted(llm_ops24.QUERIES)
-        + sorted(llm_ops25.QUERIES)
-        + sorted(llm_ops26.QUERIES)
-    )
+    # fronted queries are off the headline list; census them too
+    headline = [q for q in headline if q in QUERIES]
+    headline += [q for q in _FRONT if q not in headline]
 
     spark = get_spark(app_name="shuffles", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")

@@ -8,10 +8,11 @@ measures both variants at sf0.1 AND sf1 (scripts/make_sf1.py data),
 NEARDUP_WIDEBAND_PROBE-style; the fix is applied only if it wins at
 sf1.
 
-Variants:
-- recompute (the shipped plan): truth and cand each derive shingles.
-- shared_ckpt: ONE (doc_id, sh array) table localCheckpointed, both
-  sides derive from it (same shingle values — _with_shingles output).
+Variants, both built from the production functions in plans/llm_ops8.py:
+- recompute: ``_lsh_recall(docs, sh=None)`` — truth and cand each
+  derive shingles.
+- shared_ckpt (the shipped plan): the registered ``lsh_recall_curve``,
+  ONE plan_ckpt-ed (doc_id, sh array) table feeding both sides.
 
 Usage: python scripts/lsh_recall_probe.py  # writes LSH_RECALL_PROBE.json
 """
@@ -28,104 +29,22 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 
-def shared_ckpt_variant(spark, sf_dir: str):
-    """lsh_recall_curve with the shingle table built once (checkpointed)."""
-    from pyspark.sql import functions as F
-
-    from distributed_file_system_with_stream_processing_spark.functions import text as T
-    from distributed_file_system_with_stream_processing_spark.operators import dedup as D
-    from distributed_file_system_with_stream_processing_spark.plans.llm_ops8 import (
-        _LSH_BINS,
-    )
+def run_variant(spark, sf_dir: str, variant: str):
+    """The registered lsh_recall_curve ("shared_ckpt"), or the same
+    body with truth and banding each deriving their own shingles
+    ("recompute")."""
+    from distributed_file_system_with_stream_processing_spark.plans import llm_ops8
     from distributed_file_system_with_stream_processing_spark.sources.tables import (
         load_table,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    sh = D._with_shingles(docs, "doc_id", "text", 3).localCheckpoint(eager=True)
-
-    # truth: ngram_jaccard_all_pairs body from the shared sh
-    sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    ex = (
-        sh.select("doc_id", F.explode_outer("sh").alias("shingle"))
-        .filter(F.col("shingle").isNotNull())
-    )
-    keep = (
-        ex.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= 50)
-        .select("shingle")
-    )
-    exk = ex.join(keep, "shingle", "left_semi")
-    a, b = exk.alias("a"), exk.alias("b")
-    shared = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_id_a"), F.col("b.doc_id").alias("doc_id_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_id_b"), F.col("n_sh").alias("n_b"))
-    truth = shared.join(sa, "doc_id_a").join(sb, "doc_id_b").select(
-        "doc_id_a", "doc_id_b",
-        (F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))).alias("_j"),
-    )
-
-    # cand: minhash banding from the same sh
-    exh = (
-        sh.select("doc_id", F.explode_outer("sh").alias("s"))
-        .filter(F.col("s").isNotNull())
-        .select("doc_id", T.hash32(F.col("s")).alias("h"))
-    )
-    params = [T.mh_params(k) for k in range(12)]
-    mins = exh.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(p[0]) * F.col("h") + F.lit(p[1])) % F.lit(T.MINHASH_PRIME)).alias(f"m{k}")
-            for k, p in enumerate(params)
-        ]
-    )
-    sig = mins.select("doc_id", F.array(*[F.col(f"m{k}") for k in range(12)]).alias("sig"))
-    r = 2
-    band_keys = F.transform(
-        F.sequence(F.lit(0), F.lit(5)),
-        lambda bnd: F.struct(
-            bnd.alias("band"),
-            F.md5(
-                F.array_join(
-                    F.transform(F.slice(F.col("sig"), bnd * r + 1, r), lambda x: x.cast("string")),
-                    "|",
-                )
-            ).alias("key"),
-        ),
-    )
-    banded = sig.select("doc_id", F.explode(band_keys).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    ba, bb = banded.alias("a"), banded.alias("b")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_id_a"), F.col("b.doc_id").alias("doc_id_b"))
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-        .withColumn("caught", F.lit(1))
-    )
-    binned = truth.join(cand, ["doc_id_a", "doc_id_b"], "left").select(
-        F.least(F.floor(F.col("_j") * _LSH_BINS).cast("long"), F.lit(_LSH_BINS - 1).cast("long")).alias("bin"),
-        F.coalesce("caught", F.lit(0)).alias("caught"),
-    )
-    return binned.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum("caught").cast("long").alias("n_caught"),
-        (F.expr("(sum(caught) * 1000000) div count(1)").cast("double") / 1e6).alias("recall"),
-    )
+    if variant == "shared_ckpt":
+        return llm_ops8.lsh_recall_curve(spark, sf_dir)
+    return llm_ops8._lsh_recall(load_table(spark, sf_dir, "documents"), sh=None)
 
 
 def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from distributed_file_system_with_stream_processing_spark.plans.registry import QUERIES
     from distributed_file_system_with_stream_processing_spark.session import get_spark
 
     spark = get_spark(app_name="lsh_recall_probe", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
@@ -142,11 +61,7 @@ def main() -> None:
             best = None
             for _ in range(2):
                 t0 = time.perf_counter()
-                df = (
-                    QUERIES["lsh_recall_curve"](spark, sf_dir)
-                    if variant == "recompute"
-                    else shared_ckpt_variant(spark, sf_dir)
-                )
+                df = run_variant(spark, sf_dir, variant)
                 df.write.format("noop").mode("overwrite").save()
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
@@ -154,8 +69,10 @@ def main() -> None:
             results.append(row)
             print(json.dumps(row), flush=True)
         # sanity: identical output rows between variants at this SF
-        a = {tuple(r) for r in QUERIES["lsh_recall_curve"](spark, sf_dir).collect()}
-        b = {tuple(r) for r in shared_ckpt_variant(spark, sf_dir).collect()}
+        a, b = (
+            {tuple(r) for r in run_variant(spark, sf_dir, v).collect()}
+            for v in ("recompute", "shared_ckpt")
+        )
         results.append({"sf": sf_name, "variants_equal": a == b})
         print(json.dumps(results[-1]), flush=True)
 

@@ -185,18 +185,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from distributed_file_system_with_stream_processing_spark.plans import (
-        llm_ops23,
-        llm_ops24,
-        llm_ops25,
-        llm_ops26,
-    )
-    from distributed_file_system_with_stream_processing_spark.plans.registry import (
-        QUERIES as _REGISTERED,
-    )
-
-    # staged-for-r10 queries rehearse like registered ones
-    QUERIES = {**_REGISTERED, **llm_ops23.QUERIES, **llm_ops24.QUERIES, **llm_ops25.QUERIES, **llm_ops26.QUERIES}
+    from distributed_file_system_with_stream_processing_spark.plans.registry import QUERIES
 
     out = []
     for q in (ONLY or QUERIES_UNDER_TEST):

@@ -109,9 +109,11 @@ def test_connected_components_high_diameter_chain(spark, monkeypatch):
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch):
-    """Fault-tolerant checkpoint mode (the 100 TB path) must produce
-    the identical clustering. Gate forced off: at 100 TB the edge set
-    exceeds the driver gate, so this is the loop's configuration."""
+    """Fault-tolerant checkpoint mode (the 100 TB path, switched on
+    by the spark.dfsp.reliableCheckpoint session conf) must produce the
+    identical clustering and write the checkpoint dir. Gate forced
+    off: at 100 TB the edge set exceeds the driver gate, so this is
+    the loop's configuration."""
     from distributed_file_system_with_stream_processing_spark.operators import _util
 
     monkeypatch.setattr(_util, "GATE_MAX_ROWS", 0)
@@ -124,10 +126,15 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch):
         r["node"]: r["cluster_id"]
         for r in D.connected_components(edges).collect()
     }
-    reliable = {
-        r["node"]: r["cluster_id"]
-        for r in D.connected_components(edges, reliable_checkpoint=True).collect()
-    }
+    spark.conf.set("spark.dfsp.reliableCheckpoint", "true")
+    try:
+        reliable = {
+            r["node"]: r["cluster_id"]
+            for r in D.connected_components(edges).collect()
+        }
+    finally:
+        spark.conf.unset("spark.dfsp.reliableCheckpoint")
+    assert any(p.is_file() for p in (tmp_path / "ckpt").rglob("*"))
     assert reliable == base == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 4: 4, 5: 4, 6: 4, 7: 4}
 
 

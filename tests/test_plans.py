@@ -231,6 +231,18 @@ def test_no_cartesian_or_loop_join_anywhere(spark):
         # broadcasts
         "orders_basket_size_profile",
         "part_name_token_price",
+        # |sources|-row MinHash sketch table self-joined on a strict
+        # inequality — the embedding_label_drift METADATA-scale shape;
+        # the corpus is touched once upstream in the (source, shingle) agg
+        "source_jaccard_minhash",
+        # KMV pair queries: the corpus is touched once in the
+        # (key, hash)-distinct agg; the loop join is the broadcast
+        # self-cross of the |keys|-row sketch table (|types| ≤ 5,
+        # |sources| = 20, |splits| = 3) on a strict inequality or a 1×2
+        # cross — all metadata-scale
+        "events_audience_overlap_kmv",
+        "source_containment_kmv",
+        "split_leakage_kmv",
     }
     for name, fn in QUERIES.items():
         plan = executed_plan(fn(spark, SF_SMOKE))
@@ -370,6 +382,10 @@ def test_no_heavy_expressions_in_scan_predicates(spark):
         "dedup_simhash",
         "doc_fingerprint",
         "doc_winnowing_fingerprint",
+        "source_jaccard_minhash",
+        "docs_distinct_shingles_kmv",
+        "source_containment_kmv",
+        "split_leakage_kmv",
     ]:
         plan = executed_plan(QUERIES[name](spark, SF_SMOKE))
         for ln in plan.splitlines():

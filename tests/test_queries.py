@@ -1,14 +1,20 @@
-"""Every registered query must match its DuckDB oracle at sf0.001.
+"""Every registered query must match its DuckDB oracle at sf0.001,
+and every fronted query also at sf0.01.
 
 This is a local pre-flight of the driver's t2 correctness gate.
 """
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_compare import compare
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _pairs():
@@ -20,6 +26,12 @@ def _pairs():
     return [(name, fn, ORACLES.get(name)) for name, fn in QUERIES.items()]
 
 
+def _front_oracled():
+    from distributed_file_system_with_stream_processing_spark.plans import registry as R
+
+    return [(n, R.QUERIES[n], R.ORACLES[n]) for n in R._FRONT if n in R.ORACLES]
+
+
 @pytest.mark.parametrize("name,fn,sql", _pairs(), ids=[p[0] for p in _pairs()])
 def test_query_matches_oracle(spark, duck, name, fn, sql):
     df = fn(spark, SF_SMOKE)
@@ -29,6 +41,18 @@ def test_query_matches_oracle(spark, duck, name, fn, sql):
         assert df.count() >= 0
         return
     ok, msg = compare(df, duck, sql, SF_SMOKE)
+    assert ok, f"{name}: {msg}"
+
+
+@pytest.mark.parametrize(
+    "name,fn,sql", _front_oracled(), ids=[p[0] for p in _front_oracled()]
+)
+def test_front_query_matches_oracle_sf0_01(spark, duck, name, fn, sql):
+    """A query takes a driver row only after matching its oracle at
+    sf0.001 (above) AND at the driver's own sf0.01."""
+    df = fn(spark, SF_ORACLE)
+    assert df.columns, f"{name}: empty schema"
+    ok, msg = compare(df, duck, sql, SF_ORACLE)
     assert ok, f"{name}: {msg}"
 
 
@@ -97,32 +121,17 @@ def test_approx_percentiles_accuracy(spark):
 def test_registry_front_loads_unchecked_queries():
     """The driver verifies queries in enumeration order and has capped
     at 50/round historically: the _FRONT list must (a) lead the
-    enumeration exactly, (b) contain every query that still lacks a
-    driver CORRECTNESS row (all round-3 additions), and (c) not exceed
-    the 50-entry cap, or the entries past it silently lose their shot
-    at a driver row."""
+    enumeration exactly, (b) contain every registered query that has
+    no row in any driver CORRECTNESS_r*.json, and (c) not exceed the
+    50-entry cap, or the entries past it silently lose their shot at a
+    driver row."""
     from distributed_file_system_with_stream_processing_spark.plans import registry as R
 
     names = list(R.QUERIES)
     assert names[: len(R._FRONT)] == R._FRONT
     assert len(R._FRONT) <= 50, len(R._FRONT)
-    # round 9 policy (refined from r6): _FRONT = {no driver row yet}
-    # ∪ {VALUE-changed since last green row}; changed-but-output-
-    # identical queries may cede their slot when the front is full,
-    # each with a proof obligation recorded in the registry comment.
-    must_front = {
-        # new this round (r9): no driver row yet
-        "embedding_neardup_wide",
-        # flagship re-fronts (banded NaN pre-filter)
-        "embedding_neardup",
-        "semantic_dedup",
-        # representative wave-3 conversions (plan AND oracle changed)
-        "docs_gopher_rules",
-        "dedup_minhash_lsh",
-        "corpus_zipf_fit",
-        "q8_market_share",
-        "nation_revenue_hhi",
-        "docs_char_class_profile",
-        "embedding_dim_variance",
-    }
-    assert must_front <= set(R._FRONT), must_front - set(R._FRONT)
+    checked = set()
+    for path in REPO.glob("CORRECTNESS_r*.json"):
+        checked |= set(json.loads(path.read_text()))
+    must_front = set(R.QUERIES) - checked
+    assert must_front <= set(R._FRONT), sorted(must_front - set(R._FRONT))

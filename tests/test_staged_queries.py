@@ -1,47 +1,15 @@
-"""Staged round-10 queries (plans/llm_ops23/24/25/26.py) —
-driver-grade oracle checks run in pytest until they take front
-slots in round 10.
+"""Sketch-accuracy and planted-defect checks for the sketch and audit
+queries of plans/llm_ops23/24/25/26.py.
 
-Runs the EXACT driver compare (tests/oracle_compare.compare) at
-sf0.001 AND sf0.01 — the same two scale factors the front discipline
-requires before a query may be fronted.
+Their oracle compares and plan invariants run with every other
+registered query in tests/test_queries.py and tests/test_plans.py;
+this file checks what an oracle cannot: that each estimate tracks the
+exact answer, and that each audit detects planted dirt.
 """
 
 from __future__ import annotations
 
-import pytest
-
-from tests.conftest import SF_SMOKE
-from tests.oracle_compare import compare
-
 SF_T2 = "/root/testdata/sf0.01"
-
-
-def _pairs():
-    from distributed_file_system_with_stream_processing_spark.plans import (
-        llm_ops23,
-        llm_ops24,
-        llm_ops25,
-        llm_ops26,
-    )
-
-    out = []
-    for mod in (llm_ops23, llm_ops24, llm_ops25, llm_ops26):
-        out.extend(
-            (name, fn, mod.ORACLES[name]) for name, fn in mod.QUERIES.items()
-        )
-    return out
-
-
-@pytest.mark.parametrize(
-    "sf_dir", [SF_SMOKE, SF_T2], ids=["sf0.001", "sf0.01"]
-)
-@pytest.mark.parametrize("name,fn,sql", _pairs(), ids=[p[0] for p in _pairs()])
-def test_staged_query_matches_oracle(spark, duck, name, fn, sql, sf_dir):
-    df = fn(spark, sf_dir)
-    assert df.columns, f"{name}: empty schema"
-    ok, msg = compare(df, duck, sql, sf_dir)
-    assert ok, f"{name}: {msg}"
 
 
 def test_kmv_estimate_sane(spark):
@@ -107,41 +75,6 @@ def test_loghist_percentiles_within_octave(spark):
     assert set(got) == set(exact)
     for k, est in got.items():
         assert exact[k] / 2 < est < exact[k] * 2, (k, est, exact[k])
-
-
-def test_staged_plans_no_cartesian_or_bad_loop_join(spark):
-    """The registry-wide plan invariant, applied to the staged set
-    before they take front slots: nothing cartesians; the only
-    loop join is source_jaccard_minhash's METADATA-scale broadcast
-    self-join of the |sources|-row sketch table on a strict
-    inequality (the embedding_label_drift shape) — BuildRight, the
-    corpus touched once upstream in the (source, shingle) agg.
-
-    When these queries are fronted in r10, add source_jaccard_minhash
-    to test_plans.test_no_cartesian_or_loop_join_anywhere's
-    allowed_loop set with the comment above.
-
-    The llm_ops24 KMV pair queries share the same shape: the corpus
-    is touched once in the (key, hash)-distinct agg; the only loop
-    join is the broadcast self-cross of the |keys|-row sketch table
-    (|types| ≤ 5, |sources| = 20, |splits| = 3) on a strict
-    inequality or a 1×2 cross — all metadata-scale, all BuildRight.
-    """
-    from tests.test_plans import executed_plan
-
-    allowed_loop = {
-        "source_jaccard_minhash",
-        "events_audience_overlap_kmv",
-        "source_containment_kmv",
-        "split_leakage_kmv",
-    }
-    for name, fn, _sql in _pairs():
-        plan = executed_plan(fn(spark, SF_SMOKE))
-        assert "CartesianProduct" not in plan, name
-        if name not in allowed_loop:
-            assert "BroadcastNestedLoopJoin" not in plan, name
-        elif "BroadcastNestedLoopJoin" in plan:
-            assert "BroadcastNestedLoopJoin BuildRight" in plan, name
 
 
 def test_audience_overlap_kmv_tracks_exact(spark):
@@ -362,32 +295,6 @@ def test_byte_budget_median_dominates_unweighted(spark):
                 exact = v * 100  # centichars
                 break
         assert exact / 2 < est < exact * 2, ((src, q), est, exact)
-
-
-def test_staged_no_heavy_expressions_in_scan_predicates(spark):
-    """The registry-wide InferFiltersFromGenerate guard, applied to
-    the compute-dense STAGED queries before they take front slots: no
-    scan-side Filter/FileScan may carry a higher-order-function
-    lambda (the single-partition shingle re-evaluation pathology —
-    the exact trap the session-2 source_jaccard fix priced at 3×)."""
-    from tests.test_plans import executed_plan
-
-    heavy = [
-        "source_jaccard_minhash",
-        "docs_distinct_shingles_kmv",
-        "source_containment_kmv",
-        "split_leakage_kmv",
-    ]
-    by_name = {name: fn for name, fn, _ in _pairs()}
-    for name in heavy:
-        plan = executed_plan(by_name[name](spark, SF_SMOKE))
-        for ln in plan.splitlines():
-            if "FileScan" in ln:
-                assert "lambdafunction" not in ln, (name, ln[:200])
-        scan_stage = plan.rsplit("Exchange", 1)[-1]
-        for ln in scan_stage.splitlines():
-            if "Filter" in ln:
-                assert "lambdafunction" not in ln, (name, ln[:200])
 
 
 def test_embedding_coverage_detects_planted_gaps(spark):
