@@ -74,183 +74,188 @@ def test_dim_joins_broadcast(spark, name):
     assert plan.count("SortMergeJoin") <= 1, plan
 
 
+# Brute-force ANN is by definition queries × base; its correct
+# 100 TB plan IS a nested-loop with the tiny query side broadcast
+# (the base side never shuffles). IVF's centroid assignment is the
+# same shape: every vector × K centroids with the metadata-scale
+# centroid table broadcast (fan-out bounded by K, never a shuffle).
+# Everything else must never loop-join, and nothing may ever
+# cartesian (no broadcast at all).
+ALLOWED_LOOP = {
+    "ann_cosine_topk",
+    "embedding_neardup_exact",
+    "ann_ivf_bucketed",
+    # int8 coarse pass is the same queries-broadcast brute-force shape
+    "ann_quantized_topk",
+    # PQ coarse pass: per-query LUT table broadcast onto the code
+    # table — the same queries-broadcast shape with 8-byte rows
+    "ann_pq_topk",
+    # OPQ = rotation map + the identical PQ coarse pass
+    "ann_opq_topk",
+    # random-negative fan-out: id-only base column × the 10-row
+    # broadcast query table (+ the inherited ANN brute pass)
+    "contrastive_pairs",
+    # tf-idf needs the global doc count N attached to every scored
+    # term: a 1-row global-aggregate broadcast. With a broadcast
+    # 1-row build side, BNLJ degenerates to "append a scalar
+    # column" — zero fan-out, stream side never shuffles. A
+    # synthetic constant equi-key does NOT avoid it: Catalyst
+    # constant-folds foldable join keys and plans the same BNLJ
+    # (verified empirically), so this IS the correct 100 TB shape.
+    "tfidf_top_terms",
+    # same 1-row global-total broadcast shape (Q11's grand-total
+    # scalar subquery; the perplexity LM's corpus-token total)
+    "q11_important_parts",
+    "docs_unigram_perplexity",
+    # same shape again: BM25's (N, total_len) corpus stats and
+    # DSIR's (r_tot, t_tot) grand totals are 1-row BuildRight
+    # broadcasts onto |Q|-row / 256-row metadata tables
+    "docs_bm25_score",
+    "dsir_importance_weights",
+    "dsir_resample_topk",
+    # PMI's (n_bg, n_uni) grand totals: the same 1-row BuildRight
+    # broadcast onto the vocab-scale gram table
+    "bigram_pmi_topk",
+    # same 1-row grand-total broadcast shape (n_all / n_users /
+    # n_tokens / chi-square N / triangle census totals onto
+    # metadata-scale aggregates)
+    "embedding_margin_stats",
+    "ngram_coverage_curve",
+    "events_pareto_users",
+    "lang_source_contingency",
+    "neardup_triangle_stats",
+    "customer_rfm_segments",
+    # inherits ann_cosine_topk's queries-broadcast brute pass
+    "embedding_knn_classvote",
+    "dsir_resample_stratified",
+    "bm25_retrieval_topk",
+    "rrf_fusion_topk",
+    # inherits bm25_retrieval_topk's 1-row corpus-stats broadcast
+    "fusion_interp_topk",
+    # same shape: the bigram LM's 1-row vocabulary-size broadcast
+    # and the KL diagnostic's 1-row corpus-total broadcast (the
+    # interpolated LM carries the same (V, N) 1-row broadcast)
+    "docs_bigram_perplexity",
+    "docs_kl_by_source",
+    "docs_interp_perplexity",
+    # same shape: KN's (D, N1+(··)) constants ride one 1-row
+    # BuildRight broadcast onto the gram-count table
+    "docs_kn_perplexity",
+    # same shape: PageRank's 1-row node-count broadcast seeds the
+    # initial rank column on the degree table
+    "neardup_pagerank",
+    # same shape: the basket miner's 1-row total-order-count
+    # broadcast onto the pair-support table
+    "part_pair_lift",
+    # same shape: the stationary chain's 1-row state-count
+    # broadcast seeds the uniform π₀ on the states table
+    "events_markov_stationary",
+    # same shape: TF-IDF retrieval's 1-row doc-count broadcast
+    # onto the vocab-scale df table
+    "tfidf_retrieval_topk",
+    # reuses llm_ops4.bigram_model: the same 1-row vocabulary-count
+    # broadcast (crossJoin(broadcast(vocab))) that
+    # docs_bigram_perplexity carries — identical BuildRight shape
+    "corpus_cross_entropy",
+    # |labels|²-row centroid self-join on a strict inequality —
+    # a METADATA-scale (10×10) non-equi join; the corpus is
+    # touched once upstream in the label-keyed partial agg
+    "embedding_label_drift",
+    # the Heaps-curve (min, max) stats pair rides the same 1-row
+    # BuildRight broadcast shape, twice (doc curve + vocab curve)
+    "corpus_vocab_growth",
+    # the cosine histogram is the ann_cosine_topk queries-broadcast
+    # brute pass feeding a bins-sized rollup — same BuildRight shape
+    "embedding_cosine_histogram",
+    # Davies-Bouldin: the embedding_label_drift |labels|²-row
+    # centroid self-join shape (strict-inequality non-equi join on
+    # the METADATA-scale centroid table; corpus touched once)
+    "embedding_db_index",
+    # inherits docs_unigram_perplexity's 1-row corpus-token-total
+    # BuildRight broadcast (the same LM backbone feeds the x side
+    # of the correlation)
+    "quality_ppl_correlation",
+    # runs BOTH ANN paths: inherits ann_cosine_topk's
+    # queries-broadcast brute pass and ann_ivf_trained's
+    # centroid-probe shapes
+    "ann_recall_audit",
+    # the QL ranker's 1-row corpus-length broadcast onto the
+    # matched-postings table (the bm25 corpus-stats shape)
+    "query_likelihood_topk",
+    # probe curve: inherits the queries-broadcast brute pass + the
+    # 1-row truth-total BuildRight broadcast
+    "ann_probe_recall_curve",
+    # inherits the perplexity backbone's 1-row corpus-token-total
+    # BuildRight broadcast
+    "docs_ppl_percentiles_by_source",
+    # the survival curve's 1-row user-total broadcast onto the
+    # 4-row threshold grid
+    "events_survival_curve",
+    # casefold lift: the raw-key and normalized-key 1-row dup
+    # totals cross-join into the single output row — two 1-row
+    # BuildRight broadcasts, zero fan-out
+    "docs_casefold_dup_lift",
+    # novelty curve: the 1-row max-doc-id broadcast attaches the
+    # decile denominator to every gram row (the tfidf N shape)
+    "docs_ngram_novelty_curve",
+    # lift: the 1-row unit-total broadcast onto the C(|types|,2)-row
+    # pair table (the part_pair_lift shape on behavior)
+    "events_type_cooccurrence_lift",
+    # Heaps checkpoints: the 10-row arithmetic-decile table rides a
+    # BuildRight broadcast into two ≤-joins (bounded 10× fan-out;
+    # the corpus-scale sides never shuffle for the join)
+    "docs_heaps_curve",
+    "docs_heaps_exponent",
+    # OOV budgets: the 3-row cutoff axis crossJoins the vocab-scale
+    # rank table (bounded 3× fan-out)
+    "docs_oov_rate_curve",
+    # 1-row grand-total BuildRight broadcasts (the tfidf N shape):
+    # split share, attribution share, max-week gate, gross total,
+    # corpus sum-vector total, Gram row count
+    "docs_split_balance_audit",
+    "events_first_touch_attribution",
+    # r8: the last/linear attribution twins share first-touch's
+    # 1-row grand-total share broadcast
+    "events_last_touch_attribution",
+    "events_linear_attribution",
+    # r8: per-source Heaps — the |sources|·10-row checkpoint table
+    # rides BuildRight broadcasts into the two ≤-joins (the
+    # docs_heaps_curve shape, keyed by source)
+    "docs_heaps_exponent_by_source",
+    "events_retention_halflife",
+    "lineitem_discount_band_profile",
+    "embedding_label_cohesion",
+    "embedding_dim_corr_topk",
+    # same 1-row grand-total shape: basket-share and catalog-mean
+    # broadcasts
+    "orders_basket_size_profile",
+    "part_name_token_price",
+    # |sources|-row MinHash sketch table self-joined on a strict
+    # inequality — the embedding_label_drift METADATA-scale shape;
+    # the corpus is touched once upstream in the (source, shingle) agg
+    "source_jaccard_minhash",
+    # KMV pair queries: the corpus is touched once in the
+    # (key, hash)-distinct agg; the loop join is the broadcast
+    # self-cross of the |keys|-row sketch table (|types| ≤ 5,
+    # |sources| = 20, |splits| = 3) on a strict inequality or a 1×2
+    # cross — all metadata-scale
+    "events_audience_overlap_kmv",
+    "source_containment_kmv",
+    "split_leakage_kmv",
+}
+
+
+def check_join_shape(name: str, plan: str) -> None:
+    assert "CartesianProduct" not in plan, name
+    if name not in ALLOWED_LOOP:
+        assert "BroadcastNestedLoopJoin" not in plan, name
+    elif "BroadcastNestedLoopJoin" in plan:
+        assert "BroadcastNestedLoopJoin BuildRight" in plan, name
+
+
 def test_no_cartesian_or_loop_join_anywhere(spark):
-    # Brute-force ANN is by definition queries × base; its correct
-    # 100 TB plan IS a nested-loop with the tiny query side broadcast
-    # (the base side never shuffles). IVF's centroid assignment is the
-    # same shape: every vector × K centroids with the metadata-scale
-    # centroid table broadcast (fan-out bounded by K, never a shuffle).
-    # Everything else must never loop-join, and nothing may ever
-    # cartesian (no broadcast at all).
-    allowed_loop = {
-        "ann_cosine_topk",
-        "embedding_neardup_exact",
-        "ann_ivf_bucketed",
-        # int8 coarse pass is the same queries-broadcast brute-force shape
-        "ann_quantized_topk",
-        # PQ coarse pass: per-query LUT table broadcast onto the code
-        # table — the same queries-broadcast shape with 8-byte rows
-        "ann_pq_topk",
-        # OPQ = rotation map + the identical PQ coarse pass
-        "ann_opq_topk",
-        # random-negative fan-out: id-only base column × the 10-row
-        # broadcast query table (+ the inherited ANN brute pass)
-        "contrastive_pairs",
-        # tf-idf needs the global doc count N attached to every scored
-        # term: a 1-row global-aggregate broadcast. With a broadcast
-        # 1-row build side, BNLJ degenerates to "append a scalar
-        # column" — zero fan-out, stream side never shuffles. A
-        # synthetic constant equi-key does NOT avoid it: Catalyst
-        # constant-folds foldable join keys and plans the same BNLJ
-        # (verified empirically), so this IS the correct 100 TB shape.
-        "tfidf_top_terms",
-        # same 1-row global-total broadcast shape (Q11's grand-total
-        # scalar subquery; the perplexity LM's corpus-token total)
-        "q11_important_parts",
-        "docs_unigram_perplexity",
-        # same shape again: BM25's (N, total_len) corpus stats and
-        # DSIR's (r_tot, t_tot) grand totals are 1-row BuildRight
-        # broadcasts onto |Q|-row / 256-row metadata tables
-        "docs_bm25_score",
-        "dsir_importance_weights",
-        "dsir_resample_topk",
-        # PMI's (n_bg, n_uni) grand totals: the same 1-row BuildRight
-        # broadcast onto the vocab-scale gram table
-        "bigram_pmi_topk",
-        # same 1-row grand-total broadcast shape (n_all / n_users /
-        # n_tokens / chi-square N / triangle census totals onto
-        # metadata-scale aggregates)
-        "embedding_margin_stats",
-        "ngram_coverage_curve",
-        "events_pareto_users",
-        "lang_source_contingency",
-        "neardup_triangle_stats",
-        "customer_rfm_segments",
-        # inherits ann_cosine_topk's queries-broadcast brute pass
-        "embedding_knn_classvote",
-        "dsir_resample_stratified",
-        "bm25_retrieval_topk",
-        "rrf_fusion_topk",
-        # inherits bm25_retrieval_topk's 1-row corpus-stats broadcast
-        "fusion_interp_topk",
-        # same shape: the bigram LM's 1-row vocabulary-size broadcast
-        # and the KL diagnostic's 1-row corpus-total broadcast (the
-        # interpolated LM carries the same (V, N) 1-row broadcast)
-        "docs_bigram_perplexity",
-        "docs_kl_by_source",
-        "docs_interp_perplexity",
-        # same shape: KN's (D, N1+(··)) constants ride one 1-row
-        # BuildRight broadcast onto the gram-count table
-        "docs_kn_perplexity",
-        # same shape: PageRank's 1-row node-count broadcast seeds the
-        # initial rank column on the degree table
-        "neardup_pagerank",
-        # same shape: the basket miner's 1-row total-order-count
-        # broadcast onto the pair-support table
-        "part_pair_lift",
-        # same shape: the stationary chain's 1-row state-count
-        # broadcast seeds the uniform π₀ on the states table
-        "events_markov_stationary",
-        # same shape: TF-IDF retrieval's 1-row doc-count broadcast
-        # onto the vocab-scale df table
-        "tfidf_retrieval_topk",
-        # reuses llm_ops4.bigram_model: the same 1-row vocabulary-count
-        # broadcast (crossJoin(broadcast(vocab))) that
-        # docs_bigram_perplexity carries — identical BuildRight shape
-        "corpus_cross_entropy",
-        # |labels|²-row centroid self-join on a strict inequality —
-        # a METADATA-scale (10×10) non-equi join; the corpus is
-        # touched once upstream in the label-keyed partial agg
-        "embedding_label_drift",
-        # the Heaps-curve (min, max) stats pair rides the same 1-row
-        # BuildRight broadcast shape, twice (doc curve + vocab curve)
-        "corpus_vocab_growth",
-        # the cosine histogram is the ann_cosine_topk queries-broadcast
-        # brute pass feeding a bins-sized rollup — same BuildRight shape
-        "embedding_cosine_histogram",
-        # Davies-Bouldin: the embedding_label_drift |labels|²-row
-        # centroid self-join shape (strict-inequality non-equi join on
-        # the METADATA-scale centroid table; corpus touched once)
-        "embedding_db_index",
-        # inherits docs_unigram_perplexity's 1-row corpus-token-total
-        # BuildRight broadcast (the same LM backbone feeds the x side
-        # of the correlation)
-        "quality_ppl_correlation",
-        # runs BOTH ANN paths: inherits ann_cosine_topk's
-        # queries-broadcast brute pass and ann_ivf_trained's
-        # centroid-probe shapes
-        "ann_recall_audit",
-        # the QL ranker's 1-row corpus-length broadcast onto the
-        # matched-postings table (the bm25 corpus-stats shape)
-        "query_likelihood_topk",
-        # probe curve: inherits the queries-broadcast brute pass + the
-        # 1-row truth-total BuildRight broadcast
-        "ann_probe_recall_curve",
-        # inherits the perplexity backbone's 1-row corpus-token-total
-        # BuildRight broadcast
-        "docs_ppl_percentiles_by_source",
-        # the survival curve's 1-row user-total broadcast onto the
-        # 4-row threshold grid
-        "events_survival_curve",
-        # casefold lift: the raw-key and normalized-key 1-row dup
-        # totals cross-join into the single output row — two 1-row
-        # BuildRight broadcasts, zero fan-out
-        "docs_casefold_dup_lift",
-        # novelty curve: the 1-row max-doc-id broadcast attaches the
-        # decile denominator to every gram row (the tfidf N shape)
-        "docs_ngram_novelty_curve",
-        # lift: the 1-row unit-total broadcast onto the C(|types|,2)-row
-        # pair table (the part_pair_lift shape on behavior)
-        "events_type_cooccurrence_lift",
-        # Heaps checkpoints: the 10-row arithmetic-decile table rides a
-        # BuildRight broadcast into two ≤-joins (bounded 10× fan-out;
-        # the corpus-scale sides never shuffle for the join)
-        "docs_heaps_curve",
-        "docs_heaps_exponent",
-        # OOV budgets: the 3-row cutoff axis crossJoins the vocab-scale
-        # rank table (bounded 3× fan-out)
-        "docs_oov_rate_curve",
-        # 1-row grand-total BuildRight broadcasts (the tfidf N shape):
-        # split share, attribution share, max-week gate, gross total,
-        # corpus sum-vector total, Gram row count
-        "docs_split_balance_audit",
-        "events_first_touch_attribution",
-        # r8: the last/linear attribution twins share first-touch's
-        # 1-row grand-total share broadcast
-        "events_last_touch_attribution",
-        "events_linear_attribution",
-        # r8: per-source Heaps — the |sources|·10-row checkpoint table
-        # rides BuildRight broadcasts into the two ≤-joins (the
-        # docs_heaps_curve shape, keyed by source)
-        "docs_heaps_exponent_by_source",
-        "events_retention_halflife",
-        "lineitem_discount_band_profile",
-        "embedding_label_cohesion",
-        "embedding_dim_corr_topk",
-        # same 1-row grand-total shape: basket-share and catalog-mean
-        # broadcasts
-        "orders_basket_size_profile",
-        "part_name_token_price",
-        # |sources|-row MinHash sketch table self-joined on a strict
-        # inequality — the embedding_label_drift METADATA-scale shape;
-        # the corpus is touched once upstream in the (source, shingle) agg
-        "source_jaccard_minhash",
-        # KMV pair queries: the corpus is touched once in the
-        # (key, hash)-distinct agg; the loop join is the broadcast
-        # self-cross of the |keys|-row sketch table (|types| ≤ 5,
-        # |sources| = 20, |splits| = 3) on a strict inequality or a 1×2
-        # cross — all metadata-scale
-        "events_audience_overlap_kmv",
-        "source_containment_kmv",
-        "split_leakage_kmv",
-    }
     for name, fn in QUERIES.items():
-        plan = executed_plan(fn(spark, SF_SMOKE))
-        assert "CartesianProduct" not in plan, name
-        if name not in allowed_loop:
-            assert "BroadcastNestedLoopJoin" not in plan, name
-        elif "BroadcastNestedLoopJoin" in plan:
-            assert "BroadcastNestedLoopJoin BuildRight" in plan, name
+        check_join_shape(name, executed_plan(fn(spark, SF_SMOKE)))
 
 
 def test_minhash_jaccard_corpus_never_shuffles(spark):
@@ -371,6 +376,19 @@ def test_no_python_row_udfs_in_headline_plans(spark):
         assert "BatchEvalPython" not in plan, name
 
 
+def check_no_lambda_in_scan(name: str, plan: str) -> None:
+    for ln in plan.splitlines():
+        if "FileScan" in ln:
+            assert "lambdafunction" not in ln, (name, ln[:200])
+    # the tree prints top-down, so everything after the LAST
+    # Exchange is the scan-side stage: no Filter there may carry a
+    # higher-order lambda (= re-evaluating shingles in the scan)
+    scan_stage = plan.rsplit("Exchange", 1)[-1]
+    for ln in scan_stage.splitlines():
+        if "Filter" in ln:
+            assert "lambdafunction" not in ln, (name, ln[:200])
+
+
 def test_no_heavy_expressions_in_scan_predicates(spark):
     """Guard the InferFiltersFromGenerate fix: no scan may carry a
     pushed-down predicate containing higher-order-function lambdas (the
@@ -388,16 +406,7 @@ def test_no_heavy_expressions_in_scan_predicates(spark):
         "split_leakage_kmv",
     ]:
         plan = executed_plan(QUERIES[name](spark, SF_SMOKE))
-        for ln in plan.splitlines():
-            if "FileScan" in ln:
-                assert "lambdafunction" not in ln, (name, ln[:200])
-        # the tree prints top-down, so everything after the LAST
-        # Exchange is the scan-side stage: no Filter there may carry a
-        # higher-order lambda (= re-evaluating shingles in the scan)
-        scan_stage = plan.rsplit("Exchange", 1)[-1]
-        for ln in scan_stage.splitlines():
-            if "Filter" in ln:
-                assert "lambdafunction" not in ln, (name, ln[:200])
+        check_no_lambda_in_scan(name, plan)
 
 
 def test_explicit_broadcasts_survive_disabled_estimator(spark):

@@ -1,15 +1,36 @@
 """Sketch-accuracy and planted-defect checks for the sketch and audit
 queries of plans/llm_ops23/24/25/26.py.
 
-Their oracle compares and plan invariants run with every other
-registered query in tests/test_queries.py and tests/test_plans.py;
-this file checks what an oracle cannot: that each estimate tracks the
-exact answer, and that each audit detects planted dirt.
+Their oracle compares run with every other registered query in
+tests/test_queries.py; this file checks what an oracle cannot: that
+each estimate tracks the exact answer, and that each audit detects
+planted dirt. The two plan tests here apply tests/test_plans.py's
+checks to these modules' queries with tighter coverage than the
+registry-wide versions.
 """
 
 from __future__ import annotations
 
+from distributed_file_system_with_stream_processing_spark.plans.registry import QUERIES
+from tests.conftest import SF_SMOKE
+from tests.test_plans import (
+    ALLOWED_LOOP,
+    check_join_shape,
+    check_no_lambda_in_scan,
+    executed_plan,
+)
+
 SF_T2 = "/root/testdata/sf0.01"
+
+_SKETCH_MODULES = {"llm_ops23", "llm_ops24", "llm_ops25", "llm_ops26"}
+
+
+def _sketch_queries():
+    return {
+        name: fn
+        for name, fn in QUERIES.items()
+        if fn.__module__.rpartition(".")[2] in _SKETCH_MODULES
+    }
 
 
 def test_kmv_estimate_sane(spark):
@@ -75,6 +96,26 @@ def test_loghist_percentiles_within_octave(spark):
     assert set(got) == set(exact)
     for k, est in got.items():
         assert exact[k] / 2 < est < exact[k] * 2, (k, est, exact[k])
+
+
+def test_staged_plans_no_cartesian_or_bad_loop_join(spark):
+    """test_plans' join-shape check on these modules' queries, plus
+    the converse: each of them that ALLOWED_LOOP lets loop-join still
+    plans that broadcast loop join, so a stale allowance fails here."""
+    queries = _sketch_queries()
+    assert len(queries) == 19, sorted(queries)
+    for name, fn in queries.items():
+        plan = executed_plan(fn(spark, SF_SMOKE))
+        check_join_shape(name, plan)
+        if name in ALLOWED_LOOP:
+            assert "BroadcastNestedLoopJoin BuildRight" in plan, name
+
+
+def test_staged_no_heavy_expressions_in_scan_predicates(spark):
+    """test_plans' scan-predicate lambda guard on every one of these
+    modules' queries, not only the compute-dense four it lists."""
+    for name, fn in _sketch_queries().items():
+        check_no_lambda_in_scan(name, executed_plan(fn(spark, SF_SMOKE)))
 
 
 def test_audience_overlap_kmv_tracks_exact(spark):
