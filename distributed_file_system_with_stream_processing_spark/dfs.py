@@ -33,7 +33,6 @@ semantics when they need them (e.g. exporting a line file).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -53,9 +52,10 @@ from distributed_file_system_with_stream_processing_spark.sources.pyds import (
     _publish,
     _stream_batch_id,
 )
-
-# the Spark schema every Spark-written parquet file carries in its footer
-_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+from distributed_file_system_with_stream_processing_spark.sources.tables import (
+    footer_schema,
+    prefers_ntz,
+)
 
 
 class TableStoreError(Exception):
@@ -265,8 +265,8 @@ class TableStore:
         for the base, the batch dir name for plain batches, and the
         file's own per-row stamp for compact_appends() batches.
 
-        The scan reads with the base's schema, taken from the Spark row
-        metadata in its footer, so no schema-inference job runs while
+        The scan reads with the base's schema, taken from its footer
+        (``footer_schema``), so no schema-inference job runs while
         the DataFrame is built; ``_metadata.file_path`` names each
         row's batch, and column pruning drops both when the caller
         drops ``_append_seq``. Before the read, every batch's footer is
@@ -280,9 +280,7 @@ class TableStore:
         if not base_files:
             raise TableStoreError(f"no base files ({name})")
         base_arrow = pq.read_schema(base_files[0])
-        schema = StructType.fromJson(
-            json.loads(base_arrow.metadata[_SPARK_ROW_METADATA])
-        )
+        schema = footer_schema(base_files[0], prefers_ntz(self.spark))
         want = {f.name: _canon_arrow_type(f.type) for f in base_arrow}
         for b in batches:
             files = _data_files(os.path.join(ad, b))
@@ -463,9 +461,12 @@ class TableStore:
             if batch is None
             else os.path.join(self._appends_dir(name), batch)
         )
-        if not os.path.isdir(path):
+        files = _data_files(path)
+        if not files:
             raise TableStoreError(f"no such replica/batch ({name}, {batch})")
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(
+            footer_schema(files[0], prefers_ntz(self.spark))
+        ).parquet(path)
 
     def merge(self, name: str) -> int:
         """Reference `merge`: fold appends into the base in sequence

@@ -1,7 +1,7 @@
 #!/bin/sh
 # Install the repo's git hooks: a pre-commit gate on the Spark-free
-# registry checks (the front guard and the round-quotient scan) —
-# seconds, no Spark.
+# checks (the registry front guard, the round-quotient scan and the
+# parquet-footer schema mapping) — seconds, no Spark.
 # Usage: sh scripts/install_hooks.sh
 cd "$(git rev-parse --show-toplevel)" || exit 1
 cat > .git/hooks/pre-commit <<'HOOK'
@@ -9,8 +9,9 @@ cat > .git/hooks/pre-commit <<'HOOK'
 cd "$(git rev-parse --show-toplevel)" || exit 1
 python -m pytest -q --no-header -x \
   tests/test_queries.py::test_registry_front_loads_unchecked_queries \
-  tests/test_round_quotients.py || {
-  echo "pre-commit: registry guard failed — fix before committing" >&2
+  tests/test_round_quotients.py \
+  tests/test_tables.py::test_footer_schema_mapping_and_cache_key || {
+  echo "pre-commit: Spark-free checks failed — fix before committing" >&2
   exit 1
 }
 HOOK

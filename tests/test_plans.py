@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import pytest
 
+from distributed_file_system_with_stream_processing_spark.plans import _backbones
 from distributed_file_system_with_stream_processing_spark.plans.registry import QUERIES
 
 from .conftest import SF_SMOKE
@@ -253,9 +254,127 @@ def check_join_shape(name: str, plan: str) -> None:
         assert "BroadcastNestedLoopJoin BuildRight" in plan, name
 
 
-def test_no_cartesian_or_loop_join_anywhere(spark):
-    for name, fn in QUERIES.items():
-        check_join_shape(name, executed_plan(fn(spark, SF_SMOKE)))
+@pytest.fixture(scope="module")
+def registry_builds(spark):
+    """Every registered query built once at sf0.001, in registry order,
+    from an empty backbone cache: name -> (executed plan, Spark jobs
+    the build ran). Each build runs under its own job group; the
+    listener bus is drained before its jobs are counted."""
+    _backbones.clear()
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    builds = {}
+    try:
+        for i, (name, fn) in enumerate(QUERIES.items()):
+            group = f"build-{i}"
+            sc.setJobGroup(group, name)
+            df = fn(spark, SF_SMOKE)
+            bus.waitUntilEmpty()
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            builds[name] = (executed_plan(df), jobs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return builds
+
+
+def test_no_cartesian_or_loop_join_anywhere(registry_builds):
+    for name, (plan, _) in registry_builds.items():
+        check_join_shape(name, plan)
+
+
+# Builds that may run Spark jobs, by mechanism. Every other registered
+# query builds with zero jobs: table schemas come from parquet footers,
+# so a plan is only driver work until its action. Each name here must
+# still run at least one job, so the list cannot go stale.
+EAGER_BUILDS: dict[str, set[str]] = {
+    # gate_broadcast persists and counts a table whose size tracks the
+    # data, to choose a broadcast or a shuffle join
+    "gate count": {
+        "cross_source_leakage",
+        "curation_funnel",
+        "docs_effective_tokens",
+        "docs_neardup_rate_by_source",
+        "docs_ppl_percentiles_by_source",
+        "docs_unigram_perplexity",
+        "minhash_containment",
+        "minhash_jaccard_estimate",
+        "neardup_communities",
+        "neardup_khop_reach",
+        "quality_ppl_correlation",
+    },
+    # plan_ckpt materializes a table that several branches (or each
+    # k-hop / PageRank / triangle pass) read, so the corpus pass runs
+    # once per invocation
+    "plan_ckpt": {
+        "bigram_pmi_topk",
+        "bm25_retrieval_topk",
+        "corpus_cross_entropy",
+        "docs_bigram_perplexity",
+        "docs_bigram_perplexity_bucketed",
+        "docs_interp_perplexity",
+        "docs_interp_perplexity_bucketed",
+        "docs_kn_perplexity",
+        "docs_kn_perplexity_bucketed",
+        "docs_ngram_novelty_curve",
+        "docs_token_bigram_entropy",
+        "dsir_importance_weights",
+        "dsir_resample_stratified",
+        "dsir_resample_topk",
+        "embedding_label_drift",
+        "embedding_margin_stats",
+        "events_markov_stationary",
+        "fusion_interp_topk",
+        "lsh_recall_curve",
+        "minhash_threshold_sweep",
+        "neardup_communities",
+        "neardup_degree_stats",
+        "neardup_khop_reach",
+        "neardup_pagerank",
+        "neardup_triangle_stats",
+        "query_likelihood_topk",
+        "rrf_fusion_topk",
+        "session_expected_length",
+        "simhash_threshold_sweep",
+        "tfidf_retrieval_topk",
+    },
+    # connected components counts its edges and, under the driver gate,
+    # collects them to label components on the driver
+    "connected components": {
+        "dedup_clusters",
+        "docs_cluster_source_purity",
+        "semantic_dedup",
+    },
+    # driver loops: the model (k-means centroids, PQ codebooks, the OPQ
+    # rotation, PCA moments, logistic-regression weights, BPE merges)
+    # is fit from aggregates collected each iteration, then enters the
+    # plan as literals
+    "driver loop": {
+        "ann_ivf_trained",
+        "ann_opq_topk",
+        "ann_pq_topk",
+        "bpe_compression_curve",
+        "bpe_fertility_by_lang",
+        "bpe_per_lang_rules",
+        "bpe_tokenize_topk",
+        "bpe_train_merges",
+        "embedding_intrinsic_dim",
+        "embedding_kmeans_assign",
+        "embedding_logreg_score",
+        "embedding_pca_spectrum",
+        "semantic_dedup_kmeans",
+    },
+}
+
+
+def test_plan_builds_run_no_spark_job(registry_builds):
+    """Building a query's plan runs no Spark job unless the query is in
+    EAGER_BUILDS, and every query there still runs one."""
+    allowed = set().union(*EAGER_BUILDS.values())
+    assert allowed <= set(QUERIES), sorted(allowed - set(QUERIES))
+    ran = {name: jobs for name, (_, jobs) in registry_builds.items() if jobs}
+    assert {n: j for n, j in ran.items() if n not in allowed} == {}
+    assert sorted(allowed - set(ran)) == []
 
 
 def test_minhash_jaccard_corpus_never_shuffles(spark):
