@@ -72,7 +72,7 @@ def plan_ckpt(df: DataFrame) -> DataFrame:
 GATE_MAX_ROWS = 2_000_000
 
 
-def gate_broadcast(df: DataFrame, max_rows: int | None = None) -> tuple[DataFrame, bool]:
+def gate_broadcast(df: DataFrame) -> tuple[DataFrame, bool]:
     """Size-GATED broadcast hint for tables whose size tracks the data
     (LSH/candidate-pair outputs, dup-member lists).
 
@@ -81,18 +81,15 @@ def gate_broadcast(df: DataFrame, max_rows: int | None = None) -> tuple[DataFram
     corpus size × dup rate, and a hinted broadcast either OOMs the
     driver or hits Spark's 8 GB table cap with no fallback. This gate
     persists the table (it is re-read by the join anyway), counts it —
-    one metadata-scale job — and hints only under ``max_rows``;
+    one metadata-scale job — and hints only up to ``GATE_MAX_ROWS``;
     above the bound it returns the un-hinted table so the join falls
     back to a plain key shuffle, which is the correct shape for a
     pathological dup rate. Returns ``(table, hinted)`` so call sites
     can keep any dependent outer hints consistent with the decision.
-    ``max_rows`` defaults to the module-level ``GATE_MAX_ROWS`` read
-    at CALL time (so tests can force the fallback path).
+    ``GATE_MAX_ROWS`` is read at CALL time, so tests force the
+    fallback path by setting the module constant.
     """
-    if max_rows is None:
-        max_rows = GATE_MAX_ROWS
     df = cache_bounded(df)
-    n = df.count()
-    if n <= max_rows:
+    if df.count() <= GATE_MAX_ROWS:
         return broadcast(df), True
     return df, False

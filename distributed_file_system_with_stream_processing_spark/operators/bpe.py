@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from distributed_file_system_with_stream_processing_spark.functions import text as T
+from distributed_file_system_with_stream_processing_spark.operators._util import plan_ckpt as _plan_ckpt
 from distributed_file_system_with_stream_processing_spark.operators._util import spread as _spread
 
 
@@ -371,17 +372,18 @@ def bpe_train_batched(
                 )
             # whole batch in ONE fold — sound because acceptance rule 1
             # makes the batch symbol-disjoint (see merge_pairs_disjoint).
-            # localCheckpoint (not persist): each job's plan would
+            # Checkpoint (not persist): each job's plan would
             # otherwise NEST every previous job's fold expression —
             # the analyzed-plan tree grows with the rule count and the
             # DRIVER heap OOMs near ~25 jobs at sf0.1 (measured);
             # truncating lineage per job keeps the plan one fold deep
             # regardless of vocab budget (the connected-components
-            # discipline, operators/_util.plan_ckpt).
+            # discipline). plan_ckpt honours the session's durability
+            # switch, local or reliable.
             col = merge_pairs_disjoint(
                 F.col("syms"), [(c["a"], c["b"]) for c in accepted]
             )
-            prev, wt = wt, wt.withColumn("syms", col).localCheckpoint(eager=True)
+            prev, wt = wt, _plan_ckpt(wt.withColumn("syms", col))
     finally:
         wt.unpersist()
         if prev is not None:

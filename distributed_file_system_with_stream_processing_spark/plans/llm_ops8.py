@@ -73,11 +73,9 @@ def lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_recall(docs, _plan_ckpt(D._with_shingles(docs, "doc_id", "text", 3)))
 
 
-def _lsh_recall(docs: DataFrame, sh: DataFrame | None) -> DataFrame:
+def _lsh_recall(docs: DataFrame, sh: DataFrame) -> DataFrame:
     """lsh_recall_curve's body over one (doc_id, sh) shingle table
-    shared by truth and banding; with ``sh=None`` each side derives
-    its own shingles (the recompute arm of
-    scripts/lsh_recall_probe.py)."""
+    shared by truth and banding."""
     truth = D.ngram_jaccard_all_pairs(docs, n=3, max_doc_freq=50, sh=sh)
     cand = D.minhash_lsh_pairs(docs, n=3, num_hashes=12, bands=6, sh=sh).select(
         "doc_id_a", "doc_id_b", F.lit(1).alias("caught")

@@ -1,7 +1,8 @@
 #!/bin/sh
 # Install the repo's git hooks: a pre-commit gate on the Spark-free
-# checks (the registry front guard, the round-quotient scan and the
-# parquet-footer schema mapping) — seconds, no Spark.
+# checks (the registry front guard, the round-quotient scan, the
+# parquet-footer schema mapping and the scripts' package names) —
+# seconds, no Spark.
 # Usage: sh scripts/install_hooks.sh
 cd "$(git rev-parse --show-toplevel)" || exit 1
 cat > .git/hooks/pre-commit <<'HOOK'
@@ -10,7 +11,8 @@ cd "$(git rev-parse --show-toplevel)" || exit 1
 python -m pytest -q --no-header -x \
   tests/test_queries.py::test_registry_front_loads_unchecked_queries \
   tests/test_round_quotients.py \
-  tests/test_tables.py::test_footer_schema_mapping_and_cache_key || {
+  tests/test_tables.py::test_footer_schema_mapping_and_cache_key \
+  tests/test_scripts.py || {
   echo "pre-commit: Spark-free checks failed — fix before committing" >&2
   exit 1
 }

@@ -96,6 +96,23 @@ def test_bpe_train_batched_adaptive_prefix_parity(spark):
     assert n_jobs_ad <= n_jobs_m3 < N_MERGES, (n_jobs_ad, n_jobs_m3)
 
 
+def test_bpe_train_batched_reliable_checkpoint_conf(spark, tmp_path):
+    """The per-job lineage truncation goes through ``plan_ckpt``, so
+    ``spark.dfsp.reliableCheckpoint=true`` writes the checkpoint dir
+    and the trained rules are unchanged."""
+    docs = load_table(spark, SF_SMOKE, "documents")
+    base, _ = B.bpe_train_batched(docs, n_merges=N_MERGES, m_per_job=3)
+    ckpt = tmp_path / "bpe_ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    spark.conf.set("spark.dfsp.reliableCheckpoint", "true")
+    try:
+        reliable, _ = B.bpe_train_batched(docs, n_merges=N_MERGES, m_per_job=3)
+    finally:
+        spark.conf.unset("spark.dfsp.reliableCheckpoint")
+    assert any(p.is_file() for p in ckpt.rglob("*")), "no checkpoint file written"
+    assert reliable == base
+
+
 def test_bpe_train_batched_adversarial_overlap_degrades_not_diverges(spark):
     """A corpus engineered so every top pair shares a symbol with the
     next ('aaaa...' chains): the batch must shrink to ~1 merge/job —
