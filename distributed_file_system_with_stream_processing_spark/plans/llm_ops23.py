@@ -204,8 +204,9 @@ def source_jaccard_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches of k longs replace the quadratic doc×doc comparison that
     ``source_neardup_matrix`` prices. est = matching positions / k,
     carried as the exact micro quotient. The per-source signature IS
-    MinHashSketchOp's batch twin (streaming/ops.py) on the portable
-    affine family — op-vs-query parity by construction.
+    MinHashSketchOp's plan (streaming/ops.py, the same plan it runs on
+    a stream) on the portable affine family — op-vs-query parity by
+    construction.
 
     100 TB shape: one (source, shingle)-distinct shuffle into a
     |sources|-row sketch table; the pair epilogue is a broadcast

@@ -57,15 +57,18 @@ def get_spark(
 
     ``master``/``shuffle_partitions`` default from the env vars the
     bench driver sets (``SPARK_GRAFT_CPUS``), falling back to local[*]
-    with one shuffle partition per core — sized so an sf0.1 shuffle
-    partition is a few MB; on a real cluster this would be set from
-    (executors × cores) and target ~128 MB per partition.
+    with one shuffle partition per core this process may run on —
+    sized so an sf0.1 shuffle partition is a few MB; on a real cluster
+    this would be set from (executors × cores) and target ~128 MB per
+    partition. A stream's state-store count is fixed from this value
+    when its checkpoint is first written, so it also sets how many
+    state stores each trigger commits.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = 32 if cpus == "*" else int(cpus)
+        shuffle_partitions = len(os.sched_getaffinity(0)) if cpus == "*" else int(cpus)
 
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in DEFAULT_CONF.items():

@@ -19,10 +19,18 @@ Arbitrary Python logic (the "custom executable" escape hatch) goes
 through ``python_transform`` — an Arrow-batched ``mapInPandas``, the
 Spark-idiomatic replacement for exec'ing a binary per batch.
 
-Stateful stream ops are per-key folds, and all but three run theirs
-through ``_keyed_fold`` (``applyInPandasWithState``, no timeout). The
-op supplies
-``step(key, pdf, state) -> (new_state, rows)``:
+Stateful stream ops keep their state one of two ways:
+
+- Native: an op whose output row is a running aggregate per key (a
+  count, sum, min or max, like the leader's ``AggregateCounts``) is a
+  keyed aggregation that Spark runs in update mode and keeps the state
+  of itself. One plan serves bounded and streaming input
+  (``MinHashSketchOp``, ``CompletenessMonitorOp``).
+- Fold: an op that emits per-trigger deltas, or whose state depends
+  on arrival order, runs a per-key fold through ``_keyed_fold``
+  (``applyInPandasWithState``), the one Python-state scaffold here.
+
+A fold op supplies ``step(key, pdf, state) -> (new_state, rows)``:
 
 - ``key`` is the grouping-key tuple;
 - ``pdf`` is the key's non-empty rows of this trigger, one pandas
@@ -34,9 +42,10 @@ op supplies
   schema's column order.
 
 ``_keyed_fold`` owns the rest: a key with no rows emits an empty frame
-and leaves its state alone. ``SessionPathOp``, ``RetentionMatrixOp``
-and ``SessionDepthOp`` stay hand-written, because each handles an
-event-time timeout in its own way (remove, freeze, emit-then-remove).
+and leaves its state alone. An op that ends a key's state once the
+watermark passes a point (``SessionPathOp``, ``RetentionMatrixOp``,
+``SessionDepthOp``) also passes an event-time expiry; see
+``_keyed_fold``.
 """
 
 from __future__ import annotations
@@ -67,28 +76,58 @@ def _keyed_fold(
     state_schema: str,
     step: Callable,
     mode: str = "update",
+    expiry: tuple[Callable, Callable] | None = None,
 ) -> DataFrame:
     """Run ``step`` (see the module docstring) as a per-key fold over
-    ``df`` with ``applyInPandasWithState`` and no timeout. ``mode`` is
-    the operator output mode. Builds no Spark object itself, so the
-    fold can be captured and driven without a session."""
+    ``df`` with ``applyInPandasWithState``. ``mode`` is the operator
+    output mode. Builds no Spark object itself, so the fold can be
+    captured and driven without a session.
+
+    Without ``expiry`` the fold has no timeout. ``expiry`` is a pair
+    ``(deadline, on_expire)`` that turns on an event-time timeout (the
+    caller sets the watermark):
+
+    - ``deadline(new_state, watermark_ms)`` runs after each ``step``
+      and returns the epoch-ms at which the key expires, or ``None`` to
+      register no timeout;
+    - ``on_expire(key, state) -> (new_state, rows)`` runs instead of
+      ``step`` when the key's timeout fires. A ``new_state`` of
+      ``None`` removes the key's state; a tuple keeps it, and no new
+      timeout is registered."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     cols = _columns(out_schema)
+    deadline, on_expire = expiry or (None, None)
+
+    def frame(rows):
+        return rows if isinstance(rows, pd.DataFrame) else pd.DataFrame(rows, columns=cols)
 
     def update(key, pdfs: Iterator, state) -> Iterator:
+        if on_expire is not None and state.hasTimedOut:
+            new_state, rows = on_expire(key, state.get)
+            if new_state is None:
+                state.remove()
+            else:
+                state.update(new_state)
+            yield frame(rows)
+            return
         parts = [p for p in pdfs if len(p)]
         if not parts:
-            yield pd.DataFrame([], columns=cols)
+            yield frame([])
             return
         pdf = parts[0] if len(parts) == 1 else pd.concat(parts)
         new_state, rows = step(key, pdf, state.get if state.exists else None)
         state.update(new_state)
-        yield rows if isinstance(rows, pd.DataFrame) else pd.DataFrame(rows, columns=cols)
+        if deadline is not None:
+            ms = deadline(new_state, state.getCurrentWatermarkMs())
+            if ms is not None:
+                state.setTimeoutTimestamp(ms)
+        yield frame(rows)
 
+    timeout = GroupStateTimeout.EventTimeTimeout if expiry else GroupStateTimeout.NoTimeout
     return df.groupBy(*keys).applyInPandasWithState(
-        update, out_schema, state_schema, mode, GroupStateTimeout.NoTimeout
+        update, out_schema, state_schema, mode, timeout
     )
 
 
@@ -431,33 +470,12 @@ class SessionPathOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         tcol, tscol, idcol = self.type_col, self.ts_col, self.id_col
         gap_s, evict = self.gap_s, self.evict_on_watermark
-        out_schema = "user_id long, path string, delta long"
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            if evict and state.hasTimedOut:
-                # Watermark passed last_sec + gap: the remembered tail
-                # can never extend a path again (the inactivity split
-                # would reset it), so the state is pure memory — drop.
-                state.remove()
-                yield pd.DataFrame([], columns=["user_id", "path", "delta"])
-                return
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=["user_id", "path", "delta"])
-                return
-            # Null contract: drop NULL event_type rows entirely (see
-            # the batch twin) — they must not touch paths or last_sec.
-            pdf = pd.concat(parts).sort_values([tscol, idcol])
-            pdf = pdf[pdf[tcol].notna()]
-            if not len(pdf):
-                yield pd.DataFrame([], columns=["user_id", "path", "delta"])
-                return
-            t2, t1, last_sec = state.get if state.exists else (None, None, None)
+        def step(key, pdf, state):
+            pdf = pdf.sort_values([tscol, idcol])
+            t2, t1, last_sec = state or (None, None, None)
             tail = [t for t in (t2, t1) if t is not None]
             counts: dict[str, int] = {}
             for t, ts in zip(pdf[tcol], pdf[tscol]):
@@ -471,32 +489,35 @@ class SessionPathOp:
                     tail = tail[1:]
                 last_sec = sec
             pad = [None] * (2 - len(tail)) + tail
-            state.update((pad[0], pad[1], last_sec))
-            if evict:
-                # (last_sec + gap_s + 1) * 1000, NOT (last_sec+gap_s)*1000+1:
-                # timestamps are truncated to whole seconds for the split,
-                # so an event in the sub-second window [.., +1s) still has
-                # sec == last_sec + gap_s and does NOT split in the batch
-                # twin (condition is STRICTLY > gap_s) — evicting before
-                # the full second has passed would lose its triple.
-                state.setTimeoutTimestamp(
-                    max(
-                        (last_sec + gap_s + 1) * 1000,
-                        state.getCurrentWatermarkMs() + 1,
-                    )
-                )
-            yield pd.DataFrame(
-                [(key[0], p, n) for p, n in sorted(counts.items())],
-                columns=["user_id", "path", "delta"],
-            )
+            return (pad[0], pad[1], last_sec), [
+                (key[0], p, n) for p, n in sorted(counts.items())
+            ]
 
+        def deadline(state, wm_ms):
+            # (last_sec + gap_s + 1) * 1000, NOT (last_sec+gap_s)*1000+1:
+            # timestamps are truncated to whole seconds for the split,
+            # so an event in the sub-second window [.., +1s) still has
+            # sec == last_sec + gap_s and does NOT split in the batch
+            # twin (condition is STRICTLY > gap_s) — evicting before
+            # the full second has passed would lose its triple.
+            return max((state[2] + gap_s + 1) * 1000, wm_ms + 1)
+
+        def on_expire(key, state):
+            # Watermark passed last_sec + gap: the remembered tail can
+            # never extend a path again (the inactivity split would
+            # reset it), so the state is pure memory — drop.
+            return None, []
+
+        # Null contract: drop NULL event_type rows entirely (see the
+        # batch twin) — they must not touch paths or last_sec.
         src = df.withWatermark(tscol, self.watermark) if evict else df
-        return src.groupBy(self.user_col).applyInPandasWithState(
-            update,
-            out_schema,
+        return _keyed_fold(
+            src.dropna(subset=[tcol]),
+            [self.user_col],
+            "user_id long, path string, delta long",
             "t2 string, t1 string, last_sec long",
-            "update",
-            GroupStateTimeout.EventTimeTimeout if evict else GroupStateTimeout.NoTimeout,
+            step,
+            expiry=(deadline, on_expire) if evict else None,
         )
 
 
@@ -682,35 +703,13 @@ class RetentionMatrixOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         tscol, cap, evict = self.ts_col, self.max_offset, self.evict_on_watermark
-        out_schema = "cohort_week long, week_offset long, delta long"
-        cols = ["cohort_week", "week_offset", "delta"]
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            if evict and state.hasTimedOut:
-                # Watermark passed cohort + cap weeks: the window is
-                # CLOSED — no future offset can land under the cap. The
-                # cohort itself must be KEPT, not removed: a returning
-                # user with no state would be re-cohorted at their new
-                # week and emit a spurious (new_cohort, 0, +1) delta the
-                # batch twin (cohort = all-time min week) never produces.
-                # Freeze: keep (cohort, mask), register no new timeout.
-                cohort, mask = state.get
-                state.update((cohort, mask))
-                yield pd.DataFrame([], columns=cols)
-                return
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=cols)
-                return
-            pdf = pd.concat(parts)
+        def step(key, pdf, state):
             weeks = sorted(
                 {int(ts.timestamp()) // 604800 for ts in pdf[tscol]}
             )
-            cohort, mask = state.get if state.exists else (None, 0)
+            cohort, mask = state or (None, 0)
             deltas: list[tuple[int, int, int]] = []
             for wk in weeks:
                 if cohort is None:
@@ -719,24 +718,34 @@ class RetentionMatrixOp:
                 if 0 <= off < cap and not (mask >> off) & 1:
                     mask |= 1 << off
                     deltas.append((cohort, off, 1))
-            state.update((cohort, mask))
-            if evict:
-                # Register the closure timeout only while the window is
-                # still open — once the watermark passed cohort + cap
-                # the key is frozen (see the hasTimedOut branch) and a
-                # re-registered timeout would just re-fire every trigger.
-                close_ms = (cohort + cap) * 604800 * 1000
-                if close_ms > state.getCurrentWatermarkMs():
-                    state.setTimeoutTimestamp(close_ms)
-            yield pd.DataFrame(deltas, columns=cols)
+            return (cohort, mask), deltas
+
+        def deadline(state, wm_ms):
+            # Register the closure timeout only while the window is
+            # still open — once the watermark passed cohort + cap the
+            # key is frozen (see on_expire) and a re-registered timeout
+            # would just re-fire every trigger.
+            close_ms = (state[0] + cap) * 604800 * 1000
+            return close_ms if close_ms > wm_ms else None
+
+        def on_expire(key, state):
+            # Watermark passed cohort + cap weeks: the window is CLOSED
+            # — no future offset can land under the cap. The cohort
+            # itself must be KEPT, not removed: a returning user with
+            # no state would be re-cohorted at their new week and emit
+            # a spurious (new_cohort, 0, +1) delta the batch twin
+            # (cohort = all-time min week) never produces. Freeze: keep
+            # (cohort, mask), register no new timeout.
+            return state, []
 
         src = df.withWatermark(tscol, self.watermark) if evict else df
-        return src.groupBy(self.user_col).applyInPandasWithState(
-            update,
-            out_schema,
+        return _keyed_fold(
+            src,
+            [self.user_col],
+            "cohort_week long, week_offset long, delta long",
             "cohort_week long, mask long",
-            "update",
-            GroupStateTimeout.EventTimeTimeout if evict else GroupStateTimeout.NoTimeout,
+            step,
+            expiry=(deadline, on_expire) if evict else None,
         )
 
 
@@ -865,29 +874,12 @@ class SessionDepthOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
         tscol, idcol, gap_s, cap = self.ts_col, self.id_col, self.gap_s, self.cap
         close = self.close_on_watermark
-        out_schema = "depth long, delta long"
 
-        def update(key, pdfs: Iterator, state) -> Iterator:
-            if close and state.hasTimedOut:
-                # The watermark passed last_sec + gap: no in-gap event
-                # can still arrive, so the open session is CLOSED.
-                last_sec, depth = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    [(min(depth, cap), 1)], columns=["depth", "delta"]
-                )
-                return
-            parts = [p for p in pdfs if len(p)]
-            if not parts:
-                yield pd.DataFrame([], columns=["depth", "delta"])
-                return
-            pdf = pd.concat(parts).sort_values([tscol, idcol])
-            last_sec, depth = state.get if state.exists else (None, 0)
+        def step(key, pdf, state):
+            pdf = pdf.sort_values([tscol, idcol])
+            last_sec, depth = state or (None, 0)
             closed: dict[int, int] = {}
             for ts in pdf[tscol]:
                 sec = int(ts.timestamp())
@@ -897,34 +889,34 @@ class SessionDepthOp:
                     depth = 0
                 depth += 1
                 last_sec = sec
-            state.update((last_sec, depth))
-            if close:
-                # Never set a timeout at/under the current watermark
-                # (Spark rejects it); clamping forward only hastens an
-                # already-due closure to the next trigger.
-                # (last_sec + gap_s + 1) * 1000, NOT (last_sec+gap_s)*1000+1:
-                # the split truncates timestamps to whole seconds, so an
-                # event in the sub-second window [.., +1s) has
-                # sec == last_sec + gap_s and EXTENDS the session in the
-                # batch twin (split is strictly > gap_s) — closing before
-                # the full second has passed would count the session short.
-                state.setTimeoutTimestamp(
-                    max(
-                        (last_sec + gap_s + 1) * 1000,
-                        state.getCurrentWatermarkMs() + 1,
-                    )
-                )
-            yield pd.DataFrame(
-                sorted(closed.items()), columns=["depth", "delta"]
-            )
+            return (last_sec, depth), sorted(closed.items())
+
+        def deadline(state, wm_ms):
+            # Never set a timeout at/under the current watermark (Spark
+            # rejects it); clamping forward only hastens an already-due
+            # closure to the next trigger.
+            # (last_sec + gap_s + 1) * 1000, NOT (last_sec+gap_s)*1000+1:
+            # the split truncates timestamps to whole seconds, so an
+            # event in the sub-second window [.., +1s) has
+            # sec == last_sec + gap_s and EXTENDS the session in the
+            # batch twin (split is strictly > gap_s) — closing before
+            # the full second has passed would count the session short.
+            return max((state[0] + gap_s + 1) * 1000, wm_ms + 1)
+
+        def on_expire(key, state):
+            # The watermark passed last_sec + gap: no in-gap event can
+            # still arrive, so the open session is CLOSED.
+            _, depth = state
+            return None, [(min(depth, cap), 1)]
 
         src = df.withWatermark(tscol, self.watermark) if close else df
-        return src.groupBy(self.user_col).applyInPandasWithState(
-            update,
-            out_schema,
+        return _keyed_fold(
+            src,
+            [self.user_col],
+            "depth long, delta long",
             "last_sec long, depth long",
-            "update",
-            GroupStateTimeout.EventTimeTimeout if close else GroupStateTimeout.NoTimeout,
+            step,
+            expiry=(deadline, on_expire) if close else None,
         )
 
 
@@ -2128,14 +2120,18 @@ class MinHashSketchOp:
     ``minhash_signature`` array would re-evaluate the md5 inside each
     of the k interpreted higher-order minima (measured 5× slower at
     sf0.1, 97 s vs ~10 s at sf1 for the staged source-Jaccard query).
-    State is k longs per source.
 
-    Batch twin (``__call__``): k min-aggregates over the exploded
-    (source, hash) rows — map-side partial mins, one
-    |sources|-cardinality shuffle. Docs with fewer than ``n`` words
-    (empty shingle set) contribute nothing in either path; min over
-    per-doc minima ≡ min over the shingle UNION, so the maintained
-    signature is the source-level set signature.
+    One plan for bounded and streaming input: k min-aggregates over the
+    exploded (source, pos, hash) rows, map-side partial mins and one
+    |sources|-cardinality shuffle; on a stream Spark keeps the k minima
+    and the count per source as native update-mode state.
+    ``n_docs`` counts the shingle rows at position 0, one per document
+    with at least one shingle, so it assumes each input row is a
+    distinct document (``doc_id`` unique). Docs with fewer than ``n``
+    words (empty shingle set) contribute nothing; min over per-doc
+    minima ≡ min over the shingle UNION, so the maintained signature is
+    the source-level set signature. A checkpoint written by the earlier
+    ``applyInPandasWithState`` fold of this op cannot be resumed.
     """
 
     name: str
@@ -2143,13 +2139,10 @@ class MinHashSketchOp:
     n: int = 3
     source_col: str = "source"
     text_col: str = "text"
-    id_col: str = "doc_id"
-
-    _OUT = "source string, n_docs long, sig array<long>"
 
     def _hashed(self, df: DataFrame) -> DataFrame:
-        # (source, doc_id, h) rows: ONE md5 per (doc, shingle);
-        # explode_outer + null filter per the scan-predicate trap
+        # (source, pos, h) rows: ONE md5 per (doc, shingle);
+        # posexplode_outer + null filter per the scan-predicate trap
         # (operators/dedup._exploded_shingles). Batch input is SPREAD
         # first: a one-file parquet scans as one partition and would
         # pin the whole shingle+md5 stage to one core (streaming
@@ -2167,11 +2160,10 @@ class MinHashSketchOp:
         return (
             df.select(
                 F.col(self.source_col).alias("source"),
-                F.col(self.id_col).alias("doc_id"),
-                F.explode_outer(sh).alias("s"),
+                F.posexplode_outer(sh).alias("pos", "s"),
             )
             .filter(F.col("s").isNotNull())
-            .select("source", "doc_id", T.hash32(F.col("s")).alias("h"))
+            .select("source", "pos", T.hash32(F.col("s")).alias("h"))
         )
 
     def _affine(self, i: int):
@@ -2183,13 +2175,11 @@ class MinHashSketchOp:
         return (F.lit(a) * F.col("h") + F.lit(b)) % F.lit(T.MINHASH_PRIME)
 
     def __call__(self, df: DataFrame) -> DataFrame:
-        if df.isStreaming:
-            return self.stream_apply(df)
         return (
             self._hashed(df)
             .groupBy("source")
             .agg(
-                F.countDistinct("doc_id").cast("long").alias("n_docs"),
+                F.count_if(F.col("pos") == 0).alias("n_docs"),
                 F.array(
                     *[F.min(self._affine(i)) for i in range(self.k)]
                 ).alias("sig"),
@@ -2197,34 +2187,7 @@ class MinHashSketchOp:
         )
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        from distributed_file_system_with_stream_processing_spark.functions import (
-            text as T,
-        )
-
-        k = self.k
-        params = [T.mh_params(i) for i in range(k)]
-        prime = T.MINHASH_PRIME
-
-        def step(key, pdf, state):
-            if state:
-                sig = [int(x) for x in state[0]]
-                n = state[1]
-            else:
-                sig, n = [prime] * k, 0
-            h = pdf["h"].to_numpy()
-            for i, (a, b) in enumerate(params):
-                m = int(((a * h + b) % prime).min())
-                if m < sig[i]:
-                    sig[i] = m
-            # a doc's shingle rows all derive from the micro-batch that
-            # carried the doc, so per-batch distinct doc ids sum to the
-            # exact doc census (append-only corpus)
-            n += int(pdf["doc_id"].nunique())
-            return (sig, n), [(key[0], n, sig)]
-
-        return _keyed_fold(
-            self._hashed(df), ["source"], self._OUT, "sig array<long>, n long", step
-        )
+        return self(df)
 
 
 def _mg_fold(counters: dict, terms, k: int) -> None:
@@ -2854,21 +2817,21 @@ class CompletenessMonitorOp:
     batch ``field_completeness_census`` (plans/llm_ops25.py), keyed:
     per key (source / event_type), per configured column, the running
     (n_rows, n_missing) where missing = NULL, or blank-after-trim for
-    string columns. The fold is a vector of order-free integer sums
-    (state: one count + one long per column per key), so per-trigger
-    emissions are trigger-split invariant and the final emission
-    equals the batch twin exactly — the ingest-health dashboard that
-    flags a producer nulling a field WHILE the drop is landing.
+    string columns. The counters are order-free integer sums, so
+    per-trigger emissions are trigger-split invariant and the final
+    emission equals the batch result exactly — the ingest-health
+    dashboard that flags a producer nulling a field WHILE the drop is
+    landing.
 
-    Batch twin (``__call__``): one fused agg per key (every counter
-    rides the same scan) + a stack() unpivot.
+    One plan for bounded and streaming input: one fused agg per key
+    (every counter rides the same scan) + a stack() unpivot; on a
+    stream Spark keeps the count and one sum per column per key as
+    native update-mode state.
     """
 
     name: str
     key_col: str = "source"
     fields: tuple[tuple[str, bool], ...] = (("text", True), ("lang", True))
-
-    _OUT = "key string, column_name string, n_rows long, n_missing long"
 
     def _miss(self, col: str, is_str: bool):
         c = F.col(col)
@@ -2886,8 +2849,6 @@ class CompletenessMonitorOp:
         return df.select(F.col(self.key_col).alias("key"), flags.alias("fl"))
 
     def __call__(self, df: DataFrame) -> DataFrame:
-        if df.isStreaming:
-            return self.stream_apply(df)
         aggs = [F.count(F.lit(1)).cast("long").alias("n_rows")] + [
             F.sum(F.col("fl").getItem(i)).cast("long").alias(f"m_{i}")
             for i in range(len(self.fields))
@@ -2903,21 +2864,4 @@ class CompletenessMonitorOp:
         ).select("key", "column_name", "n_rows", "n_missing")
 
     def stream_apply(self, df: DataFrame) -> DataFrame:
-        names = [c for c, _ in self.fields]
-        nf = len(names)
-
-        def step(key, pdf, state):
-            if state:
-                n, ms = state
-                ms = list(ms)
-            else:
-                n, ms = 0, [0] * nf
-            n += len(pdf)
-            for fl in pdf["fl"]:
-                for i in range(nf):
-                    ms[i] += int(fl[i])
-            return (n, ms), [(key[0], names[i], n, ms[i]) for i in range(nf)]
-
-        return _keyed_fold(
-            self._base(df), ["key"], self._OUT, "n long, ms array<long>", step
-        )
+        return self(df)

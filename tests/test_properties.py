@@ -407,12 +407,16 @@ def test_merge_pairs_disjoint_equals_sequential_for_any_batch(spark, words, rule
 
 
 class _FakeState:
-    """The slice of GroupState a NoTimeout fold touches."""
+    """The slice of GroupState a fold touches. ``hasTimedOut`` and
+    ``watermark_ms`` are set by the test; ``timeout_ms`` records the
+    last registered event-time timeout."""
 
-    def __init__(self):
+    def __init__(self, watermark_ms=0):
         self.exists = False
         self._v = None
         self.hasTimedOut = False
+        self.watermark_ms = watermark_ms
+        self.timeout_ms = None
 
     @property
     def get(self):
@@ -421,6 +425,16 @@ class _FakeState:
     def update(self, v):
         self._v = tuple(v)
         self.exists = True
+
+    def remove(self):
+        self._v = None
+        self.exists = False
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ms = ms
+
+    def getCurrentWatermarkMs(self):
+        return self.watermark_ms
 
 
 class _StubDF:
@@ -434,6 +448,12 @@ class _StubDF:
         self.captured = {}
 
     def selectExpr(self, *_, **__):
+        return self
+
+    def dropna(self, *_, **__):
+        return self
+
+    def withWatermark(self, *_):
         return self
 
     def groupBy(self, *_):
@@ -501,6 +521,90 @@ def test_keyed_fold_owns_the_state_protocol():
     assert len(calls) == 2
 
     assert _columns("a map<string,long>, b decimal(10,2), c long") == ["a", "b", "c"]
+
+
+def test_keyed_fold_expiry_protocol():
+    """_keyed_fold's event-time expiry without Spark: after each step
+    ``deadline`` registers a timeout (or none, when it returns None);
+    on a timed-out call ``on_expire`` replaces ``step`` and either
+    removes the state, keeps it without a new timeout, or emits rows
+    and then removes it. Without an expiry the fold passes NoTimeout."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from distributed_file_system_with_stream_processing_spark.streaming.ops import (
+        _keyed_fold,
+    )
+
+    def step(key, pdf, state):
+        n = (state[0] if state else 0) + len(pdf)
+        return (n,), [(key[0], n)]
+
+    def capture(expiry=None):
+        stub = _StubDF()
+        _keyed_fold(stub, ["k"], "k string, n long", "n long", step, expiry=expiry)
+        return stub.captured
+
+    assert capture()["args"][3] == GroupStateTimeout.NoTimeout
+
+    expired = []
+
+    def deadline(state, wm_ms):
+        return None if state[0] >= 10 else max(state[0] * 1000, wm_ms + 1)
+
+    def fold_with(on_expire):
+        def recorded(key, state):
+            expired.append((key, state))
+            return on_expire(key, state)
+
+        cap = capture((deadline, recorded))
+        assert cap["args"][3] == GroupStateTimeout.EventTimeTimeout
+        return cap["fn"]
+
+    chunk = pd.DataFrame({"k": ["a", "a", "a"]})
+
+    # remove on expiry: no rows, state gone
+    update = fold_with(lambda key, state: (None, []))
+    st_ = _FakeState(watermark_ms=500)
+    [out] = update(("a",), iter([chunk]), st_)
+    assert out.values.tolist() == [["a", 3]]
+    assert st_.get == (3,) and st_.timeout_ms == 3000
+    st_.watermark_ms = 5000
+    [out] = update(("a",), iter([chunk]), st_)
+    assert st_.get == (6,) and st_.timeout_ms == 6000
+    st_.hasTimedOut, st_.timeout_ms = True, None
+    [out] = update(("a",), iter([]), st_)
+    assert expired == [(("a",), (6,))]
+    assert list(out.columns) == ["k", "n"] and len(out) == 0
+    assert not st_.exists and st_.timeout_ms is None
+
+    # the deadline clamps past the watermark
+    fresh = _FakeState(watermark_ms=7000)
+    list(update(("b",), iter([chunk]), fresh))
+    assert fresh.timeout_ms == 7001
+
+    # keep on expiry: the state stays, no new timeout is registered
+    update = fold_with(lambda key, state: (state, []))
+    st_ = _FakeState()
+    list(update(("a",), iter([chunk]), st_))
+    st_.hasTimedOut, st_.timeout_ms = True, None
+    [out] = update(("a",), iter([]), st_)
+    assert len(out) == 0
+    assert st_.exists and st_.get == (3,) and st_.timeout_ms is None
+
+    # emit, then remove
+    update = fold_with(lambda key, state: (None, [(key[0], -state[0])]))
+    st_ = _FakeState()
+    list(update(("c",), iter([chunk]), st_))
+    st_.hasTimedOut = True
+    [out] = update(("c",), iter([]), st_)
+    assert out.values.tolist() == [["c", -3]]
+    assert not st_.exists
+
+    # a deadline of None registers nothing
+    st_ = _FakeState()
+    list(update(("d",), iter([pd.DataFrame({"k": ["d"] * 10})]), st_))
+    assert st_.get == (10,) and st_.timeout_ms is None
 
 
 # -- ReconcileOp state machine: any arrival order, any trigger split ------

@@ -1901,6 +1901,72 @@ def test_minhash_sketch_stream_equals_batch(spark, dirs):
     assert all(a <= b for a, b in zip(fin["web"][1], first["web"][1]))
 
 
+def test_minhash_sketch_native_state_survives_restart(spark, dirs):
+    """MinHashSketchOp keeps its per-source (n_docs, sig) in Spark's
+    own state store: stop the query, append docs, restart from the
+    same checkpoint, and the last emitted row per source equals the
+    batch result over everything."""
+    schema = "doc_id long, source string, text string"
+    op = O.MinHashSketchOp("mh_restart", k=8, n=3)
+
+    def start():
+        src = spark.readStream.schema(schema).parquet(dirs["src"])
+
+        def sink(bdf, bid):
+            bdf.withColumn("bid", F.lit(bid)).write.mode("append").parquet(
+                dirs["sink"]
+            )
+
+        return (
+            op.stream_apply(src)
+            .writeStream.foreachBatch(sink)
+            .outputMode("update")
+            .option("checkpointLocation", dirs["ckpt"])
+            .start()
+        )
+
+    rows1 = [
+        (1, "web", "alpha beta gamma delta epsilon"),
+        (2, "pdf", "one two three four"),
+        (3, "web", "too short"),
+    ]
+    rows2 = [
+        (4, "web", "zeta eta theta iota kappa"),
+        (5, "pdf", "alpha beta gamma delta"),
+    ]
+    _write(spark.createDataFrame(rows1, schema), dirs["src"])
+    q = start()
+    q.processAllAvailable()
+    q.stop()
+    _write(spark.createDataFrame(rows2, schema), dirs["src"])
+    q2 = start()
+    try:
+        q2.processAllAvailable()
+    finally:
+        q2.stop()
+    last = {}
+    for r in spark.read.parquet(dirs["sink"]).orderBy("bid").collect():
+        last[r["source"]] = (r["n_docs"], list(r["sig"]))
+    batch = {
+        r["source"]: (r["n_docs"], list(r["sig"]))
+        for r in op(spark.read.schema(schema).parquet(dirs["src"])).collect()
+    }
+    assert last == batch
+    assert batch["web"][0] == 2 and batch["pdf"][0] == 2
+
+
+def test_algebraic_stream_ops_use_native_state(spark, dirs):
+    """The ops whose row is a running aggregate plan a native streaming
+    aggregation, not a Python-state fold."""
+    schema = "doc_id long, source string, text string, lang string"
+    _write(spark.createDataFrame([(1, "web", "a b c", "en")], schema), dirs["src"])
+    stream = spark.readStream.schema(schema).parquet(dirs["src"])
+    for op in (O.MinHashSketchOp("mh_plan"), O.CompletenessMonitorOp("cm_plan")):
+        plan = op.stream_apply(stream)._jdf.queryExecution().analyzed().toString()
+        assert "Aggregate" in plan, plan
+        assert "FlatMapGroupsInPandasWithState" not in plan, plan
+
+
 def test_misra_gries_stream_equals_batch(spark, dirs):
     """MisraGriesOp: the k-counter sketch folded across two triggers
     (doc_id-monotone arrival) equals the batch fold over the full
@@ -2712,3 +2778,33 @@ def test_session_uses_small_tungsten_pages(spark):
     derive from an 8 GB heap."""
     mm = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get().memoryManager()
     assert mm.pageSizeBytes() == 1 << 20
+
+
+def test_default_shuffle_partitions_follow_usable_cores():
+    """With SPARK_GRAFT_CPUS unset, get_spark sizes shuffle (and so
+    state-store) partitions to the cores this process may run on, not
+    a fixed count. Runs in a fresh interpreter: the test session
+    already exists and getOrCreate would return it."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "from distributed_file_system_with_stream_processing_spark.session "
+        "import get_spark\n"
+        "s = get_spark(app_name='partitions-default')\n"
+        "print(s.conf.get('spark.sql.shuffle.partitions'))\n"
+        "s.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env["SPARK_DRIVER_MEMORY"] = "512m"
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        env=env,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    )
+    assert out.stdout.strip().splitlines()[-1] == str(len(os.sched_getaffinity(0)))
