@@ -47,10 +47,12 @@ from distributed_file_system_with_stream_processing_spark.sources.pyds import (
     _batch_max_seq,
     _batch_names,
     _canon_arrow_type,
+    _check_write_schema,
     _data_files,
     _gc_pending,
     _publish,
     _stream_batch_id,
+    _window_batches,
 )
 from distributed_file_system_with_stream_processing_spark.sources.tables import (
     footer_schema,
@@ -209,9 +211,15 @@ class TableStore:
         against every other writer of the table, stream sink included.
         The Spark write job runs OUTSIDE the lock, so appends
         serialize only on the (microsecond-scale) stamp+rename, not
-        on the parquet write."""
+        on the parquet write.
+
+        A ``df`` whose column names, order or types differ from the
+        base's raises ValueError before anything is written (the check
+        the stream sink runs): published, such a batch would fail every
+        later read of the table."""
         if not self.exists(name):
             raise TableStoreError(f"table doesn't exist ({name})")
+        _check_write_schema(self._table_dir(name), df.schema)
         ad = self._appends_dir(name)
         _gc_pending(ad)
         tmp = os.path.join(ad, f"_pending-{uuid.uuid4().hex[:12]}")
@@ -401,8 +409,7 @@ class TableStore:
         # a compact_appends() batch is named by its EARLIEST folded
         # stamp and carries per-row stamps — the row filter keeps
         # snapshot precision exact
-        batches = [b for b in self._append_batches(name) if b <= seq]
-        df = self._scan(name, batches)
+        df = self._scan(name, _window_batches(self._appends_dir(name), "", seq))
         return df.filter(F.col("_append_seq") <= seq).drop("_append_seq")
 
     def diff(self, name: str, seq_from: str, seq_to: str) -> DataFrame:
@@ -435,13 +442,8 @@ class TableStore:
             )
         # a compacted batch is named by its EARLIEST folded stamp, so
         # rows later than seq_from may live inside an older-named one —
-        # its max-stamp marker (one local file read) says whether
-        ad = self._appends_dir(name)
-        batches = [
-            b
-            for b in self._append_batches(name)
-            if b <= seq_to and _batch_max_seq(ad, b) > seq_from
-        ]
+        # the row filter keeps the window exact
+        batches = _window_batches(self._appends_dir(name), seq_from, seq_to)
         seq = F.col("_append_seq")
         df = self._scan(name, batches, include_base=False)
         return df.filter((seq > seq_from) & (seq <= seq_to)).drop("_append_seq")

@@ -1,12 +1,12 @@
 """Per-table append lock: strict publication-order stamps.
 
 The TableStore append log names batches by 20-digit time_ns stamps; a
-CDC reader's offset is the max published stamp. Every writer of the
-log — ``TableStore.append``, the ``tablestore`` batch writer and the
-stream sink — writes its batch aside under a hidden ``_``-prefixed dir
-first, then publishes it through ``sources/pyds._publish``, which holds
-this lock while it (a) takes the stamp by bumping past the newest
-existing one and (b) renames the staged dir into ``appends/``. So
+CDC reader's offset is the max published stamp. Both writers of the
+log — ``TableStore.append`` and the ``tablestore`` stream sink — write
+their batch aside under a hidden ``_``-prefixed dir first, then
+publish it through ``sources/pyds._publish``, which holds this lock
+while it (a) takes the stamp by bumping past the newest existing one
+and (b) renames the staged dir into ``appends/``. So
 stamp order == publication order, a reader never sees a half-written
 batch, and a reader can never observe a high-water mark ahead of an
 unpublished earlier stamp. The Spark write itself never runs under the

@@ -1,29 +1,18 @@
-"""Spark 4 Python DataSource over the TableStore append-log.
+"""Spark 4 Python DataSource over the TableStore append-log: the
+log's STREAMING source and sink, plus the on-disk rules every reader
+and writer of the log shares (batch listing, window, stamp, publish).
 
-``spark.read.format("tablestore").option("root", ...).option("table",
-...)`` reads a TableStore table (reference HyDFS file: base + deferred
-append batches, dfs.py) through the PLUGGABLE source API
-(pyspark.sql.datasource) instead of ``TableStore.get``'s native scan:
-
-- one ``InputPartition`` per data FILE (base and append batches alike),
-  so a 100 TB log fans out across executors exactly like the native
-  parquet reader — the planner sees N independent splits;
-- each partition reads its file with pyarrow and yields Arrow
-  RecordBatches (the zero-copy fast path of the Python DataSource API)
-  with the batch's ``_append_seq`` stamped on (compacted batches keep
-  their per-row stamps), reproducing the merged view's ordering
-  contract (``get(with_seq=True)``).
-
-Role: API surface + a second, independently-implemented reader for the
-same on-disk format (the tests cross-check it row-for-row against
-``TableStore.get``). ``TableStore.get`` remains the performance path
-at scale — one multi-path JVM parquet scan of the base and every batch
-dir, with parquet vectorization and filter pushdown, which Python
-DataSources do not get (Spark evaluates filters above the source);
-docstring-level honesty about that division is part of the design.
+``spark.readStream.format("tablestore").option("root", ...).option(
+"table", ...)`` tails a TableStore table's append batches (reference
+HyDFS file: base + deferred append batches, dfs.py) as CDC, and
+``writeStream.format("tablestore")`` appends each micro-batch exactly
+once. Batch reads and writes have one API, ``TableStore.get`` /
+``TableStore.append`` (the reference's ``get`` and ``append``): one
+multi-path JVM parquet scan with vectorization and filter pushdown,
+and one JVM parquet write.
 
 The reference has no pluggable source layer (its reads are RPCs into
-localstorage.go); this mirrors HyDFS read semantics onto Spark's
+localstorage.go); this mirrors HyDFS streaming semantics onto Spark's
 official extension point.
 """
 
@@ -34,8 +23,6 @@ import shutil
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     InputPartition,
@@ -43,12 +30,6 @@ from pyspark.sql.datasource import (
 )
 
 from distributed_file_system_with_stream_processing_spark.locks import append_lock
-
-
-class _FileSplit(InputPartition):
-    def __init__(self, path: str, seq: str):
-        self.path = path
-        self.seq = seq
 
 
 def _data_files(d: str) -> list[str]:
@@ -87,18 +68,19 @@ class TableStoreDataSource(DataSource):
         return os.path.join(root, table)
 
     def schema(self):
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
+        """The base footer's Spark schema, mapped as ``TableStore.get``
+        maps it (``footer_schema``), plus ``_append_seq``."""
         from pyspark.sql.types import StringType, StructField
+
+        from distributed_file_system_with_stream_processing_spark.sources.tables import (
+            footer_schema,
+        )
 
         base = _data_files(os.path.join(self._table_dir(), "base"))
         if not base:
             raise ValueError(f"no base files under {self._table_dir()!r}")
-        st = from_arrow_schema(pq.read_schema(base[0]))
+        st = footer_schema(base[0])
         return st.add(StructField("_append_seq", StringType(), False))
-
-    def reader(self, schema) -> DataSourceReader:
-        return _TableStoreReader(self._table_dir(), [f.name for f in schema.fields])
 
     def streamReader(self, schema):
         return _TableStoreStreamReader(
@@ -116,40 +98,6 @@ class TableStoreDataSource(DataSource):
                 "log cannot express)"
             )
         return _TableStoreStreamWriter(self._table_dir(), schema)
-
-    def writer(self, schema, overwrite: bool):
-        return _TableStoreBatchWriter(self._table_dir(), schema, overwrite)
-
-
-class _TableStoreReader(DataSourceReader):
-    def __init__(self, table_dir: str, columns: list[str]):
-        self.table_dir = table_dir
-        self.columns = columns
-
-    def partitions(self):
-        splits = [
-            _FileSplit(p, "") for p in _data_files(os.path.join(self.table_dir, "base"))
-        ]
-        appends = os.path.join(self.table_dir, "appends")
-        for seq in _batch_names(appends):
-            for p in _data_files(os.path.join(appends, seq)):
-                splits.append(_FileSplit(p, seq))
-        return splits
-
-    def read(self, partition: _FileSplit):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(partition.path)
-        if "_append_seq" not in tbl.column_names:
-            # plain batch: stamp its dir name; a compact_appends() batch
-            # keeps the per-row original stamps it already carries
-            tbl = tbl.append_column(
-                "_append_seq", pa.array([partition.seq] * len(tbl), pa.string())
-            )
-        # column order must match the declared schema exactly
-        tbl = tbl.select(self.columns)
-        yield from tbl.to_batches()
 
 
 class _StreamSplit(InputPartition):
@@ -176,6 +124,22 @@ def _batch_max_seq(appends_dir: str, seq: str) -> str:
     return seq
 
 
+def _window_batches(appends_dir: str, lo: str, hi: str) -> list[str]:
+    """The published batches that can hold rows stamped in ``(lo, hi]``
+    — THE window rule of ``TableStore.diff``, ``TableStore.get_as_of``
+    and the stream reader. A batch's dir name is its earliest stamp and
+    ``_batch_max_seq`` its newest, so it qualifies iff ``name <= hi``
+    and its max stamp ``> lo``. A compacted batch can straddle the
+    window, so callers still filter rows by ``_append_seq``."""
+    if hi <= lo:
+        return []
+    return [
+        b
+        for b in _batch_names(appends_dir)
+        if b <= hi and _batch_max_seq(appends_dir, b) > lo
+    ]
+
+
 class _TableStoreStreamReader(DataSourceStreamReader):
     """Streaming CDC over the TableStore append log — the
     ``readStream`` twin of ``TableStore.diff``: each micro-batch is
@@ -183,18 +147,17 @@ class _TableStoreStreamReader(DataSourceStreamReader):
 
     Offsets are ``{"seq": <stamp>}`` — the append-log high-water mark,
     monotone because stamps are lexicographic sequence strings.
-    ``partitions(start, end)`` emits one split per NEW data file, so
-    the micro-batch fans out across executors like the batch reader
-    (this is the partition-based ``DataSourceStreamReader`` API, not
-    the driver-side simple reader — rows never funnel through the
-    driver). Compacted batches (dir named by the EARLIEST folded
-    stamp, per-row ``_append_seq`` column, ``_MAX_SEQ`` marker) are
-    included when their max stamp is in-window and their rows are
-    re-filtered row-level in ``read`` — the same precision contract as
-    ``TableStore.diff``, so a compaction between two triggers neither
-    drops nor duplicates rows. The base is NOT part of the stream (a
-    CDC consumer bootstraps from the batch reader / ``get_as_of``,
-    then tails appends from that point).
+    ``partitions(start, end)`` emits one split per NEW data file of the
+    batches ``_window_batches`` picks, so the micro-batch fans out
+    across executors (this is the partition-based
+    ``DataSourceStreamReader`` API, not the driver-side simple reader —
+    rows never funnel through the driver). Compacted batches (dir named
+    by the EARLIEST folded stamp, per-row ``_append_seq`` column,
+    ``_MAX_SEQ`` marker) have their rows re-filtered row-level in
+    ``read`` — the same precision contract as ``TableStore.diff``, so a
+    compaction between two triggers neither drops nor duplicates rows.
+    The base is NOT part of the stream (a CDC consumer bootstraps from
+    ``TableStore.get_as_of``, then tails appends from that point).
     """
 
     def __init__(self, table_dir: str, columns: list[str]):
@@ -214,15 +177,11 @@ class _TableStoreStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         lo, hi = start["seq"], end["seq"]
         d = self._appends_dir()
-        splits: list[_StreamSplit] = []
-        if hi <= lo:
-            return splits
-        for seq in _batch_names(d):
-            if _batch_max_seq(d, seq) <= lo or seq > hi:
-                continue
-            for p in _data_files(os.path.join(d, seq)):
-                splits.append(_StreamSplit(p, seq, lo, hi))
-        return splits
+        return [
+            _StreamSplit(p, seq, lo, hi)
+            for seq in _window_batches(d, lo, hi)
+            for p in _data_files(os.path.join(d, seq))
+        ]
 
     def read(self, partition: _StreamSplit):
         import pyarrow as pa
@@ -266,8 +225,8 @@ def _bumped_stamp(appends_dir: str) -> str:
 
 
 def _publish(appends_dir: str, staged_dir: str, suffix: str) -> str:
-    """THE publication step of every append — ``TableStore.append``,
-    the ``tablestore`` batch writer and the stream sink. The batch is
+    """THE publication step of every append — ``TableStore.append``
+    and the ``tablestore`` stream sink. The batch is
     already fully written under a hidden ``_``-prefixed dir (the Spark
     write never runs under the lock); under the per-table append lock
     this picks the stamp and renames the staged dir into ``appends/``
@@ -291,8 +250,8 @@ _ORPHAN_AGE_S = 3600.0
 
 
 def _gc_pending(appends_dir: str) -> None:
-    """Sweep orphaned ``_pending-*`` staging dirs of crashed appends
-    (TableStore.append and the batch writer): a crash between the
+    """Sweep orphaned ``_pending-*`` staging dirs of crashed
+    ``TableStore.append`` calls: a crash between the
     parquet write and the publish rename strands a full batch copy
     that no reader sees and no fold reclaims. Age-gated — concurrent
     appends are legal, and a live append's staging is younger than
@@ -376,6 +335,10 @@ def _canon_arrow_type(t) -> str:
         return _canon_arrow_type(t.value_type)
     if pa.types.is_list(t) or pa.types.is_large_list(t):
         return f"list<{_canon_arrow_type(t.value_type)}>"
+    if pa.types.is_map(t):  # the footer names the map's entry field
+        return f"map<{_canon_arrow_type(t.key_type)}, {_canon_arrow_type(t.item_type)}>"
+    if pa.types.is_duration(t):  # Spark writes a day-time interval as int64
+        return "int64"
     return str(t)
 
 
@@ -420,81 +383,7 @@ def _check_write_schema(table_dir: str, schema) -> None:
         )
 
 
-class _StagedPartsMixin:
-    """Shared two-phase staging for both writers: tasks stage one
-    Arrow-fed parquet part each under ``appends/_staging/`` and return
-    its path; only paths named in SUCCESSFUL tasks' commit messages
-    are ever published, so task retries cannot duplicate rows within a
-    batch. ``_PART_PREFIX`` keeps the two writers' staged files apart
-    (a stream sink may legitimately run concurrently with batch
-    appends on the same table)."""
-
-    table_dir: str
-    _PART_PREFIX = "part"
-
-    def _appends_dir(self) -> str:
-        return os.path.join(self.table_dir, "appends")
-
-    def write(self, iterator):
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        batches = [b for b in iterator if len(b)]
-        if not batches:
-            return _AppendCommit(())
-        staging = os.path.join(self._appends_dir(), "_staging")
-        os.makedirs(staging, exist_ok=True)
-        path = os.path.join(
-            staging, f"{self._PART_PREFIX}-{uuid.uuid4().hex}.parquet"
-        )
-        pq.write_table(pa.Table.from_batches(batches), path)
-        return _AppendCommit((path,))
-
-    def _assemble(self, files: list, name: str) -> str:
-        """Move the successful tasks' staged parts into one hidden
-        batch dir ``appends/<name>`` (ready for ``_publish``)."""
-        tmp = os.path.join(self._appends_dir(), name)
-        os.makedirs(tmp)
-        for f in files:
-            os.replace(f, os.path.join(tmp, os.path.basename(f)))
-        return tmp
-
-    @staticmethod
-    def _discard(messages) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            for f in m.files:
-                if os.path.isfile(f):
-                    os.remove(f)
-
-    def _sweep_staging(self, keep: set, min_age_s: float = 0.0) -> None:
-        """Remove this writer's orphaned staged parts (failed or
-        speculative tasks never surface in commit messages, so their
-        files would otherwise accumulate forever). Only files with our
-        prefix are touched — a concurrent writer of the OTHER kind
-        keeps its staging intact. ``min_age_s`` protects writers
-        WITHOUT a single-writer contract (concurrent batch appends):
-        only parts older than the window are swept."""
-        import time
-
-        staging = os.path.join(self._appends_dir(), "_staging")
-        if not os.path.isdir(staging):
-            return
-        cutoff = time.time() - min_age_s
-        for f in os.listdir(staging):
-            p = os.path.join(staging, f)
-            if f.startswith(self._PART_PREFIX + "-") and p not in keep:
-                try:
-                    if os.path.getmtime(p) <= cutoff:
-                        os.remove(p)
-                except OSError:
-                    pass
-
-
-class _TableStoreStreamWriter(_StagedPartsMixin, DataSourceStreamArrowWriter):
+class _TableStoreStreamWriter(DataSourceStreamArrowWriter):
     """Streaming SINK into the TableStore append log — the
     ``writeStream`` twin of ``TableStore.append`` and the write-side
     analogue of the reference leader's batch-id dedup (reference
@@ -514,10 +403,10 @@ class _TableStoreStreamWriter(_StagedPartsMixin, DataSourceStreamArrowWriter):
        one publication step every writer of the log shares — as
        ``<stamp>-sb<batchId>``: stamp choice and rename happen under
        the per-table append lock, so stamps follow publication order
-       across the sink, plain ``TableStore.append`` and the batch
-       writer, and a CDC reader's high-water offset never skips a
-       batch. Replay dedup (crash after publish, before the checkpoint
-       recorded it) is by batch id, the reference leader's remembered
+       across the sink and plain ``TableStore.append``, and a CDC
+       reader's high-water offset never skips a batch. Replay dedup
+       (crash after publish, before the checkpoint recorded it) is by
+       batch id, the reference leader's remembered
        processed-batch set (rainstorm.go:537-575): a batchId is
        already published iff it is ≤ the LEDGER's high-water mark or a
        published dir carries its ``-sb`` suffix; ``commit`` then
@@ -539,15 +428,55 @@ class _TableStoreStreamWriter(_StagedPartsMixin, DataSourceStreamArrowWriter):
     writers would collide on batch ids, and a fresh-checkpoint query
     restarting batch ids at 0 on an already-written table would be
     deduped against the old lineage's ledger (write to a new table or
-    clear the ledger instead).
+    clear the ledger instead). So every file under ``appends/_staging/``
+    that no successful task reported by the end of a commit is an
+    orphan, and the commit sweeps it.
     """
-
-    _PART_PREFIX = "s-part"
 
     def __init__(self, table_dir: str, schema=None):
         _check_write_schema(table_dir, schema)
         self.table_dir = table_dir
         os.makedirs(self._appends_dir(), exist_ok=True)
+
+    def _appends_dir(self) -> str:
+        return os.path.join(self.table_dir, "appends")
+
+    def write(self, iterator):
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        batches = [b for b in iterator if len(b)]
+        if not batches:
+            return _AppendCommit(())
+        staging = os.path.join(self._appends_dir(), "_staging")
+        os.makedirs(staging, exist_ok=True)
+        path = os.path.join(staging, f"part-{uuid.uuid4().hex}.parquet")
+        pq.write_table(pa.Table.from_batches(batches), path)
+        return _AppendCommit((path,))
+
+    @staticmethod
+    def _discard(messages) -> None:
+        for m in messages:
+            if m is None:
+                continue
+            for f in m.files:
+                if os.path.isfile(f):
+                    os.remove(f)
+
+    def _sweep_staging(self) -> None:
+        """Remove orphaned staged parts: failed or speculative tasks
+        never surface in commit messages, so their files would
+        otherwise accumulate forever."""
+        staging = os.path.join(self._appends_dir(), "_staging")
+        if not os.path.isdir(staging):
+            return
+        for f in os.listdir(staging):
+            try:
+                os.remove(os.path.join(staging, f))
+            except OSError:
+                pass
 
     def _find_published(self, batch_id: int) -> bool:
         return any(
@@ -582,68 +511,20 @@ class _TableStoreStreamWriter(_StagedPartsMixin, DataSourceStreamArrowWriter):
             # discard the re-staged parts, repair the ledger.
             self._discard(messages)
             _advance_ledger(ad, batchId)
-            self._sweep_staging(set())
+            self._sweep_staging()
             return
         if not files:
             return  # empty batch: publish nothing
-        tmp = self._assemble(files, f"_commit-{batchId:08d}-{uuid.uuid4().hex[:8]}")
+        # the successful tasks' parts, moved into one hidden batch dir
+        tmp = os.path.join(ad, f"_commit-{batchId:08d}-{uuid.uuid4().hex[:8]}")
+        os.makedirs(tmp)
+        for f in files:
+            os.replace(f, os.path.join(tmp, os.path.basename(f)))
         _publish(ad, tmp, f"sb{batchId:08d}")
         _advance_ledger(ad, batchId)
-        # single-writer: any of our parts still staged belong to failed
-        # or speculative tasks of batches ≤ this one — orphans
-        self._sweep_staging(set())
+        # single-writer: any parts still staged belong to failed or
+        # speculative tasks of batches ≤ this one — orphans
+        self._sweep_staging()
 
     def abort(self, messages, batchId: int) -> None:
-        self._discard(messages)
-
-
-class _TableStoreBatchWriter(_StagedPartsMixin, DataSourceArrowWriter):
-    """Batch SINK into the TableStore append log — ``df.write.format(
-    "tablestore").mode("append")`` becomes ONE append batch, published
-    with the same stage-then-atomic-rename protocol as the streaming
-    writer (tasks stage Arrow-fed parquet parts; the driver's commit
-    assembles only the SUCCESSFUL tasks' parts under a hidden
-    ``_pending-*`` dir and ``_publish``-es it once).
-
-    The batch is named ``<stamp>-<uuid>`` by ``_publish``, exactly like
-    ``TableStore.append`` — the two write paths are interchangeable in
-    merge order, snapshots and CDC. Mirroring the reference's write
-    model (HyDFS has create + append, never in-place overwrite),
-    ``mode("overwrite")`` is rejected.
-
-    Unlike the stream sink there is NO single-writer contract here
-    (concurrent batch appends are legal, like TableStore.append), so
-    housekeeping is age-gated: only staged parts and ``_pending-*``
-    dirs older than an hour — orphans of crashed jobs, never a live
-    commit's — are swept.
-
-    Role: API completeness for the pluggable source (read /
-    streamRead / streamWrite / write); ``TableStore.append`` remains
-    the performance path (JVM parquet writer, no Python hop).
-    """
-
-    _PART_PREFIX = "b-part"
-
-    def __init__(self, table_dir: str, schema, overwrite: bool):
-        if overwrite:
-            raise ValueError(
-                "tablestore is an append log: mode('overwrite') is not "
-                "supported (use TableStore.create / merge)"
-            )
-        _check_write_schema(table_dir, schema)
-        self.table_dir = table_dir
-
-    def commit(self, messages) -> None:
-        import uuid
-
-        files = [f for m in messages if m is not None for f in m.files]
-        if not files:
-            return
-        ad = self._appends_dir()
-        tmp = self._assemble(files, f"_pending-{uuid.uuid4().hex[:12]}")
-        _publish(ad, tmp, uuid.uuid4().hex[:8])
-        self._sweep_staging(set(), min_age_s=_ORPHAN_AGE_S)
-        _gc_pending(ad)
-
-    def abort(self, messages) -> None:
         self._discard(messages)

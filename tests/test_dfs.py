@@ -5,6 +5,7 @@ multiappend convergence (test5)."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -305,51 +306,6 @@ def test_compact_appends_crash_recovery(store, spark):
     assert not os.path.isfile(os.path.join(combined, store._FOLDED_MARKER))
 
 
-def test_python_datasource_matches_tablestore_get(spark, tmp_path):
-    """The pluggable `tablestore` Python DataSource (sources/pyds.py)
-    must reproduce TableStore.get(with_seq=True) row-for-row: base +
-    every append batch with its _append_seq stamp, one input partition
-    per data file."""
-    from distributed_file_system_with_stream_processing_spark.sources.pyds import (
-        TableStoreDataSource,
-    )
-
-    store = TableStore(spark, str(tmp_path / "store"))
-    base = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    store.create("t", base)
-    store.append("t", spark.createDataFrame([(3, "c")], "id long, v string"))
-    store.append("t", spark.createDataFrame([(4, "d"), (5, "e")], "id long, v string"))
-
-    spark.dataSource.register(TableStoreDataSource)
-    load = lambda: (
-        spark.read.format("tablestore")
-        .option("root", str(tmp_path / "store"))
-        .option("table", "t")
-        .load()
-    )
-    via_ds = load()
-    want = {
-        (r["id"], r["v"], r["_append_seq"])
-        for r in store.get("t", with_seq=True).collect()
-    }
-    got = {(r["id"], r["v"], r["_append_seq"]) for r in via_ds.collect()}
-    assert got == want and len(got) == 5
-    # parallelism contract: one split per data file (>= 3 batches here)
-    assert via_ds.rdd.getNumPartitions() >= 3
-
-    # after compact_appends the combined batch already carries per-row
-    # _append_seq; the source keeps those stamps instead of adding a
-    # second column
-    store.compact_appends("t")
-    want = {
-        (r["id"], r["v"], r["_append_seq"])
-        for r in store.get("t", with_seq=True).collect()
-    }
-    assert want == got
-    got = {(r["id"], r["v"], r["_append_seq"]) for r in load().collect()}
-    assert got == want
-
-
 def test_get_is_one_scan_with_no_eager_jobs(store, spark):
     """get() over base + N append batches builds ONE parquet scan: its
     schema comes from the base footer, so no Spark job runs before the
@@ -383,19 +339,30 @@ def test_get_is_one_scan_with_no_eager_jobs(store, spark):
 
 def test_get_rejects_batch_whose_columns_differ(store, spark):
     """An append batch whose column names or types differ from the
-    base's fails the read with a TableStoreError naming the batch."""
+    base's fails the read with a TableStoreError naming the batch.
+    ``TableStore.append`` refuses such a batch up front, so the bad
+    batches here come from an outside writer: pyarrow plus the log's
+    own publish step."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from distributed_file_system_with_stream_processing_spark.sources.pyds import _publish
+
+    def outside_append(name, tbl):
+        ad = store._appends_dir(name)
+        tmp = os.path.join(ad, "_pending-outside")
+        os.makedirs(tmp)
+        pq.write_table(tbl, os.path.join(tmp, "part-0.parquet"))
+        return _publish(ad, tmp, "outside")
+
     store.create("t", _df(spark, [(1, "base")]))
     store.append("t", _df(spark, [(2, "ok")]))
-    renamed = store.append(
-        "t", spark.createDataFrame([(3, "x")], "id long, other string")
-    )
+    renamed = outside_append("t", pa.table({"id": [3], "other": ["x"]}))
     with pytest.raises(TableStoreError, match=renamed):
         store.get("t")
 
     store.create("u", _df(spark, [(1, "base")]))
-    retyped = store.append(
-        "u", spark.createDataFrame([("3", "x")], "id string, val string")
-    )
+    retyped = outside_append("u", pa.table({"id": ["3"], "val": ["x"]}))
     with pytest.raises(TableStoreError, match=retyped):
         store.get("u")
 
@@ -435,6 +402,79 @@ def test_diff_cdc_windows(store, spark):
 
     with pytest.raises(TableStoreError, match="empty diff window"):
         store.diff("t", s4, s3)
+
+
+def test_window_batches_rule(tmp_path):
+    """The one rule for which append batches can hold rows stamped in
+    (lo, hi]: name <= hi and max stamp > lo, where a compacted batch's
+    max stamp is its _max_seq.txt marker. Hidden dirs never count, and
+    hi <= lo is empty. Spark-free, over planted dirs."""
+    from distributed_file_system_with_stream_processing_spark.sources.pyds import (
+        _MAX_SEQ_MARKER,
+        _window_batches,
+    )
+
+    s = lambda n: f"{n:020d}"
+    ad = str(tmp_path / "appends")
+    plain = [f"{s(10)}-a", f"{s(20)}-b", f"{s(30)}-c", f"{s(70)}-g"]
+    compacted = f"{s(40)}-d"  # folded stamps 40..60
+    for b in plain + [compacted, "_pending-0123", "_staging", f"_commit-00000001-{s(5)}"]:
+        os.makedirs(os.path.join(ad, b))
+    with open(os.path.join(ad, compacted, _MAX_SEQ_MARKER), "w") as fh:
+        fh.write(f"{s(60)}-f\n")
+
+    w = lambda lo, hi: _window_batches(ad, lo, hi)
+    assert w("", f"{s(99)}") == plain[:3] + [compacted, plain[3]]
+    assert w("", plain[2]) == plain[:3]
+    assert w(plain[0], plain[2]) == plain[1:3]
+    # rows 40..60 of the compacted batch: in by its marker, not its name
+    assert w(f"{s(50)}", f"{s(60)}-f") == [compacted]
+    assert w(plain[2], f"{s(45)}") == [compacted]
+    assert w(f"{s(60)}-f", plain[3]) == [plain[3]]
+    # hi <= lo: empty, even where a compacted batch straddles the point
+    assert w(plain[1], plain[1]) == []
+    assert w(f"{s(50)}", f"{s(50)}") == []
+    assert w(plain[2], plain[0]) == []
+    assert _window_batches(str(tmp_path / "missing"), "", s(99)) == []
+
+
+def test_stream_schema_matches_get(store, spark, tmp_path):
+    """readStream.format('tablestore') declares the schema get() reads:
+    the base footer's Spark schema (timestamp_ntz stays timestamp_ntz,
+    a day-time interval stays an interval) plus _append_seq, and the
+    stream reads an appended row of those types back."""
+    from distributed_file_system_with_stream_processing_spark.sources.pyds import (
+        TableStoreDataSource,
+    )
+
+    row = "SELECT {}L AS id, timestamp_ntz'2024-01-0{} 10:00:00' AS t, " \
+          "INTERVAL '{} 02:03:04' DAY TO SECOND AS iv, map('k', {}) AS m"
+    store.create("t", spark.sql(row.format(1, 1, 1, 1)))
+    store.append("t", spark.sql(row.format(2, 2, 2, 2)))
+    spark.dataSource.register(TableStoreDataSource)
+    stream = (
+        spark.readStream.format("tablestore")
+        .option("root", store.root)
+        .option("table", "t")
+        .load()
+    )
+    assert stream.schema["_append_seq"].dataType.simpleString() == "string"
+    # types, not nullability: Spark's parquet read marks every get() column nullable
+    got_types = stream.drop("_append_seq").schema.simpleString()
+    assert got_types == store.get("t").schema.simpleString()
+
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("tablestore_schema_probe")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.awaitTermination(120)
+    q.stop()
+    got = spark.sql("SELECT id, t, iv, m FROM tablestore_schema_probe").collect()
+    want = store.get("t").filter("id = 2").collect()
+    assert got == want
 
 
 def test_python_datasource_streaming_cdc_tails_appends(spark, tmp_path):
@@ -775,35 +815,28 @@ def test_stream_writer_ledger_crash_window_survives_fold(spark, tmp_path):
 
 
 def test_writers_reject_schema_mismatch(spark, tmp_path):
-    """Both tablestore writers reject a dataframe whose column names
-    don't match the table base — publishing a misnamed batch would
-    corrupt the log and only fail at a later read, far from the bad
-    writer."""
+    """Both writers of the log, TableStore.append and the tablestore
+    stream sink, reject a dataframe whose column names don't match the
+    table base — publishing a misnamed batch would corrupt the log and
+    only fail at a later read, far from the bad writer."""
     import pytest
 
     from distributed_file_system_with_stream_processing_spark.sources.pyds import (
-        TableStoreDataSource,
         _TableStoreStreamWriter,
     )
 
     root = str(tmp_path / "store")
     store = TableStore(spark, root)
     store.create("t", spark.createDataFrame([(1, "base")], "id long, v string"))
-    spark.dataSource.register(TableStoreDataSource)
 
     bad = spark.createDataFrame([(2, "x")], "id long, renamed string")
     with pytest.raises(Exception, match="schema mismatch"):
-        (
-            bad.write.format("tablestore")
-            .option("root", root)
-            .option("table", "t")
-            .mode("append")
-            .save()
-        )
+        store.append("t", bad)
     with pytest.raises(ValueError, match="schema mismatch"):
         _TableStoreStreamWriter(os.path.join(root, "t"), bad.schema)
-    # nothing was published by the rejected writes
+    # nothing was published, or even staged, by the rejected writes
     assert store._append_batches("t") == []
+    assert not glob.glob(os.path.join(store._appends_dir("t"), "_pending-*"))
 
 
 def test_stream_writer_rejects_complete_mode(spark, tmp_path):
@@ -853,6 +886,9 @@ def test_stream_commit_gc_collects_orphans(spark, tmp_path):
     orphan_part = os.path.join(staging, "s-part-orphan.parquet")
     pq.write_table(pa.table({"id": [9], "v": ["zombie"]}), orphan_part)
 
+    # a stray uncommitted part in _staging must not leak into reads
+    assert {(r["id"], r["v"]) for r in store.get("t").collect()} == {(1, "base")}
+
     fresh = os.path.join(staging, "s-part-fresh.parquet")
     pq.write_table(pa.table({"id": [2], "v": ["x"]}), fresh)
     w.commit([_AppendCommit((fresh,))], batchId=0)
@@ -864,62 +900,6 @@ def test_stream_commit_gc_collects_orphans(spark, tmp_path):
     }
 
 
-def test_batch_writer_appends_one_batch(spark, tmp_path):
-    """df.write.format('tablestore').mode('append') publishes ONE
-    append batch interchangeable with TableStore.append; overwrite is
-    rejected (the store is an append log); and stray files in the
-    sink's _staging area are invisible to the batch reader."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from distributed_file_system_with_stream_processing_spark.sources.pyds import (
-        TableStoreDataSource,
-    )
-
-    root = str(tmp_path / "store")
-    schema = "id long, v string"
-    store = TableStore(spark, root)
-    store.create("t", spark.createDataFrame([(1, "base")], schema))
-    spark.dataSource.register(TableStoreDataSource)
-
-    (
-        spark.createDataFrame([(2, "w1"), (3, "w2")], schema)
-        .write.format("tablestore")
-        .option("root", root)
-        .option("table", "t")
-        .mode("append")
-        .save()
-    )
-    assert {(r["id"], r["v"]) for r in store.get("t").collect()} == {
-        (1, "base"), (2, "w1"), (3, "w2"),
-    }
-    assert len(store._append_batches("t")) == 1
-
-    with pytest.raises(Exception, match="append log|not supported"):
-        (
-            spark.createDataFrame([(9, "no")], schema)
-            .write.format("tablestore")
-            .option("root", root)
-            .option("table", "t")
-            .mode("overwrite")
-            .save()
-        )
-
-    # a stray uncommitted part in _staging must not leak into reads
-    staging = os.path.join(root, "t", "appends", "_staging")
-    os.makedirs(staging, exist_ok=True)
-    pq.write_table(pa.table({"id": [99], "v": ["stray"]}),
-                   os.path.join(staging, "part-stray.parquet"))
-    via_ds = (
-        spark.read.format("tablestore")
-        .option("root", root)
-        .option("table", "t")
-        .load()
-    )
-    assert {r["id"] for r in via_ds.collect()} == {1, 2, 3}
-    assert {r["id"] for r in store.get("t").collect()} == {1, 2, 3}
-
-
 def test_writers_reject_type_mismatch(spark, tmp_path):
     """Beyond names: a write whose columns MATCH by name but differ in
     type (v long vs v string) is rejected up front — publishing it
@@ -929,7 +909,6 @@ def test_writers_reject_type_mismatch(spark, tmp_path):
     import pytest
 
     from distributed_file_system_with_stream_processing_spark.sources.pyds import (
-        TableStoreDataSource,
         _TableStoreStreamWriter,
     )
 
@@ -939,32 +918,20 @@ def test_writers_reject_type_mismatch(spark, tmp_path):
         "t",
         spark.sql("SELECT 1::LONG AS id, 'base' AS v, timestamp'2024-01-01' AS ts"),
     )
-    spark.dataSource.register(TableStoreDataSource)
 
     bad = spark.sql("SELECT 2::LONG AS id, 7::LONG AS v, timestamp'2024-01-02' AS ts")
     with pytest.raises(Exception, match="schema mismatch"):
-        (
-            bad.write.format("tablestore")
-            .option("root", root)
-            .option("table", "t")
-            .mode("append")
-            .save()
-        )
+        store.append("t", bad)
     with pytest.raises(ValueError, match="column types"):
         _TableStoreStreamWriter(os.path.join(root, "t"), bad.schema)
     assert store._append_batches("t") == []
+    assert not glob.glob(os.path.join(store._appends_dir("t"), "_pending-*"))
     # the same shape with matching types passes (incl. the timestamp
     # column, whose physical unit/tz may differ between the JVM
     # parquet writer and pyarrow — canonicalized, not compared raw)
     good = spark.sql("SELECT 2::LONG AS id, 'x' AS v, timestamp'2024-01-02' AS ts")
     _TableStoreStreamWriter(os.path.join(root, "t"), good.schema)
-    (
-        good.write.format("tablestore")
-        .option("root", root)
-        .option("table", "t")
-        .mode("append")
-        .save()
-    )
+    store.append("t", good)
     assert len(store.get("t").collect()) == 2
 
 

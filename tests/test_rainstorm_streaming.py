@@ -1041,7 +1041,7 @@ def test_effective_tokens_stream_matches_batch_at_boundaries(spark, tmp_path):
 
     store = TableStore(spark, str(tmp_path / "store"))
     # CDC streams APPENDS only — the base is empty by design (a real
-    # consumer bootstraps the base via the batch reader / get_as_of)
+    # consumer bootstraps the base via get_as_of)
     store.create("docs", spark.createDataFrame([], schema))
     spark.dataSource.register(TableStoreDataSource)
 
