@@ -424,16 +424,16 @@ def test_window_batches_rule(tmp_path):
         fh.write(f"{s(60)}-f\n")
 
     w = lambda lo, hi: _window_batches(ad, lo, hi)
-    assert w("", f"{s(99)}") == plain[:3] + [compacted, plain[3]]
+    assert w("", s(99)) == plain[:3] + [compacted, plain[3]]
     assert w("", plain[2]) == plain[:3]
     assert w(plain[0], plain[2]) == plain[1:3]
     # rows 40..60 of the compacted batch: in by its marker, not its name
-    assert w(f"{s(50)}", f"{s(60)}-f") == [compacted]
-    assert w(plain[2], f"{s(45)}") == [compacted]
+    assert w(s(50), f"{s(60)}-f") == [compacted]
+    assert w(plain[2], s(45)) == [compacted]
     assert w(f"{s(60)}-f", plain[3]) == [plain[3]]
     # hi <= lo: empty, even where a compacted batch straddles the point
     assert w(plain[1], plain[1]) == []
-    assert w(f"{s(50)}", f"{s(50)}") == []
+    assert w(s(50), s(50)) == []
     assert w(plain[2], plain[0]) == []
     assert _window_batches(str(tmp_path / "missing"), "", s(99)) == []
 
