@@ -53,6 +53,21 @@ def _batch_names(appends_dir: str) -> list[str]:
     return sorted(s for s in os.listdir(appends_dir) if not s.startswith(("_", ".")))
 
 
+def _nullable(t):
+    """``t`` with every field, array element and map value nullable."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
 class TableStoreDataSource(DataSource):
     """format name: ``tablestore``; options: ``root``, ``table``."""
 
@@ -68,8 +83,10 @@ class TableStoreDataSource(DataSource):
         return os.path.join(root, table)
 
     def schema(self):
-        """The base footer's Spark schema, mapped as ``TableStore.get``
-        maps it (``footer_schema``), plus ``_append_seq``."""
+        """The schema ``TableStore.get`` reads: the base footer's Spark
+        schema (``footer_schema``) with every field nullable, as Spark's
+        parquet read makes it (a batch may hold NULLs where the base
+        had none), plus ``_append_seq``."""
         from pyspark.sql.types import StringType, StructField
 
         from distributed_file_system_with_stream_processing_spark.sources.tables import (
@@ -79,7 +96,7 @@ class TableStoreDataSource(DataSource):
         base = _data_files(os.path.join(self._table_dir(), "base"))
         if not base:
             raise ValueError(f"no base files under {self._table_dir()!r}")
-        st = footer_schema(base[0])
+        st = _nullable(footer_schema(base[0]))
         return st.add(StructField("_append_seq", StringType(), False))
 
     def streamReader(self, schema):

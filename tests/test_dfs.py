@@ -441,8 +441,9 @@ def test_window_batches_rule(tmp_path):
 def test_stream_schema_matches_get(store, spark, tmp_path):
     """readStream.format('tablestore') declares the schema get() reads:
     the base footer's Spark schema (timestamp_ntz stays timestamp_ntz,
-    a day-time interval stays an interval) plus _append_seq, and the
-    stream reads an appended row of those types back."""
+    a day-time interval stays an interval) with every field nullable,
+    plus _append_seq. The stream reads appended rows of those types
+    back, NULLs in columns the base had none in included."""
     from distributed_file_system_with_stream_processing_spark.sources.pyds import (
         TableStoreDataSource,
     )
@@ -451,6 +452,10 @@ def test_stream_schema_matches_get(store, spark, tmp_path):
           "INTERVAL '{} 02:03:04' DAY TO SECOND AS iv, map('k', {}) AS m"
     store.create("t", spark.sql(row.format(1, 1, 1, 1)))
     store.append("t", spark.sql(row.format(2, 2, 2, 2)))
+    store.append("t", spark.sql(
+        "SELECT 3L AS id, CAST(NULL AS timestamp_ntz) AS t, "
+        "CAST(NULL AS INTERVAL DAY TO SECOND) AS iv, map('k', CAST(NULL AS INT)) AS m"
+    ))
     spark.dataSource.register(TableStoreDataSource)
     stream = (
         spark.readStream.format("tablestore")
@@ -459,9 +464,7 @@ def test_stream_schema_matches_get(store, spark, tmp_path):
         .load()
     )
     assert stream.schema["_append_seq"].dataType.simpleString() == "string"
-    # types, not nullability: Spark's parquet read marks every get() column nullable
-    got_types = stream.drop("_append_seq").schema.simpleString()
-    assert got_types == store.get("t").schema.simpleString()
+    assert stream.drop("_append_seq").schema == store.get("t").schema
 
     q = (
         stream.writeStream.format("memory")
@@ -472,9 +475,9 @@ def test_stream_schema_matches_get(store, spark, tmp_path):
     )
     q.awaitTermination(120)
     q.stop()
-    got = spark.sql("SELECT id, t, iv, m FROM tablestore_schema_probe").collect()
-    want = store.get("t").filter("id = 2").collect()
-    assert got == want
+    got = spark.sql("SELECT id, t, iv, m FROM tablestore_schema_probe ORDER BY id").collect()
+    want = store.get("t").filter("id > 1").orderBy("id").collect()
+    assert len(got) == 2 and got == want
 
 
 def test_python_datasource_streaming_cdc_tails_appends(spark, tmp_path):
