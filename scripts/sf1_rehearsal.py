@@ -22,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from distributed_file_system_with_stream_processing_spark.session import get_spark
 
 QUERIES_UNDER_TEST = [
     "semantic_dedup",
@@ -177,12 +177,14 @@ def run_one(q, fn, spark, sf_dir: str):
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SF1_DRIVER_MEM", "48g"))
-        .getOrCreate()
+    # The engine's own session defaults (UTC, 1 MB pages and broadcast
+    # blocks, the generated-class cache), so sf1 timings price the
+    # same session the package and its benchmark run in.
+    os.environ["SPARK_DRIVER_MEMORY"] = os.environ.get("SF1_DRIVER_MEM", "48g")
+    spark = get_spark(
+        app_name="sf1-rehearsal",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        shuffle_partitions=32,
     )
     spark.sparkContext.setLogLevel("ERROR")
     from distributed_file_system_with_stream_processing_spark.plans.registry import QUERIES

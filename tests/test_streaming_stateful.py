@@ -2780,6 +2780,41 @@ def test_session_uses_small_tungsten_pages(spark):
     assert mm.pageSizeBytes() == 1 << 20
 
 
+def test_session_reuses_generated_classes_across_warm_queries(spark):
+    """get_spark's generated-class cache holds a working set of short
+    queries: once ~120 distinct plans have run, running them again
+    compiles nothing. At Spark's default of 100 entries the second
+    round evicts and recompiles them through Janino."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    compiles = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
+    # The literal is inlined into the generated code, so each plan is
+    # its own cache key.
+    plans = [spark.range(8).selectExpr(f"id * {i} + {i} AS x").filter(f"x > {i}") for i in range(120)]
+    for df in plans:
+        df.write.format("noop").mode("overwrite").save()
+    before = compiles.getCount()
+    for df in plans:
+        df.write.format("noop").mode("overwrite").save()
+    assert compiles.getCount() - before == 0
+
+
+def test_session_broadcasts_a_small_value_into_a_small_block(spark):
+    """A broadcast allocates one whole spark.broadcast.blockSize block
+    before it writes its first byte; get_spark's 1 MB blocks keep a
+    tiny broadcast (and so each stage's task binary) under 2 MB of
+    allocation on the calling JVM thread, against 4 MB at Spark's
+    default. Py4J runs each Python thread's calls on one JVM thread, so
+    the thread's allocation counter brackets the broadcast."""
+    sc = spark.sparkContext
+    mx = sc._jvm.java.lang.management.ManagementFactory.getThreadMXBean()
+    sc.broadcast([0]).destroy()  # warm-up: Py4J method lookups, class loading
+    before = mx.getCurrentThreadAllocatedBytes()
+    b = sc.broadcast([1, 2, 3])
+    allocated = mx.getCurrentThreadAllocatedBytes() - before
+    b.destroy()
+    assert allocated < 2 << 20, allocated
+
+
 def test_default_shuffle_partitions_follow_usable_cores():
     """With SPARK_GRAFT_CPUS unset, get_spark sizes shuffle (and so
     state-store) partitions to the cores this process may run on, not
