@@ -16,6 +16,282 @@ import sys
 import time
 
 
+# The flagship queries, in run order; scripts/gen_shuffles.py censuses the
+# same list.
+HEADLINE: tuple[str, ...] = (
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_local_supplier_volume",
+    "q6_forecast_revenue",
+    "q4_order_priority",
+    "q13_customer_distribution",
+    "q18_large_orders",
+    "top_customers_by_revenue",
+    "events_windowed_agg",
+    "events_sessionize",
+    "events_asof_join",
+    "events_distinct_users",
+    "rs_pipeline_batch",
+    "rs_wordcount",
+    "rs_running_agg",
+    "dedup_exact",
+    "dedup_minhash_lsh",
+    "token_count",
+    "text_redact_pii",
+    "ann_cosine_topk",
+    "embedding_neardup",
+    # round-1 late additions: second TPC-H wave + new join/sketch
+    # families (judge: the set only ever grows — totals across
+    # rounds compare like-for-like on the shared prefix)
+    "q7_nation_volume",
+    "q21_sole_returner",
+    "events_range_join",
+    "lineitem_grouping_sets",
+    "order_percentiles_approx",
+    # renamed in round 2: the df-capped plan (benched in round 1 as
+    # dedup_jaccard_capped) is now the primary dedup_ngram_jaccard
+    "dedup_ngram_jaccard",
+    # round-2 additions: the scale-path ANN variants headline so
+    # regressions in the 100 TB shapes are caught, not just the
+    # brute-force baseline (embedding_neardup is now the banded
+    # scale path; the brute twin lives in embedding_neardup_exact)
+    "ann_quantized_topk",
+    "ann_ivf_bucketed",
+    "ann_lsh_bucketed",
+    "q9_nation_profit",
+    "decontaminate_ngram",
+    "paragraph_dedup",
+    "docs_seq_packing",
+    "docs_clean_pack",
+    # round-3 additions: the corpus-stats set + trained-IVF + the
+    # TPC-H completions (set only grows; cross-round totals compare
+    # on the shared prefix)
+    "tfidf_top_terms",
+    "doc_char_entropy",
+    "docs_chunk_overlap",
+    "events_value_zscore",
+    "ann_ivf_trained",
+    "q2_min_cost_supplier",
+    "q11_important_parts",
+    "q12_shipmode_priority",
+    "doc_winnowing_fingerprint",
+    "embedding_norm_stats",
+    "semantic_dedup",
+    "docs_gopher_rules",
+    "docs_unigram_perplexity",
+    # late round-3 additions: the full SemDeDup recipe + the two
+    # targeted-selection scorers
+    "semantic_dedup_kmeans",
+    "docs_bm25_score",
+    "dsir_importance_weights",
+    "dsir_resample_topk",
+    "bm25_retrieval_topk",
+    "rrf_fusion_topk",
+    # round-3 continuation: bigram LM surface + mixing diagnostics
+    "ngram_counts_topk",
+    "docs_bigram_perplexity",
+    "docs_kl_by_source",
+    "minhash_containment",
+    "events_anomaly_mad",
+    "fusion_interp_topk",
+    "token_freq_countmin",
+    "docs_pretokenize_stats",
+    "contrastive_pairs",
+    "ann_pq_topk",
+    "dedup_exact_substring",
+    "cross_source_leakage",
+    "curation_funnel",
+    "bpe_train_merges",
+    "docs_train_val_split",
+    "docs_interp_perplexity",
+    "docs_substring_novelty",
+    "ann_opq_topk",
+    "tfidf_retrieval_topk",
+    "events_transition_matrix",
+    "source_temperature_mix",
+    "embedding_logreg_score",
+    "corpus_zipf_fit",
+    "embedding_random_projection",
+    "docs_kn_perplexity",
+    "decontaminate_bloom",
+    "neardup_pagerank",
+    "events_asof_forward",
+    "dedup_agreement_matrix",
+    "part_pair_lift",
+    "dedup_cluster_sizes",
+    "events_interarrival_stats",
+    "discount_quantity_slope",
+    "events_markov_stationary",
+    "session_transition_matrix",
+    "zipf_by_source",
+    "session_expected_length",
+    # round-4 additions
+    "neardup_communities",
+    "neardup_degree_stats",
+    "bigram_pmi_topk",
+    "embedding_quantization_error",
+    "docs_bigram_perplexity_bucketed",
+    "neardup_triangle_stats",
+    "neardup_khop_reach",
+    "embedding_margin_stats",
+    "embedding_knn_classvote",
+    "docs_effective_tokens",
+    "events_decayed_value",
+    "events_pareto_users",
+    "customer_rfm_segments",
+    "nation_revenue_hhi",
+    "docs_ttr_profile",
+    "lang_source_contingency",
+    "ngram_coverage_curve",
+    "events_hourly_profile",
+    "events_type_overlap",
+    "supplier_fulfillment_lag",
+    "orders_backlog_series",
+    "docs_kn_perplexity_bucketed",
+    "embedding_dim_variance",
+    "corpus_cross_entropy",
+    # round-5 additions
+    "docs_interp_perplexity_bucketed",
+    "events_peak_rate",
+    "simhash_threshold_sweep",
+    "embedding_label_drift",
+    "orders_monthly_growth",
+    "corpus_vocab_growth",
+    "events_time_to_convert",
+    "docs_duplicate_text_topk",
+    "embedding_cosine_histogram",
+    "embedding_knn_graph",
+    "lsh_recall_curve",
+    "customer_cohort_ltv",
+    "events_dau_mau",
+    "orders_priority_mix_shift",
+    "embedding_hubness",
+    "events_user_gaps",
+    "docs_quality_dup_lift",
+    "embedding_db_index",
+    "session_path_topk",
+    "minhash_threshold_sweep",
+    "quality_ppl_correlation",
+    "part_return_rates",
+    "docs_char_class_profile",
+    "ann_recall_audit",
+    "docs_dedup_survivor_quality",
+    "source_token_entropy",
+    "customer_order_frequency",
+    "query_likelihood_topk",
+    "docs_token_percentiles_by_lang",
+    "docs_template_shingles",
+    "events_ab_conversion",
+    "events_ab_value_ttest",
+    "ann_probe_recall_curve",
+    "ivf_cell_balance",
+    "shingle_df_histogram",
+    "docs_ppl_percentiles_by_source",
+    "source_neardup_matrix",
+    "events_survival_curve",
+    "customer_revenue_gini",
+    "supplier_single_source_parts",
+    # round-6 additions
+    "docs_stopword_profile",
+    "docs_hapax_by_source",
+    "docs_compression_proxy",
+    "docs_prefix_dup_rate",
+    "docs_casefold_dup_lift",
+    "docs_sentence_length_profile",
+    "events_retention_matrix",
+    "events_funnel_dropoff_time",
+    "events_burstiness",
+    "events_hour_entropy_by_type",
+    "events_lag1_autocorr",
+    "events_value_benford",
+    "customer_revenue_gini_binned",
+    "supplier_part_concentration",
+    "part_brand_price_dispersion",
+    "customer_mktsegment_value_gap",
+    "supplier_acctbal_quartiles",
+    "orders_weekday_seasonality",
+    "nation_trade_balance",
+    "embedding_dim_kurtosis",
+    "embedding_centroid_shift",
+    "embedding_intrinsic_dim",
+    "docs_ngram_novelty_curve",
+    "docs_token_bigram_entropy",
+    "docs_numeric_density",
+    "events_type_cooccurrence_lift",
+    "events_peak_to_mean_by_user",
+    "events_quiet_hours",
+    "customer_order_value_trend",
+    "docs_word_length_profile",
+    "docs_first_word_concentration",
+    "events_value_percentiles_by_type",
+    "events_first_last_type_matrix",
+    "customer_repeat_rate_by_nation",
+    "lineitem_quantity_price_corr",
+    "docs_vocab_overlap_matrix",
+    "orders_status_year_mix",
+    "events_error_adjacency",
+    "customer_acctbal_vs_spend_corr",
+    "part_size_price_slope",
+    "events_session_depth_histogram",
+    "docs_duplicate_prefix_topk",
+    "orders_value_cv_by_priority",
+    "embedding_neardup_uncapped",
+    "orders_reconciliation_audit",
+    # round-7 additions (new queries headline in the round they land)
+    "docs_heaps_curve",
+    "docs_heaps_exponent",
+    "docs_oov_rate_curve",
+    "docs_term_burstiness_topk",
+    "docs_readability_proxy",
+    "docs_source_concentration_by_lang",
+    "docs_length_band_quality",
+    "docs_split_balance_audit",
+    "docs_cluster_source_purity",
+    "docs_hapax_quality_lift",
+    "docs_char_bigram_entropy_by_lang",
+    "docs_simhash_bit_balance",
+    "events_cusum_drift",
+    "events_hill_tail_index",
+    "events_user_type_entropy_hist",
+    "events_wau_growth",
+    "events_type_user_gini_binned",
+    "events_dow_hour_heatmap",
+    "events_daily_anomaly_days",
+    "events_winsorized_stats",
+    "events_props_value_stats",
+    "events_first_touch_attribution",
+    "events_concurrent_sessions_peak",
+    "events_retention_halflife",
+    "customer_balance_band_behavior",
+    "lineitem_discount_band_profile",
+    "part_price_band_revenue",
+    "nation_customer_supplier_balance",
+    "supplier_revenue_consistency",
+    "customer_segment_nation_chi2",
+    "orders_interpurchase_gaps",
+    "lineitem_returned_share_trend",
+    "embedding_label_cohesion",
+    "embedding_dim_corr_topk",
+    "embedding_norm_anova",
+    "embedding_sparsity_profile",
+    "orders_basket_size_profile",
+    "nation_revenue_share_trend",
+    "events_hour_type_value_interaction",
+    "events_error_burst_lengths",
+    "lineitem_tax_band_profile",
+    "part_name_token_price",
+    "docs_quality_by_split",
+    "docs_dup_length_bias",
+    # round-8 additions (the attribution batch queries and the
+    # per-source Heaps screen)
+    "events_last_touch_attribution",
+    "events_linear_attribution",
+    "docs_heaps_exponent_by_source",
+    # round-9 addition (the promoted wide-band neardup)
+    "embedding_neardup_wide",
+)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -28,279 +304,7 @@ def main() -> None:
     spark = get_spark(app_name="bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
-    headline = [
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_local_supplier_volume",
-        "q6_forecast_revenue",
-        "q4_order_priority",
-        "q13_customer_distribution",
-        "q18_large_orders",
-        "top_customers_by_revenue",
-        "events_windowed_agg",
-        "events_sessionize",
-        "events_asof_join",
-        "events_distinct_users",
-        "rs_pipeline_batch",
-        "rs_wordcount",
-        "rs_running_agg",
-        "dedup_exact",
-        "dedup_minhash_lsh",
-        "token_count",
-        "text_redact_pii",
-        "ann_cosine_topk",
-        "embedding_neardup",
-        # round-1 late additions: second TPC-H wave + new join/sketch
-        # families (judge: the set only ever grows — totals across
-        # rounds compare like-for-like on the shared prefix)
-        "q7_nation_volume",
-        "q21_sole_returner",
-        "events_range_join",
-        "lineitem_grouping_sets",
-        "order_percentiles_approx",
-        # renamed in round 2: the df-capped plan (benched in round 1 as
-        # dedup_jaccard_capped) is now the primary dedup_ngram_jaccard
-        "dedup_ngram_jaccard",
-        # round-2 additions: the scale-path ANN variants headline so
-        # regressions in the 100 TB shapes are caught, not just the
-        # brute-force baseline (embedding_neardup is now the banded
-        # scale path; the brute twin lives in embedding_neardup_exact)
-        "ann_quantized_topk",
-        "ann_ivf_bucketed",
-        "ann_lsh_bucketed",
-        "q9_nation_profit",
-        "decontaminate_ngram",
-        "paragraph_dedup",
-        "docs_seq_packing",
-        "docs_clean_pack",
-        # round-3 additions: the corpus-stats set + trained-IVF + the
-        # TPC-H completions (set only grows; cross-round totals compare
-        # on the shared prefix)
-        "tfidf_top_terms",
-        "doc_char_entropy",
-        "docs_chunk_overlap",
-        "events_value_zscore",
-        "ann_ivf_trained",
-        "q2_min_cost_supplier",
-        "q11_important_parts",
-        "q12_shipmode_priority",
-        "doc_winnowing_fingerprint",
-        "embedding_norm_stats",
-        "semantic_dedup",
-        "docs_gopher_rules",
-        "docs_unigram_perplexity",
-        # late round-3 additions: the full SemDeDup recipe + the two
-        # targeted-selection scorers
-        "semantic_dedup_kmeans",
-        "docs_bm25_score",
-        "dsir_importance_weights",
-        "dsir_resample_topk",
-        "bm25_retrieval_topk",
-        "rrf_fusion_topk",
-        # round-3 continuation: bigram LM surface + mixing diagnostics
-        "ngram_counts_topk",
-        "docs_bigram_perplexity",
-        "docs_kl_by_source",
-        "minhash_containment",
-        "events_anomaly_mad",
-        "fusion_interp_topk",
-        "token_freq_countmin",
-        "docs_pretokenize_stats",
-        "contrastive_pairs",
-        "ann_pq_topk",
-        "dedup_exact_substring",
-        "cross_source_leakage",
-        "curation_funnel",
-        "bpe_train_merges",
-        "docs_train_val_split",
-        "docs_interp_perplexity",
-        "docs_substring_novelty",
-        "ann_opq_topk",
-        "tfidf_retrieval_topk",
-        "events_transition_matrix",
-        "source_temperature_mix",
-        "embedding_logreg_score",
-        "corpus_zipf_fit",
-        "embedding_random_projection",
-        "docs_kn_perplexity",
-        "decontaminate_bloom",
-        "neardup_pagerank",
-        "events_asof_forward",
-        "dedup_agreement_matrix",
-        "part_pair_lift",
-        "dedup_cluster_sizes",
-        "events_interarrival_stats",
-        "discount_quantity_slope",
-        "events_markov_stationary",
-        "session_transition_matrix",
-        "zipf_by_source",
-        "session_expected_length",
-        # round-4 additions
-        "neardup_communities",
-        "neardup_degree_stats",
-        "bigram_pmi_topk",
-        "embedding_quantization_error",
-        "docs_bigram_perplexity_bucketed",
-        "neardup_triangle_stats",
-        "neardup_khop_reach",
-        "embedding_margin_stats",
-        "embedding_knn_classvote",
-        "docs_effective_tokens",
-        "events_decayed_value",
-        "events_pareto_users",
-        "customer_rfm_segments",
-        "nation_revenue_hhi",
-        "docs_ttr_profile",
-        "lang_source_contingency",
-        "ngram_coverage_curve",
-        "events_hourly_profile",
-        "events_type_overlap",
-        "supplier_fulfillment_lag",
-        "orders_backlog_series",
-        "docs_kn_perplexity_bucketed",
-        "embedding_dim_variance",
-        "corpus_cross_entropy",
-        # round-5 additions
-        "docs_interp_perplexity_bucketed",
-        "events_peak_rate",
-        "simhash_threshold_sweep",
-        "embedding_label_drift",
-        "orders_monthly_growth",
-        "corpus_vocab_growth",
-        "events_time_to_convert",
-        "docs_duplicate_text_topk",
-        "embedding_cosine_histogram",
-        "embedding_knn_graph",
-        "lsh_recall_curve",
-        "customer_cohort_ltv",
-        "events_dau_mau",
-        "orders_priority_mix_shift",
-        "embedding_hubness",
-        "events_user_gaps",
-        "docs_quality_dup_lift",
-        "embedding_db_index",
-        "session_path_topk",
-        "minhash_threshold_sweep",
-        "quality_ppl_correlation",
-        "part_return_rates",
-        "docs_char_class_profile",
-        "ann_recall_audit",
-        "docs_dedup_survivor_quality",
-        "source_token_entropy",
-        "customer_order_frequency",
-        "query_likelihood_topk",
-        "docs_token_percentiles_by_lang",
-        "docs_template_shingles",
-        "events_ab_conversion",
-        "events_ab_value_ttest",
-        "ann_probe_recall_curve",
-        "ivf_cell_balance",
-        "shingle_df_histogram",
-        "docs_ppl_percentiles_by_source",
-        "source_neardup_matrix",
-        "events_survival_curve",
-        "customer_revenue_gini",
-        "supplier_single_source_parts",
-        # round-6 additions
-        "docs_stopword_profile",
-        "docs_hapax_by_source",
-        "docs_compression_proxy",
-        "docs_prefix_dup_rate",
-        "docs_casefold_dup_lift",
-        "docs_sentence_length_profile",
-        "events_retention_matrix",
-        "events_funnel_dropoff_time",
-        "events_burstiness",
-        "events_hour_entropy_by_type",
-        "events_lag1_autocorr",
-        "events_value_benford",
-        "customer_revenue_gini_binned",
-        "supplier_part_concentration",
-        "part_brand_price_dispersion",
-        "customer_mktsegment_value_gap",
-        "supplier_acctbal_quartiles",
-        "orders_weekday_seasonality",
-        "nation_trade_balance",
-        "embedding_dim_kurtosis",
-        "embedding_centroid_shift",
-        "embedding_intrinsic_dim",
-        "docs_ngram_novelty_curve",
-        "docs_token_bigram_entropy",
-        "docs_numeric_density",
-        "events_type_cooccurrence_lift",
-        "events_peak_to_mean_by_user",
-        "events_quiet_hours",
-        "customer_order_value_trend",
-        "docs_word_length_profile",
-        "docs_first_word_concentration",
-        "events_value_percentiles_by_type",
-        "events_first_last_type_matrix",
-        "customer_repeat_rate_by_nation",
-        "lineitem_quantity_price_corr",
-        "docs_vocab_overlap_matrix",
-        "orders_status_year_mix",
-        "events_error_adjacency",
-        "customer_acctbal_vs_spend_corr",
-        "part_size_price_slope",
-        "events_session_depth_histogram",
-        "docs_duplicate_prefix_topk",
-        "orders_value_cv_by_priority",
-        "embedding_neardup_uncapped",
-        "orders_reconciliation_audit",
-        # round-7 additions (new queries headline in the round they land)
-        "docs_heaps_curve",
-        "docs_heaps_exponent",
-        "docs_oov_rate_curve",
-        "docs_term_burstiness_topk",
-        "docs_readability_proxy",
-        "docs_source_concentration_by_lang",
-        "docs_length_band_quality",
-        "docs_split_balance_audit",
-        "docs_cluster_source_purity",
-        "docs_hapax_quality_lift",
-        "docs_char_bigram_entropy_by_lang",
-        "docs_simhash_bit_balance",
-        "events_cusum_drift",
-        "events_hill_tail_index",
-        "events_user_type_entropy_hist",
-        "events_wau_growth",
-        "events_type_user_gini_binned",
-        "events_dow_hour_heatmap",
-        "events_daily_anomaly_days",
-        "events_winsorized_stats",
-        "events_props_value_stats",
-        "events_first_touch_attribution",
-        "events_concurrent_sessions_peak",
-        "events_retention_halflife",
-        "customer_balance_band_behavior",
-        "lineitem_discount_band_profile",
-        "part_price_band_revenue",
-        "nation_customer_supplier_balance",
-        "supplier_revenue_consistency",
-        "customer_segment_nation_chi2",
-        "orders_interpurchase_gaps",
-        "lineitem_returned_share_trend",
-        "embedding_label_cohesion",
-        "embedding_dim_corr_topk",
-        "embedding_norm_anova",
-        "embedding_sparsity_profile",
-        "orders_basket_size_profile",
-        "nation_revenue_share_trend",
-        "events_hour_type_value_interaction",
-        "events_error_burst_lengths",
-        "lineitem_tax_band_profile",
-        "part_name_token_price",
-        "docs_quality_by_split",
-        "docs_dup_length_bias",
-        # round-8 additions (the attribution batch queries and the
-        # per-source Heaps screen)
-        "events_last_touch_attribution",
-        "events_linear_attribution",
-        "docs_heaps_exponent_by_source",
-        # round-9 addition (the promoted wide-band neardup)
-        "embedding_neardup_wide",
-    ]
-    headline = [q for q in headline if q in QUERIES]
+    headline = [q for q in HEADLINE if q in QUERIES]
 
     # Warm the JVM + parquet footers once so per-query numbers measure
     # the plans, not first-touch setup.

@@ -25,8 +25,9 @@ Spark mapping of the membership+ring layers (SURVEY.md §1).
 
 Reads are lazy DataFrames: ONE multi-path parquet scan over the base
 dir and every append batch dir, read with the base's schema (taken
-from its parquet footer, so building the read runs no Spark job) and
-carrying a stable ``_append_seq`` (the batch dir name, or a compacted
+from its parquet footer, so building the read runs no Spark job). A
+stamped read (``get(with_seq=True)``, ``diff``, ``get_as_of``) also
+carries a stable ``_append_seq`` (the batch dir name, or a compacted
 batch's per-row stamp) so downstream plans can reproduce byte-order
 semantics when they need them (e.g. exporting a line file).
 """
@@ -258,29 +259,36 @@ class TableStore:
         key = f"{name}|seq={with_seq}"
         if cache and key in self._cached:
             return self._cached[key]
-        df = self._scan(name, self._append_batches(name))
-        df = df if with_seq else df.drop("_append_seq")
+        df = self._scan(name, self._append_batches(name), with_seq=with_seq)
         if cache:
             df = df.persist()
             self._cached[key] = df
         return df
 
     def _scan(
-        self, name: str, batches: list[str], include_base: bool = True
+        self,
+        name: str,
+        batches: list[str],
+        include_base: bool = True,
+        with_seq: bool = True,
     ) -> DataFrame:
         """ONE parquet scan over the base dir (``include_base``) and the
-        given append batch dirs, with ``_append_seq`` on every row: ''
-        for the base, the batch dir name for plain batches, and the
-        file's own per-row stamp for compact_appends() batches.
+        given append batch dirs. ``with_seq`` adds ``_append_seq`` to
+        every row: '' for the base, the batch dir name for plain
+        batches, and the file's own per-row stamp for compact_appends()
+        batches.
 
         The scan reads with the base's schema, taken from its footer
         (``footer_schema``), so no schema-inference job runs while
-        the DataFrame is built; ``_metadata.file_path`` names each
-        row's batch, and column pruning drops both when the caller
-        drops ``_append_seq``. Before the read, every batch's footer is
-        checked against the base (driver-local pyarrow): a batch whose
-        columns or types differ raises TableStoreError naming it,
-        instead of being read with nulls or coerced values."""
+        the DataFrame is built. The stamp comes from
+        ``_metadata.file_path``, which the optimizer does not prune
+        back out when a caller drops ``_append_seq``: the scan would
+        still generate every row's file metadata and row index. So a
+        read without stamps is the plain scan. Before the read, every
+        batch's footer is checked against the base (driver-local
+        pyarrow): a batch whose columns or types differ raises
+        TableStoreError naming it, instead of being read with nulls or
+        coerced values."""
         import pyarrow.parquet as pq
 
         ad = self._appends_dir(name)
@@ -306,6 +314,8 @@ class TableStore:
                 )
         dirs = [self._base_dir(name)] if include_base else []
         dirs += [os.path.join(ad, b) for b in batches]
+        if not with_seq:
+            return self.spark.read.schema(schema).parquet(*dirs)
         df = self.spark.read.schema(
             StructType(schema.fields + [StructField("_append_seq", StringType())])
         ).parquet(*dirs)

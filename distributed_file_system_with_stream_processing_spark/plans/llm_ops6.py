@@ -404,24 +404,27 @@ def embedding_margin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and feed THREE consumers (per-label fold, dims posexplode, n_all
     # fold) — per-branch pruning defeats AQE stage reuse, so the
     # corpus-scale quantize pass ran three times. Now ONE posexplode
-    # aggregation folds Σc, Σc² and the row count per (label, pos) —
-    # identical exact integers, since Σ_vec(Σ_d c²) ≡ Σ_(vec,d) c² and
-    # n_vecs ≡ the per-pos row count of a fixed-dim table — and every
-    # later table derives from the METADATA-scale (labels×dim)
-    # checkpoint. One corpus pass instead of three at any scale.
+    # aggregation folds Σc, Σc² and the vector count per (label, pos) —
+    # identical exact integers, since Σ_vec(Σ_d c²) ≡ Σ_(vec,d) c² —
+    # and every later table derives from the METADATA-scale
+    # (labels×dim) checkpoint. One corpus pass instead of three at any
+    # scale. The explode is outer, so a null or empty vector keeps one
+    # row at a null pos: each vector is counted once, at pos 0 or at
+    # the null pos, as the oracle's count(*) counts it.
     dec = lambda c: F.col(c).cast("decimal(19,0)")
+    pos = F.col("pos")
     dims = (
-        base.select("label", F.posexplode("m").alias("pos", "c"))
+        base.select("label", F.posexplode_outer("m").alias("pos", "c"))
         .groupBy("label", "pos")
         .agg(
             F.sum("c").alias("s_d"),
             F.sum(dec("c") * dec("c")).alias("ss_d"),
-            F.count(F.lit(1)).alias("nv"),
+            F.count_if((pos == 0) | pos.isNull()).alias("nv"),
         )
         .transform(_plan_ckpt)
     )
     per_label_q = dims.groupBy("label").agg(
-        F.max("nv").alias("n_vecs"), F.sum("ss_d").alias("q_tot")
+        F.sum("nv").alias("n_vecs"), F.sum("ss_d").alias("q_tot")
     )
     tot = dims.groupBy("pos").agg(F.sum("s_d").alias("t_d"))
     lbl = (
@@ -431,7 +434,10 @@ def embedding_margin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dec("s_d") * dec("s_d")).alias("s2"),
             F.sum(dec("s_d") * (dec("t_d") - dec("s_d"))).alias("x2"),
         )
-        .join(per_label_q, "label")
+        # right: a label whose every vector is null or empty has no
+        # dims to join, and keeps its row with null means, as in the
+        # oracle
+        .join(per_label_q, "label", "right")
     )
     n_total = per_label_q.agg(F.sum("n_vecs").alias("n_all"))
     out = lbl.crossJoin(broadcast(n_total)).filter(
@@ -476,7 +482,7 @@ pl AS (
 ),
 dims AS (
     SELECT label, i.i AS pos, sum(m[i.i]) AS s_d
-    FROM e CROSS JOIN (SELECT unnest(range(1, len((SELECT m FROM e LIMIT 1)) + 1)) AS i) i
+    FROM e CROSS JOIN (SELECT unnest(range(1, (SELECT max(len(m)) FROM e) + 1)) AS i) i
     GROUP BY label, i.i
 ),
 tot AS (SELECT pos, sum(s_d) AS t_d FROM dims GROUP BY pos),

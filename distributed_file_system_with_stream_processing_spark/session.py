@@ -10,12 +10,14 @@ for a low fixed cost per query once the session is warm:
 - a generated-class cache large enough for a working set of short
   queries, so a warm query reuses its compiled code instead of paying
   Janino again;
-- 1 MB broadcast blocks, since every stage's task binary and every
+- 64 KB broadcast blocks, since every stage's task binary and every
   broadcast-join relation allocates one whole block up front, however
-  small it is.
+  small it is, and most of them are a few KB.
 
-Together the two cut the JVM's allocation per warm ``short_queries``
-query from 115.7 to 70.7 MB (medians of 10 runs each, 4-core VM).
+The cache and 1 MB blocks cut the JVM's allocation per warm
+``short_queries`` query from 115.7 to 70.7 MB, and 64 KB blocks from
+70.4 to 62.3 MB (medians of 10 runs each, 4-core VM). The cost is on a
+cluster: a 64 MB broadcast (the join threshold) travels as 1,024 blocks.
 """
 
 from __future__ import annotations
@@ -67,11 +69,14 @@ DEFAULT_CONF: dict[str, str] = {
     # Broadcast block size. TorrentBroadcast.blockifyObject allocates a
     # whole block (4 MB by default) before it writes the first byte, for
     # every stage's task binary and every broadcast-join relation, most
-    # of which are a few KB. At 1 MB the DAG scheduler thread allocated
-    # 5.9 MB per short query instead of 18.5 MB. 1 MB matches the
-    # Tungsten pages above and still cuts a 64 MB broadcast (the join
-    # threshold) into only 64 pieces on a cluster.
-    "spark.broadcast.blockSize": "1m",
+    # of which are a few KB. Per short query, 4 MB -> 1 MB -> 64 KB took
+    # the DAG scheduler thread from 18.5 to 5.9 to 1.9 MB and the
+    # broadcast-exchange threads from 32.6 to 18.8 to 15.5 MB; 64 KB
+    # took the whole query from 70.4 to 62.3 MB. 16 KB saved nothing
+    # more. The cost: on a cluster a 64 MB broadcast (the join
+    # threshold) travels as 1,024 blocks instead of 64. In local mode
+    # no block is ever fetched.
+    "spark.broadcast.blockSize": "64k",
 }
 
 

@@ -65,33 +65,15 @@ def main() -> None:
         if len(sys.argv) > 1
         else os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
-    from bench import main as _  # noqa: F401  (same headline list source)
-    import bench as bench_mod
-    import inspect
-
-    # reuse bench.py's headline list without running it: parse the
-    # literal from the module source so the two artifacts stay in sync
-    src = inspect.getsource(bench_mod.main)
+    from bench import HEADLINE
     from distributed_file_system_with_stream_processing_spark.plans.registry import (
         _FRONT,
         QUERIES,
     )
     from distributed_file_system_with_stream_processing_spark.session import get_spark
 
-    headline = []
-    in_list = False
-    for line in src.splitlines():
-        s = line.strip()
-        if s.startswith("headline = ["):
-            in_list = True
-            continue
-        if in_list:
-            if s.startswith("]"):
-                break
-            if s.startswith('"') and s.rstrip(",").endswith('"'):
-                headline.append(s.rstrip(",").strip('"'))
     # fronted queries are off the headline list; census them too
-    headline = [q for q in headline if q in QUERIES]
+    headline = [q for q in HEADLINE if q in QUERIES]
     headline += [q for q in _FRONT if q not in headline]
 
     spark = get_spark(app_name="shuffles", master="local[8]", shuffle_partitions=8)

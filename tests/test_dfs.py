@@ -337,6 +337,45 @@ def test_get_is_one_scan_with_no_eager_jobs(store, spark):
     assert rows == [(1, False), (2, True), (3, True), (4, True)]
 
 
+def test_get_without_seq_reads_no_file_metadata(store, spark):
+    """get() without stamps is the plain footer-schema scan: its plan
+    reads no file metadata, so no row gets a file path or row index.
+    The stamped reads keep their rows and stamps, over plain batches
+    and a compact_appends() batch alike."""
+    import contextlib
+    import io
+
+    def formatted(df):
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            df.explain("formatted")
+        return out.getvalue()
+
+    store.create("t", _df(spark, [(1, "base")]))
+    s1 = store.append("t", _df(spark, [(2, "a1")]))
+    s2 = store.append("t", _df(spark, [(3, "a2")]))
+    assert store.compact_appends("t") == 2
+    s3 = store.append("t", _df(spark, [(4, "a3"), (5, "a3")]))
+
+    plain = formatted(store.get("t"))
+    assert "_tmp_metadata_row_index" not in plain, plain
+    assert "file_path" not in plain, plain
+    assert "file_path" in formatted(store.get("t", with_seq=True))
+
+    rows = lambda df: sorted(tuple(r) for r in df.collect())
+    assert store.get("t").columns == ["id", "val"]
+    assert rows(store.get("t")) == [(1, "base"), (2, "a1"), (3, "a2"), (4, "a3"), (5, "a3")]
+    assert rows(store.get("t", with_seq=True)) == [
+        (1, "base", ""),
+        (2, "a1", s1),
+        (3, "a2", s2),
+        (4, "a3", s3),
+        (5, "a3", s3),
+    ]
+    assert rows(store.diff("t", s1, s3)) == [(3, "a2"), (4, "a3"), (5, "a3")]
+    assert rows(store.get_as_of("t", s2)) == [(1, "base"), (2, "a1"), (3, "a2")]
+
+
 def test_get_rejects_batch_whose_columns_differ(store, spark):
     """An append batch whose column names or types differ from the
     base's fails the read with a TableStoreError naming the batch.

@@ -65,6 +65,41 @@ def test_entry_smoke(spark):
     assert df.columns
 
 
+def test_embedding_margin_stats_counts_null_and_empty_vectors(spark, duck, tmp_path):
+    """A null or an empty embedding is still a vector of its label: the
+    oracle counts it with count(*), so the plan must count it too, in
+    n_vecs and in n_all. Planted in the first two rows of the sf0.001
+    embeddings, whose labels keep other vectors, and in every vector of
+    one more label, which the oracle keeps with null means."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from distributed_file_system_with_stream_processing_spark.plans.llm_ops6 import (
+        EMBEDDING_MARGIN_SQL,
+        embedding_margin_stats,
+    )
+    from distributed_file_system_with_stream_processing_spark.sources.tables import TABLES
+
+    for t in TABLES:
+        if t != "embeddings":
+            (tmp_path / f"{t}.parquet").symlink_to(f"{SF_SMOKE}/{t}.parquet")
+    emb = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    vecs = emb.column("embedding").to_pylist()
+    vecs[0], vecs[1] = None, []
+    labels = emb.column("label").to_pylist()
+    gone = next(lb for lb in labels if lb not in labels[:2])
+    for i, lb in enumerate(labels):
+        if lb == gone:
+            vecs[i] = [] if i % 2 else None
+    col = emb.schema.get_field_index("embedding")
+    emb = emb.set_column(col, "embedding", pa.array(vecs, emb.schema.field(col).type))
+    pq.write_table(emb, tmp_path / "embeddings.parquet")
+
+    df = embedding_margin_stats(spark, str(tmp_path))
+    ok, msg = compare(df, duck, EMBEDDING_MARGIN_SQL, str(tmp_path))
+    assert ok, msg
+
+
 def test_approx_distinct_accuracy(spark):
     """HLL estimate must stay within 5% of exact distinct counts."""
     from distributed_file_system_with_stream_processing_spark.plans.registry import QUERIES
